@@ -45,17 +45,18 @@ def detect(texts: pd.Series, words: pd.Series | None = None,
            stream=None, chars=None) -> pd.DataFrame:
     """-> DataFrame(lang_detected, lang_hits, n_words) — vectorized kernel.
 
-    ``words`` (case-preserving split) lets the fused pipeline share one
-    split across kernels: lowercasing per word inside the counting loop is
-    provably identical to lower-then-split (whitespace is case-invariant).
-    ``stream`` (wordstream.WordStream over those words) additionally shares
-    the flatten+factorize pass with the quality-rules kernel.
+    ``stream`` (wordstream.WordStream, a case-preserving split: lowercasing
+    per unique word is provably identical to lower-then-split, whitespace
+    being case-invariant) and ``chars`` (wordstream.CharStats) let the
+    fused pipeline share ONE batch buffer with the quality-rules kernel;
+    whatever is not passed derives from one wordstream.TextBatch.
+    ``words`` (a per-doc split) is accepted for callers of the older
+    signature and not needed.
     """
     from . import wordstream
 
     t = texts.fillna("")
-    if stream is None:
-        stream = wordstream.build(t.str.split() if words is None else words)
+    stream, chars = wordstream.views(t, stream, chars)
     n_words = pd.Series(stream.lens, index=t.index)
 
     # Factorize-then-count (shared stream): lowercase + profile-match only
@@ -73,12 +74,9 @@ def detect(texts: pd.Series, words: pd.Series | None = None,
             hits[:, li] = stream.count_where_unique(umask)
     hits_df = pd.DataFrame(hits, columns=LANGS, index=t.index)
 
-    # \s and CJK counts in one pass over the concatenated UTF-32 buffer
-    # (exact re semantics per unique codepoint) — the former per-document
-    # str.count(r"\S") scan was the kernel's single largest cost. `chars`
-    # shares that pass with the quality-rules kernel in the fused pipeline.
-    if chars is None:
-        chars = wordstream.char_stats(t)
+    # \s and CJK counts are segment sums over the batch buffer (exact re
+    # semantics per codepoint) — the former per-document str.count(r"\S")
+    # scan was the kernel's single largest cost.
     cjk = pd.Series(chars.cjk, index=t.index)
     nonspace = pd.Series(chars.nonspace, index=t.index)
     is_cjk = cjk * 2 > nonspace

@@ -63,7 +63,8 @@ for _ch, _i in _CODE.items():
 def _perplexity_one(t: str) -> float:
     if not isinstance(t, str) or len(t) < 2:
         return float("inf")
-    codes = np.frombuffer(t.lower().encode("utf-32-le"), dtype=np.uint32)
+    codes = np.frombuffer(t.lower().encode("utf-32-le", "surrogatepass"),
+                          dtype=np.uint32)
     idx = _LUT[codes]
     s = int(_LOGP_E6[idx[:-1], idx[1:]].sum())
     n = len(idx) - 1
@@ -85,13 +86,11 @@ def perplexity_series(texts: pd.Series) -> pd.Series:
     if n_rows == 0:
         return pd.Series(np.empty(0, np.float64), index=texts.index)
     vals = texts.to_numpy(dtype=object)
-    try:
-        lowered = [t.lower() if isinstance(t, str) else "" for t in vals]
-        # narrowest code-unit buffer (uint8/uint16/uint32): LUT gather is
-        # dtype-agnostic, bus traffic drops 4x/2x on ascii/BMP webtext
-        buf, _ = _narrowest_buffer("".join(lowered))
-    except UnicodeEncodeError:  # lone surrogates: rare, per-doc path
-        return texts.map(_perplexity_one).astype(np.float64)
+    lowered = [t.lower() if isinstance(t, str) else "" for t in vals]
+    # narrowest code-unit buffer (uint8/uint16/uint32): LUT gather is
+    # dtype-agnostic, bus traffic drops 4x/2x on ascii/BMP webtext; a lone
+    # surrogate stays one unit (an OOV codepoint, as in the per-doc path)
+    buf, _ = _narrowest_buffer("".join(lowered), "surrogatepass")
     lens = np.fromiter(map(len, lowered), np.int64, n_rows)
     offs = np.zeros(n_rows + 1, np.int64)
     np.cumsum(lens, out=offs[1:])

@@ -54,52 +54,35 @@ STOPWORDS = (
 
 def word_stats(texts: pd.Series, words: pd.Series | None = None,
                stream=None, chars=None) -> pd.DataFrame:
-    """Vectorized per-doc stats. ``words`` lets the fused pipeline share a
-    single split across kernels; ``stream`` (a wordstream.WordStream over
-    those words) additionally shares the flatten+factorize pass with the
-    langid kernel, and ``chars`` (wordstream.CharStats) shares the one
-    character-class buffer pass."""
-    t = texts.fillna("")
-    if stream is None:
-        from . import wordstream
-        stream = wordstream.build(t.str.split() if words is None else words)
+    """Vectorized per-doc stats. ``stream`` (wordstream.WordStream) and
+    ``chars`` (wordstream.CharStats) let the fused pipeline share ONE batch
+    buffer across kernels; whatever is not passed derives from one
+    wordstream.TextBatch (the one behind ``chars`` when given). ``words``
+    (a per-doc split) is accepted for callers of the older signature and
+    not needed: the split is derived from the buffer."""
+    from . import wordstream
+    stream, chars = wordstream.views(texts, stream, chars)
+    lines = (chars.batch if chars.batch is not None
+             else wordstream.TextBatch(texts)).lines
     # word-level stats over the shared factorized token stream: per-token
     # work is a C-level gather of the unique-word table, per-doc reductions
-    # are boundary cumsum/bincount — no per-document Python loop. Identical
-    # integers to the former per_doc() fold (golden + oracle gated).
+    # are boundary cumsum/bincount — no per-document Python loop. Line stats
+    # come from the same buffer (newline counts + one factorize of lines).
     tok_lens = stream.uniq_lens[stream.codes] if stream.pos.size \
         else np.zeros(0, np.int64)
     sw_mask = (stream.uniq_series.isin(STOPWORDS).to_numpy()
                if len(stream.uniq) else np.zeros(0, bool))
-    arr = np.column_stack([
-        stream.lens,
-        stream.seg_sum(tok_lens),
-        stream.distinct_per_doc(),
-        stream.count_where_unique(sw_mask),
-        stream.seg_max(tok_lens),
-    ]) if stream.n_docs else np.zeros((0, 5), np.int64)
-    lines = t.str.split("\n")
-    n_lines = lines.str.len().fillna(0).astype(np.int64)
-    # sum of (count-1) over duplicated lines == len - distinct
-    n_dup_lines = lines.map(
-        lambda ls: (len(ls) - len(set(ls))) if ls else 0).astype(np.int64)
-    max_line_len = lines.map(lambda ls: max((len(x) for x in ls), default=0)).astype(np.int64)
-    if chars is None:
-        from . import wordstream
-        chars = wordstream.char_stats(t)
-    digit_chars = pd.Series(chars.digits, index=t.index)
-
     return pd.DataFrame({
         "n_chars": chars.n_chars,
-        "n_words": arr[:, 0],
-        "sum_word_len": arr[:, 1],
-        "n_distinct_words": arr[:, 2],
-        "stopword_hits": arr[:, 3],
-        "max_word_len": arr[:, 4],
-        "n_lines": n_lines.to_numpy(),
-        "n_dup_lines": n_dup_lines.to_numpy(),
-        "max_line_len": max_line_len.to_numpy(),
-        "digit_chars": digit_chars.to_numpy(),
+        "n_words": stream.lens,
+        "sum_word_len": stream.seg_sum(tok_lens),
+        "n_distinct_words": stream.distinct_per_doc(),
+        "stopword_hits": stream.count_where_unique(sw_mask),
+        "max_word_len": stream.seg_max(tok_lens),
+        "n_lines": lines.n_lines,
+        "n_dup_lines": lines.n_dup_lines,
+        "max_line_len": lines.max_line_len,
+        "digit_chars": chars.digits,
     }, index=texts.index)
 
 
@@ -120,12 +103,22 @@ def rule_flags(stats: pd.DataFrame) -> pd.DataFrame:
     }, index=stats.index)
 
 
+_RULE_BITS = 1 << np.arange(len(RULE_NAMES), dtype=np.int64)
+# bitmask -> the names of the rules whose bits are set, in rule order
+_HIT_LISTS = np.empty(1 << len(RULE_NAMES), dtype=object)
+for _mask in range(len(_HIT_LISTS)):
+    _HIT_LISTS[_mask] = [n for n, b in zip(RULE_NAMES, _RULE_BITS) if _mask & b]
+
+
 def rules_hit_and_keep(texts: pd.Series,
                        words: pd.Series | None = None,
                        stream=None, chars=None) -> pd.DataFrame:
     """text -> (keep: bool, rules_hit: list[str]) — the oracle's label kernel."""
     flags = rule_flags(word_stats(texts, words, stream, chars))
     m = flags[RULE_NAMES].to_numpy()  # one bool matrix, no row-wise apply
-    names = np.array(RULE_NAMES, dtype=object)
-    hits = pd.Series([list(names[row]) for row in m], index=texts.index)
-    return pd.DataFrame({"keep": ~m.any(axis=1), "rules_hit": hits}, index=texts.index)
+    # each row's rule bitmask indexes the table of hit lists; every row
+    # gets its own copy, so no two rows share a mutable list
+    bits = m.astype(np.int64) @ _RULE_BITS
+    hits = pd.Series(list(map(list.copy, _HIT_LISTS[bits])), index=texts.index,
+                     dtype=object)
+    return pd.DataFrame({"keep": bits == 0, "rules_hit": hits}, index=texts.index)

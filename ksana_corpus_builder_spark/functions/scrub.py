@@ -12,7 +12,10 @@ from __future__ import annotations
 
 import re
 
+import numpy as np
 import pandas as pd
+
+from . import wordstream
 
 # (name, compiled pattern, replacement) — ORDER MATTERS.
 SCRUB_RULES: list[tuple[str, re.Pattern, str]] = [
@@ -29,71 +32,71 @@ SCRUB_RULES: list[tuple[str, re.Pattern, str]] = [
 
 SCRUB_RULE_NAMES = [name for name, _, _ in SCRUB_RULES]
 
-# PER-RULE cheap NECESSARY-condition gates, evaluated on the ORIGINAL
-# text: every email match contains '@'; ipv4/cc/phone matches contain a
-# digit; ssn contains a digit AND '-'; toxicity contains "word"
-# (case-insensitive). A doc failing a rule's gate provably cannot match
-# that rule, so its full-pattern scan is skipped. Gating on the original
-# text is sound across the ordered rewrite because no replacement token
-# (<EMAIL>/<IP>/<SSN>/<CC>/<PHONE>/<TOX>) contains a digit, '@', '-' or
-# "word" — a replacement can never introduce a later rule's gate
-# character. Literal/char-class probes are memchr-fast, unlike an
-# alternation of the full patterns (measured: gates cut the kernel ~2x on
-# the synthetic pages corpus, where 75% of docs have no digit at all).
-_GATE_DIGIT = re.compile(r"[0-9]")
-_GATE_TOX = re.compile(r"(?i)word")
-# tighter per-rule necessary conditions, checked only on digit-bearing
-# docs: every ipv4 match contains digit-dot-digit (octets may be 1 digit,
-# so a 3-digit-run gate would be UNSOUND there); every ssn/phone match
-# contains 3 consecutive digits ("[0-9]{3}-" / area code); every
-# credit-card match contains 4. These simple patterns scan at C speed;
-# the full rule patterns (alternations, boundary assertions) are ~5x the
-# cost per byte and now run only on docs that can possibly match.
-_GATE_D3 = re.compile(r"[0-9]{3}")
-_GATE_D4 = re.compile(r"[0-9]{4}")
-_GATE_IP = re.compile(r"[0-9]\.[0-9]")
+# PER-RULE NECESSARY-condition gates, found over the batch buffer
+# (wordstream.TextBatch) of the ORIGINAL text. Each gate is a fixed-length
+# shape that every match of its rule must contain:
+#   email        "@"
+#   ipv4         digit "." digit          (octets may be 1 digit)
+#   ssn          ddd "-"                  ([0-9]{3}-[0-9]{2}-[0-9]{4})
+#   credit_card  dddd [ -] dddd           (two of its four groups)
+#   phone        [ .-] ddd [ .-] dddd     (the pattern's mandatory tail)
+#   toxicity     w o r d, either case     (every lexicon word ends so)
+# A doc without its rule's shape cannot match, so the full-pattern subn
+# runs only on gated docs. Each shape is searched with numpy only around
+# anchors (TextBatch.docs_with): positions of one of its rare chars, or,
+# for a digit that follows a non-digit in the shape, the starts of digit
+# runs (every occurrence of the shape starts a run there) — never with a
+# per-doc regex. Soundness across the ORDERED rewrite, i.e. gating on the
+# original text although later rules see earlier replacements: every shape
+# char is a digit, one of " .-@", or a letter of "word"; the replacement
+# tokens (<EMAIL> <IP> <SSN> <CC> <PHONE> <TOX>) hold none of the former
+# and never two of the latter in a row. So a shape occurrence in rewritten
+# text touches no token, and as tokens are non-empty, its chars were
+# adjacent in the original text too. Under IGNORECASE only w/W, o/O, r/R,
+# d/D fold onto those letters (checked over all codepoints in
+# tests/test_batch_buffer.py), so the toxicity shape is exact in ASCII.
+_D = wordstream.DIGITS
+# name -> (anchor index in the shape, shape)
+_GATES: dict[str, tuple[int, tuple[str, ...]]] = {
+    "email": (0, ("@",)),
+    "ipv4": (1, (_D, ".", _D)),
+    "ssn": (3, (_D, _D, _D, "-")),
+    "credit_card": (5, (_D, _D, _D, _D, " -", _D, _D, _D, _D)),
+    "phone": (1, (" .-", _D, _D, _D, " .-", _D, _D, _D, _D)),
+    "toxicity": (0, ("wW", "oO", "rR", "dD")),
+}
 
 
-def _gate_rows(vals) -> dict[str, list[int]]:
-    has_at, has_ip, has_ssn, has_d4, has_d3, has_word = [], [], [], [], [], []
-    dig, tox = _GATE_DIGIT.search, _GATE_TOX.search
-    d3, d4, ip = _GATE_D3.search, _GATE_D4.search, _GATE_IP.search
-    for i, v in enumerate(vals):
-        if "@" in v:
-            has_at.append(i)
-        if dig(v) is not None:
-            if ip(v) is not None:
-                has_ip.append(i)
-            if d3(v) is not None:
-                has_d3.append(i)
-                if "-" in v:
-                    has_ssn.append(i)
-                if d4(v) is not None:
-                    has_d4.append(i)
-        if tox(v) is not None:
-            has_word.append(i)
-    return {"email": has_at, "ipv4": has_ip, "ssn": has_ssn,
-            "credit_card": has_d4, "phone": has_d3,
-            "toxicity": has_word}
+def gated_docs(batch: wordstream.TextBatch) -> dict[str, np.ndarray]:
+    """rule name -> sorted indexes of the docs that pass its gate."""
+    anchors: dict[str, np.ndarray] = {}
+    out = {}
+    for name, (at, shape) in _GATES.items():
+        a = shape[at]
+        if a not in anchors:
+            anchors[a] = batch.digit_run_at if a == _D else batch.ascii_at(a)
+        out[name] = batch.docs_with(anchors[a], at, shape)
+    return out
 
 
-def scrub_series(texts: pd.Series) -> pd.DataFrame:
+def scrub_series(texts: pd.Series,
+                 batch: wordstream.TextBatch | None = None) -> pd.DataFrame:
     """-> DataFrame(text=scrubbed, plus one int64 hit-count column per rule).
 
     One regex scan per rule per GATED doc: `Pattern.subn` returns
-    (new_text, n_hits), so count+replace share the scan (the former
-    str.count + str.replace pair walked every string twice per rule — this
-    kernel is the pipeline's hottest, see BENCH notes)."""
-    import numpy as np
-    vals = texts.fillna("").to_numpy(dtype=object)
-    n = len(vals)
-    rows = _gate_rows(vals)
-    out = {f"scrub_{name}": np.zeros(n, dtype=np.int64)
+    (new_text, n_hits), so count+replace share the scan. ``batch`` (the
+    wordstream.TextBatch over ``texts``) shares the fused pipeline's
+    buffer with the gates."""
+    if batch is None:
+        batch = wordstream.TextBatch(texts)
+    vals = batch.vals.copy()
+    rows = gated_docs(batch)
+    out = {f"scrub_{name}": np.zeros(len(vals), dtype=np.int64)
            for name, _, _ in SCRUB_RULES}
     for name, pat, repl in SCRUB_RULES:
         subn = pat.subn
         counts = out[f"scrub_{name}"]
-        for i in rows[name]:
+        for i in rows[name].tolist():  # row-loop-ok: gated docs only
             vals[i], counts[i] = subn(repl, vals[i])
     return pd.DataFrame({"text": pd.Series(vals, index=texts.index), **out},
                         index=texts.index)

@@ -40,13 +40,7 @@ def normalize_raw(texts: pd.Series) -> pd.Series:
 #   6. drop leading/trailing blank lines (reference makeLine + trailing-blank
 #      trim), collapse 3+ newlines to 2.
 
-_SCRIPT_STYLE = re.compile(r"<(script|style)\b.*?</\1\s*>", re.DOTALL | re.IGNORECASE)
 _COMMENT = re.compile(r"<!--.*?-->", re.DOTALL)
-_BLOCK_CLOSE = re.compile(
-    r"</(p|div|li|ul|ol|h[1-6]|tr|table|blockquote|section|article|header|footer|pre)\s*>"
-    r"|<(br|hr)\s*/?>",
-    re.IGNORECASE,
-)
 _ANY_TAG = re.compile(r"<.+?>", re.DOTALL)  # reference handlers.js:3
 _SPACES = re.compile(r"[ \t\f\v]+")
 _LINE_EDGE = re.compile(r" *\n *")
@@ -55,20 +49,25 @@ _MULTI_NL = re.compile(r"\n{3,}")
 _ENTITIES = [("&lt;", "<"), ("&gt;", ">"), ("&quot;", '"'), ("&#39;", "'"), ("&amp;", "&")]
 
 
-def _narrowest_buffer(joined: str) -> tuple[np.ndarray, str]:
+def _narrowest_buffer(joined: str,
+                      errors: str = "strict") -> tuple[np.ndarray, str]:
     """Narrowest numpy code-unit view of a str: ascii -> uint8, BMP-only ->
     uint16 (utf-16-le; astral chars detected by the surrogate-pair byte-length
     mismatch), else uint32 (utf-32-le). In every returned tier the code units
     EQUAL the codepoints, so masks and LUT gathers are dtype-agnostic while
     narrower buffers cut memory-bus traffic 4x/2x — the single-box 32-core
-    bottleneck. Raises UnicodeEncodeError on lone surrogates (callers fall
-    back to their per-doc/regex path)."""
+    bottleneck. With the default errors="strict" it raises
+    UnicodeEncodeError on lone surrogates (callers fall back to their
+    per-doc/regex path); errors="surrogatepass" encodes each lone surrogate
+    as one code unit equal to its codepoint, for callers that never decode
+    the buffer back."""
     if joined.isascii():
         return np.frombuffer(joined.encode("ascii"), np.uint8), "ascii"
-    b = joined.encode("utf-16-le")
+    b = joined.encode("utf-16-le", errors)
     if len(b) == 2 * len(joined):  # no astral chars: units == codepoints
         return np.frombuffer(b, np.uint16), "utf-16-le"
-    return np.frombuffer(joined.encode("utf-32-le"), np.uint32), "utf-32-le"
+    return (np.frombuffer(joined.encode("utf-32-le", errors), np.uint32),
+            "utf-32-le")
 
 
 def _collapse_ws_regex(s: pd.Series) -> pd.Series:
@@ -156,25 +155,6 @@ def _collapse_ws(texts: pd.Series) -> pd.Series:
     return res.str.strip()
 
 
-def extract_text(htmls: pd.Series) -> pd.Series:
-    """pd.Series[bytes|str html] -> pd.Series[str text] — byte-identity kernel.
-
-    Pass structure is deliberate: fusing the literal entity replaces or the
-    whitespace passes into single regexes with callable replacements was
-    MEASURED SLOWER (per-match Python callables cost more than extra
-    C-level memchr scans) — keep the sequential constant-replacement form.
-    """
-    s = htmls.map(lambda b: b.decode("utf-8", "replace") if isinstance(b, (bytes, bytearray)) else (b or ""))
-    s = normalize_raw(s)
-    s = s.str.replace(_SCRIPT_STYLE, "", regex=True)
-    s = s.str.replace(_COMMENT, "", regex=True)
-    s = s.str.replace(_BLOCK_CLOSE, "\n", regex=True)
-    s = s.str.replace(_ANY_TAG, "", regex=True)
-    for ent, ch in _ENTITIES:
-        s = s.str.replace(ent, ch, regex=False)
-    return _collapse_ws(s)
-
-
 _TAG_STRIP = _ANY_TAG
 
 
@@ -190,7 +170,7 @@ def strip_tags(texts: pd.Series) -> pd.Series:
 #   "break"  emit a newline at the closing tag (block-level default),
 #   "drop"   remove the element INCLUDING its content (script/style-like),
 #   "strip"  remove the tags, keep the content (inline default).
-# DEFAULT_TAG_RULES reproduces extract_text exactly (asserted in tests).
+# extract_text IS extract_text_with_rules under DEFAULT_TAG_RULES.
 
 DEFAULT_TAG_RULES: dict[str, str] = dict(
     {t: "break" for t in ("p", "div", "li", "ul", "ol", "tr", "table",
@@ -219,12 +199,23 @@ def compile_rules(rules: dict[str, str]):
     return drop_re, brk_re
 
 
+_DEFAULT_RULES_RE = compile_rules(DEFAULT_TAG_RULES)
+
+
 def extract_text_with_rules(htmls: pd.Series,
                             rules: dict[str, str] | None = None) -> pd.Series:
-    """extract_text with a caller-supplied tag-rule registry. With
-    rules=None (or DEFAULT_TAG_RULES) the output is byte-identical to
-    extract_text (regression-tested)."""
-    drop_re, brk_re = compile_rules(rules or DEFAULT_TAG_RULES)
+    """pd.Series[bytes|str html] -> pd.Series[str text] under a tag-rule
+    registry; rules=None (or DEFAULT_TAG_RULES, compiled once at import)
+    is :func:`extract_text`.
+
+    Pass structure is deliberate: fusing the literal entity replaces or the
+    whitespace passes into single regexes with callable replacements was
+    MEASURED SLOWER (per-match Python callables cost more than extra
+    C-level memchr scans) — keep the sequential constant-replacement form.
+    """
+    drop_re, brk_re = (_DEFAULT_RULES_RE
+                       if not rules or rules is DEFAULT_TAG_RULES
+                       else compile_rules(rules))
     s = htmls.map(lambda b: b.decode("utf-8", "replace")
                   if isinstance(b, (bytes, bytearray)) else (b or ""))
     s = normalize_raw(s)
@@ -237,3 +228,9 @@ def extract_text_with_rules(htmls: pd.Series,
     for ent, ch in _ENTITIES:
         s = s.str.replace(ent, ch, regex=False)
     return _collapse_ws(s)
+
+
+def extract_text(htmls: pd.Series) -> pd.Series:
+    """The byte-identity extraction kernel: contract steps 1-6 above under
+    DEFAULT_TAG_RULES."""
+    return extract_text_with_rules(htmls)

@@ -1,22 +1,34 @@
 """Shared vectorized views over a batch of documents.
 
-Two precomputations that several kernels (quality rules, langid) need:
+Everything the fused kernel chain needs per document derives from ONE
+precompute per Arrow batch, :class:`TextBatch`: the batch's text encoded
+once into a flat code-unit buffer with doc offsets. From it, lazily and at
+most once each:
 
-- :class:`WordStream` — the factorized token stream: every word of every
-  document flattened once, `pd.factorize`d once (one hash pass), with the
-  doc index of every token. Per-token work then collapses to C-level
-  gathers over the ~10x-smaller unique-word table, and per-document
-  reductions become cumsum/bincount boundary arithmetic. Built ONCE per
-  Arrow batch and shared across kernels (the fused pipeline passes it to
-  rules + langid, replacing two per-document Python loops).
-
-- :func:`char_stats` — per-document counts of regex character classes
-  (\\s, CJK, [0-9]) in ONE pass over the concatenated UTF-32 buffer.
-  \\s membership comes from a LUT built once per process by Python's `re`
+- :class:`CharStats` — per-document counts of regex character classes
+  (\\s, CJK, [0-9]) as segment sums of masks over the buffer. \\s
+  membership comes from a LUT built once per process by Python's `re`
   itself (exact regex semantics, so parity with `str.count(r"\\s")` and
   the SQL twins holds by construction); CJK/digits are range predicates.
-  Replaces per-document regex scans (the former `\\S` count was the
-  single most expensive operation in the langid kernel).
+
+- :class:`WordStream` — the factorized token stream: every word of every
+  document from ONE `" ".join(batch).split()`, `pd.factorize`d once (one
+  hash pass). Tokens per doc come from the \\s LUT over the buffer (token
+  starts = non-space after space or doc start); `str.split()` and `re`'s
+  \\s agree on every codepoint (pinned in tests), so the two counts add up.
+  Per-token work then collapses to C-level gathers over the ~10x-smaller
+  unique-word table, and per-document reductions become cumsum/bincount
+  boundary arithmetic.
+
+- :class:`LineStats` — n_lines / n_dup_lines / max_line_len from the
+  newline count plus ONE `"\\n".join(...).split("\\n")` + factorize over
+  the docs that have a newline at all.
+
+- the digit-run / '.' / '-' / '@' / 'w'-position arrays the scrub
+  kernel's gates look around (functions/scrub.py).
+
+The buffer is encoded with `surrogatepass`, so lone surrogates stay one
+code unit each (code units == codepoints in every tier) instead of raising.
 """
 
 from __future__ import annotations
@@ -24,9 +36,12 @@ from __future__ import annotations
 import itertools
 import re
 from dataclasses import dataclass
+from functools import cached_property
 
 import numpy as np
 import pandas as pd
+
+from .text import _narrowest_buffer
 
 
 @dataclass
@@ -39,6 +54,21 @@ class WordStream:
     starts: np.ndarray      # token-stream start offset per doc
     _uniq_series: pd.Series | None = None
     _uniq_lens: np.ndarray | None = None
+
+    @classmethod
+    def from_tokens(cls, tokens: list[str], lens: np.ndarray,
+                    surrogates: bool) -> WordStream:
+        """Flat token sequence + tokens per doc -> WordStream.
+        ``surrogates``: whether any token may hold a lone surrogate."""
+        n = len(lens)
+        codes, uniq = _factorize(tokens, surrogates)
+        starts = np.zeros(n, np.int64)
+        if n:
+            np.cumsum(lens[:-1], out=starts[1:])
+        return cls(n_docs=n, lens=lens,
+                   pos=np.repeat(np.arange(n, dtype=np.int64), lens),
+                   codes=np.asarray(codes), uniq=np.asarray(uniq),
+                   starts=starts)
 
     @property
     def uniq_series(self) -> pd.Series:
@@ -81,36 +111,56 @@ class WordStream:
                            minlength=self.n_docs).astype(np.int64)
 
     def distinct_per_doc(self) -> np.ndarray:
-        """Per-doc count of distinct words: sort tokens by (doc, code),
-        count first occurrences."""
-        if not self.pos.size:
-            return np.zeros(self.n_docs, np.int64)
-        order = np.lexsort((self.codes, self.pos))
-        p, c = self.pos[order], self.codes[order]
-        first = np.ones(len(p), dtype=bool)
-        first[1:] = (p[1:] != p[:-1]) | (c[1:] != c[:-1])
-        return np.bincount(p[first], minlength=self.n_docs).astype(np.int64)
+        """Per-doc count of distinct words."""
+        return _distinct_per_doc(self.pos, self.codes, len(self.uniq),
+                                 self.n_docs)
+
+
+def _factorize(values: list[str],
+               surrogates: bool) -> tuple[np.ndarray, np.ndarray]:
+    """pd.factorize of a list of str -> (codes, uniques). pandas' string
+    hash table can conflate strings that hold lone surrogates, so when
+    ``surrogates`` is set their surrogatepass UTF-8 bytes are factorized
+    instead (a rare per-value path)."""
+    flat = np.array(values, dtype=object)
+    if not flat.size:
+        return np.zeros(0, np.int64), np.zeros(0, object)
+    if not surrogates:
+        codes, uniq = pd.factorize(flat)
+        return codes, np.asarray(uniq)
+    codes, _ = pd.factorize(np.array(
+        [v.encode("utf-8", "surrogatepass") for v in values],  # row-loop-ok: lone surrogates only
+        dtype=object))
+    return codes, flat[np.unique(codes, return_index=True)[1]]
+
+
+def _has_surrogates(s: str) -> bool:
+    try:
+        s.encode("utf-8")
+    except UnicodeEncodeError:
+        return True
+    return False
+
+
+def _distinct_per_doc(pos: np.ndarray, codes: np.ndarray, n_uniq: int,
+                      n_docs: int) -> np.ndarray:
+    """Per-doc count of distinct codes: one hash-unique over the
+    `pos * n_uniq + code` keys (no sort), then a bincount of their docs."""
+    if not pos.size:
+        return np.zeros(n_docs, np.int64)
+    keys = pd.unique(pos * n_uniq + codes)
+    return np.bincount(keys // n_uniq, minlength=n_docs).astype(np.int64)
 
 
 def build(words: pd.Series) -> WordStream:
     """words: Series[list[str]] (one entry per doc) -> WordStream."""
-    if words.isna().any():
-        words = words.map(lambda w: w if isinstance(w, list) else [])
     lens = words.str.len().fillna(0).astype(np.int64).to_numpy()
-    n = len(words)
-    flat = np.array(list(itertools.chain.from_iterable(words)), dtype=object)
-    pos = np.repeat(np.arange(n, dtype=np.int64), lens)
-    if flat.size:
-        codes, uniq = pd.factorize(flat)
-    else:
-        codes, uniq = np.zeros(0, np.int64), np.zeros(0, object)
-    starts = np.concatenate(([0], np.cumsum(lens)[:-1])) if n else \
-        np.zeros(0, np.int64)
-    return WordStream(n_docs=n, lens=lens, pos=pos,
-                      codes=np.asarray(codes), uniq=np.asarray(uniq),
-                      starts=starts)
+    tokens = list(itertools.chain.from_iterable(words.dropna()))
+    return WordStream.from_tokens(tokens, lens,
+                                  _has_surrogates("".join(tokens)))
 
 
+DIGITS = "0123456789"
 _WS_RE = re.compile(r"\s")
 _WS_LUT: np.ndarray | None = None
 
@@ -134,49 +184,161 @@ def _ws_lut() -> np.ndarray:
 
 @dataclass
 class CharStats:
-    """Per-document character-class counts, all from ONE buffer pass."""
+    """Per-document character-class counts, all from ONE buffer pass.
+    ``batch`` is the TextBatch they came from, so a kernel handed only
+    ``chars`` still shares every other view of the same buffer."""
     n_chars: np.ndarray
     nonspace: np.ndarray
     cjk: np.ndarray
     digits: np.ndarray
+    batch: TextBatch | None = None
+
+
+@dataclass
+class LineStats:
+    """Per-document line stats over `str.split("\\n")` lines."""
+    n_lines: np.ndarray
+    n_dup_lines: np.ndarray   # sum of (count-1) over repeated lines
+    max_line_len: np.ndarray
+
+
+class TextBatch:
+    """One batch of documents as ONE code-unit buffer with doc offsets.
+
+    `buf[offs[i]:offs[i+1]]` are document i's codepoints, in the narrowest
+    dtype that holds them (uint8/uint16/uint32). Every derived view is a
+    cached property, computed on first use and then shared by all kernels.
+    """
+
+    def __init__(self, texts: pd.Series):
+        self.vals = texts.fillna("").to_numpy(dtype=object)
+        self.n_docs = n = len(self.vals)
+        self.lens = np.fromiter(map(len, self.vals), np.int64, n)
+        self.offs = np.zeros(n + 1, np.int64)
+        np.cumsum(self.lens, out=self.offs[1:])
+        joined = "".join(self.vals)
+        try:
+            self.buf, _ = _narrowest_buffer(joined)
+            self.surrogates = False
+        except UnicodeEncodeError:  # lone surrogates: one unit each
+            self.buf, _ = _narrowest_buffer(joined, "surrogatepass")
+            self.surrogates = True
+        self._nonempty = self.lens > 0
+
+    def seg_sum(self, mask: np.ndarray) -> np.ndarray:
+        """Per-doc sums of a per-code-unit mask: reduceat over NON-EMPTY doc
+        starts with an int64 accumulator — empty docs occupy no buffer, so
+        each slice is exactly one doc's code units."""
+        out = np.zeros(self.n_docs, np.int64)
+        if self.buf.size:
+            out[self._nonempty] = np.add.reduceat(
+                mask, self.offs[:-1][self._nonempty], dtype=np.int64)
+        return out
+
+    @cached_property
+    def is_ws(self) -> np.ndarray:
+        b = self.buf
+        return _ws_lut()[np.minimum(b, 0xFFFF) if b.dtype == np.uint32 else b]
+
+    @cached_property
+    def is_digit(self) -> np.ndarray:
+        return _is_any(self.buf, DIGITS)  # ASCII [0-9], regex-identical
+
+    @cached_property
+    def digit_run_at(self) -> np.ndarray:
+        """Buffer positions where a maximal run of digits starts."""
+        at = np.flatnonzero(self.is_digit)
+        first = np.ones(at.size, bool)
+        first[1:] = at[1:] != at[:-1] + 1
+        return at[first]
+
+    @cached_property
+    def chars(self) -> CharStats:
+        b = self.buf
+        cjk = (b >= 0x4E00) & (b <= 0x9FFF) if b.dtype != np.uint8 else None
+        return CharStats(
+            n_chars=self.lens,
+            nonspace=self.lens - self.seg_sum(self.is_ws),
+            cjk=(self.seg_sum(cjk) if cjk is not None
+                 else np.zeros(self.n_docs, np.int64)),
+            digits=self.seg_sum(self.is_digit),
+            batch=self)
+
+    @cached_property
+    def stream(self) -> WordStream:
+        # a token starts at a non-space unit after a space or a doc start
+        ws = self.is_ws
+        start = ~ws
+        start[1:] &= ws[:-1]
+        first = self.offs[:-1][self._nonempty]
+        start[first] = ~ws[first]
+        lens = self.seg_sum(start)
+        tokens = " ".join(self.vals).split()
+        assert len(tokens) == int(lens.sum())
+        return WordStream.from_tokens(tokens, lens, self.surrogates)
+
+    @cached_property
+    def lines(self) -> LineStats:
+        n_nl = self.seg_sum(self.buf == 10)
+        n_lines = n_nl + 1
+        n_dup = np.zeros(self.n_docs, np.int64)
+        max_len = self.lens.copy()  # a doc without '\n' is one line
+        multi = np.flatnonzero(n_nl)
+        if multi.size:
+            lines = "\n".join(self.vals[multi]).split("\n")
+            codes, uniq = _factorize(lines, self.surrogates)
+            line_lens = pd.Series(uniq, dtype=object).str.len() \
+                .to_numpy(np.int64)[codes]
+            per_doc = n_lines[multi]
+            starts = np.zeros(multi.size, np.int64)
+            np.cumsum(per_doc[:-1], out=starts[1:])
+            pos = np.repeat(np.arange(multi.size, dtype=np.int64), per_doc)
+            n_dup[multi] = per_doc - _distinct_per_doc(
+                pos, codes, len(uniq), multi.size)
+            max_len[multi] = np.maximum.reduceat(line_lens, starts)
+        return LineStats(n_lines, n_dup, max_len)
+
+    def ascii_at(self, chars: str) -> np.ndarray:
+        """Buffer positions holding any of the given ASCII chars."""
+        return np.flatnonzero(_is_any(self.buf, chars))
+
+    def docs_with(self, anchors: np.ndarray, at: int,
+                  shape: tuple[str, ...]) -> np.ndarray:
+        """Sorted doc indexes containing the fixed-length `shape` (one string
+        of allowed ASCII chars per position), searched only around `anchors`
+        — buffer positions already known to match `shape[at]`. The window
+        must lie inside one doc."""
+        s = anchors - at
+        k = len(shape)
+        s = s[(s >= 0) & (s + k <= self.buf.size)]
+        for j, allowed in enumerate(shape):  # row-loop-ok: per shape position
+            if j != at and s.size:
+                s = s[_is_any(self.buf[s + j], allowed)]
+        d = np.searchsorted(self.offs, s, side="right") - 1  # doc of each
+        return np.unique(d[s + k <= self.offs[d + 1]])
+
+
+def _is_any(units: np.ndarray, chars: str) -> np.ndarray:
+    """Mask of the code units equal to any of the given ASCII chars."""
+    if chars == DIGITS:
+        return (units >= 0x30) & (units <= 0x39)
+    return np.isin(units, np.frombuffer(chars.encode("ascii"), np.uint8))
+
+
+def views(texts: pd.Series, stream: WordStream | None = None,
+          chars: CharStats | None = None) -> tuple[WordStream, CharStats]:
+    """The (stream, chars) pair a kernel needs: what the caller shares, the
+    rest derived from ONE TextBatch (the one behind ``chars`` when given)."""
+    if stream is None or chars is None:
+        batch = chars.batch if chars is not None and chars.batch is not None \
+            else TextBatch(texts)
+        stream = batch.stream if stream is None else stream
+        chars = batch.chars if chars is None else chars
+    return stream, chars
 
 
 def char_stats(texts: pd.Series) -> CharStats:
-    """Per-document \\s / CJK / [0-9] counts with exact `re` semantics.
+    """Per-document \\s / CJK / [0-9] counts with exact `re` semantics,
+    from one TextBatch (which the result carries as ``.batch``)."""
+    return TextBatch(texts).chars
 
-    One UTF-32 encode of the concatenated batch, one np.unique over
-    codepoints, \\s tested once per UNIQUE codepoint, then boundary cumsum
-    diffs — no per-document regex scans (the former per-doc str.count
-    calls were the largest costs in the langid and rules kernels). Built
-    once per Arrow batch and shared by both.
-    """
-    t = texts.fillna("")
-    lens = t.str.len().to_numpy(dtype=np.int64)
-    n = len(t)
-    if n == 0 or int(lens.sum()) == 0:
-        z = np.zeros(n, np.int64)
-        return CharStats(lens, z.copy(), z.copy(), z)
-    buf = np.frombuffer("".join(t.tolist()).encode("utf-32-le"),
-                        dtype=np.uint32)
-    is_ws = _ws_lut()[np.minimum(buf, 0xFFFF)]
-    is_cjk = (buf >= 0x4E00) & (buf <= 0x9FFF)
-    is_dig = (buf >= 0x30) & (buf <= 0x39)  # ASCII [0-9], regex-identical
-    starts = np.concatenate(([0], np.cumsum(lens)[:-1]))
-    ne = lens > 0
-
-    def seg(mask: np.ndarray) -> np.ndarray:
-        # reduceat over NON-EMPTY doc starts with an int64 accumulator:
-        # empty docs occupy no buffer, so each slice is exactly one doc's
-        # chars — and no buffer-sized int64 cumsum array is materialized
-        out = np.zeros(n, np.int64)
-        out[ne] = np.add.reduceat(mask, starts[ne], dtype=np.int64)
-        return out
-
-    ws = seg(is_ws)
-    return CharStats(lens, lens - ws, seg(is_cjk), seg(is_dig))
-
-
-def char_class_counts(texts: pd.Series) -> tuple[np.ndarray, np.ndarray]:
-    """Back-compat shim -> (nonspace, cjk)."""
-    cs = char_stats(texts)
-    return cs.nonspace, cs.cjk

@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 from ..functions import langid as L
 from ..functions import quality as Q
 from ..functions import scrub as S
+from ..functions import wordstream as W
 from ..functions.perplexity import perplexity_series
 from ..functions.text import extract_text
 
@@ -87,37 +88,65 @@ RESULT_SCHEMA = (
     "lang_detected string, lang_score double, perplexity double, "
     + ", ".join(f"scrub_{n} long" for n in S.SCRUB_RULE_NAMES)
 )
+TEXT_RESULT_SCHEMA = (
+    "doc_id long, text string, keep boolean, rules_hit array<string>, "
+    "lang_detected string, perplexity double, "
+    + ", ".join(f"scrub_{n} long" for n in S.SCRUB_RULE_NAMES)
+)
 
 
-def _process_batch(pdf: pd.DataFrame,
-                   hooks: PipelineHooks | None = None) -> pd.DataFrame:
-    """One Arrow batch through every kernel. Pure pandas — shared verbatim
-    with the golden oracle (oracle/golden.py), which is how byte-identity
-    and F1=1.0 are achieved by construction and verified by test."""
-    from ..functions import wordstream as W
-    text = extract_text(pdf["html"])
-    words = text.str.split()  # ONE split shared by rules + langid
-    stream = W.build(words)   # ONE flatten+factorize, shared
-    chars = W.char_stats(text)  # ONE char-class buffer pass, shared
-    labels = Q.rules_hit_and_keep(text, words, stream, chars)
+def _columns(schema: str) -> list[str]:
+    return [f.split()[0] for f in schema.split(",")]
+
+
+def _process_batch(pdf: pd.DataFrame, hooks: PipelineHooks | None = None,
+                   columns: list[str] = _columns(RESULT_SCHEMA)) -> pd.DataFrame:
+    """One Arrow batch through every kernel, keyed by its input columns: a
+    batch with ``html`` is extracted first, otherwise ``text`` is the
+    document. ``columns`` picks the output: kernel outputs by name, any
+    other name passes through from the input. Pure pandas — the same
+    kernels as the golden oracle (oracle/golden.py), which is how
+    byte-identity and F1=1.0 are achieved by construction and verified by
+    test."""
+    text = (extract_text(pdf["html"]) if "html" in pdf.columns
+            else pdf["text"].fillna(""))
+    # ONE code-unit buffer per batch; tokens, char classes, line stats and
+    # the scrub gates all derive from it
+    batch = W.TextBatch(text)
+    stream, chars = batch.stream, batch.chars
+    labels = Q.rules_hit_and_keep(text, None, stream, chars)
     if hooks is not None:
         labels = hooks.apply_rules(text, labels)
-    lang = L.detect(text, words, stream, chars)
-    scrubbed = S.scrub_series(text)
-    out = pd.DataFrame({
-        "url": pdf["url"],
-        "warc_ts": pdf["warc_ts"],
-        "lang": pdf["lang"],
+    lang = L.detect(text, None, stream, chars)
+    scrubbed = S.scrub_series(text, batch)
+    kernel = {
         "text": scrubbed["text"],
         "keep": labels["keep"],
         "rules_hit": labels["rules_hit"],
         "lang_detected": lang["lang_detected"],
         "lang_score": (lang["lang_hits"] / lang["n_words"].clip(lower=1)).astype("float64"),
         "perplexity": perplexity_series(text),
-    })
-    for n in S.SCRUB_RULE_NAMES:
-        out[f"scrub_{n}"] = scrubbed[f"scrub_{n}"]
+        **{f"scrub_{n}": scrubbed[f"scrub_{n}"] for n in S.SCRUB_RULE_NAMES},
+    }
+    out = pd.DataFrame({c: kernel[c] if c in kernel else pdf[c]
+                        for c in columns})
+    if hooks is not None and hooks.on_batch is not None:
+        hooks.on_batch(out)
     return out
+
+
+def _map_batches(df: DataFrame, schema: str,
+                 hooks: PipelineHooks | None) -> DataFrame:
+    """The ONE Python boundary: every non-empty Arrow batch of ``df``
+    through :func:`_process_batch`, emitting ``schema``."""
+    columns = _columns(schema)
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            if len(pdf):
+                yield _process_batch(pdf, hooks, columns)
+
+    return df.mapInPandas(run, schema=schema)
 
 
 def process(pages: DataFrame, buckets: int | None = None,
@@ -133,23 +162,7 @@ def process(pages: DataFrame, buckets: int | None = None,
     if buckets:
         # url-hash bucketing: even distribution regardless of host skew
         df = df.repartition(buckets, F.xxhash64("url"))
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf):
-                out = _process_batch(pdf, hooks)
-                if hooks is not None and hooks.on_batch is not None:
-                    hooks.on_batch(out)
-                yield out
-
-    return df.mapInPandas(run, schema=RESULT_SCHEMA)
-
-
-TEXT_RESULT_SCHEMA = (
-    "doc_id long, text string, keep boolean, rules_hit array<string>, "
-    "lang_detected string, perplexity double, "
-    + ", ".join(f"scrub_{n} long" for n in S.SCRUB_RULE_NAMES)
-)
+    return _map_batches(df, RESULT_SCHEMA, hooks)
 
 
 def process_text_table(docs: DataFrame, id_col: str = "doc_id",
@@ -158,36 +171,10 @@ def process_text_table(docs: DataFrame, id_col: str = "doc_id",
     """Same fused single-pass kernel stage for a table whose text is already
     extracted (the `documents` testdata shape). One Python boundary.
     ``hooks`` behaves exactly as in :func:`process`."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            from ..functions import wordstream as W
-            text = pdf[text_col].fillna("")
-            words = text.str.split()  # ONE split shared by rules + langid
-            stream = W.build(words)   # ONE flatten+factorize, shared
-            chars = W.char_stats(text)  # ONE char-class pass, shared
-            lab = Q.rules_hit_and_keep(text, words, stream, chars)
-            if hooks is not None:
-                lab = hooks.apply_rules(text, lab)
-            lang = L.detect(text, words, stream, chars)
-            sc = S.scrub_series(text)
-            out = pd.DataFrame({
-                "doc_id": pdf[id_col],
-                "text": sc["text"],
-                "keep": lab["keep"],
-                "rules_hit": lab["rules_hit"],
-                "lang_detected": lang["lang_detected"],
-                "perplexity": perplexity_series(text),
-            })
-            for n in S.SCRUB_RULE_NAMES:
-                out[f"scrub_{n}"] = sc[f"scrub_{n}"]
-            if hooks is not None and hooks.on_batch is not None:
-                hooks.on_batch(out)
-            yield out
-
-    return docs.select(id_col, text_col).mapInPandas(run, schema=TEXT_RESULT_SCHEMA)
+    return _map_batches(
+        docs.select(F.col(id_col).alias("doc_id"),
+                    F.col(text_col).alias("text")),
+        TEXT_RESULT_SCHEMA, hooks)
 
 
 def labels(result: DataFrame) -> DataFrame:

@@ -4,6 +4,7 @@ zero per-row Python UDFs in the engine — only pandas/Arrow batch kernels
 
 from __future__ import annotations
 
+import ast
 import pathlib
 import re
 
@@ -46,6 +47,76 @@ def test_no_per_row_loops_in_columnar_kernels():
             if _ROW_LOOP.search(line):
                 offenders.append(f"{rel}:{i}")
     assert not offenders, f"per-row Python loops in columnar kernels: {offenders}"
+
+
+# The text kernels the fused quality pass runs per Arrow batch derive every
+# per-doc quantity from one batch buffer (wordstream.TextBatch). Inside
+# their functions, flag `.map(lambda` and every loop or comprehension that
+# does not iterate a module constant (the rule / language tables); a
+# reviewed per-row loop — e.g. `subn` over the docs a scrub gate admits —
+# carries a `# row-loop-ok:` marker on its line. Module-level code runs
+# once per process and is not checked.
+_KERNEL_FILES = ("functions/wordstream.py", "functions/quality.py",
+                 "functions/scrub.py", "functions/langid.py")
+_MAP_LAMBDA = re.compile(r"\.map\(\s*lambda")
+_ITER_HELPERS = {"enumerate", "range", "zip", "len", "reversed"}
+
+
+def _iterates_constants(it: ast.expr) -> bool:
+    """True when an iterable names only UPPER_CASE constants (and their
+    attributes), literals and enumerate/range/zip/len — a loop over rules or
+    languages, not rows."""
+    for node in ast.walk(it):
+        if isinstance(node, ast.Name) and not (
+                node.id.lstrip("_").isupper() or node.id in _ITER_HELPERS):
+            return False
+    return True
+
+
+def _kernel_row_loops(src: str) -> list[int]:
+    lines = src.splitlines()
+    flagged = []
+    for fn in ast.walk(ast.parse(src)):
+        if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            continue
+        for node in ast.walk(fn):
+            iters = []
+            if isinstance(node, (ast.For, ast.AsyncFor)):
+                iters = [node.iter]
+            elif isinstance(node, ast.comprehension):
+                iters = [node.iter]
+            if any(not _iterates_constants(it) for it in iters):
+                flagged.append(node.iter.lineno)
+        end = fn.end_lineno or fn.lineno
+        flagged += [i for i in range(fn.lineno, end + 1)
+                    if _MAP_LAMBDA.search(lines[i - 1])]
+    return sorted(i for i in set(flagged)
+                  if "# row-loop-ok:" not in lines[i - 1])
+
+
+def test_no_per_row_loops_in_text_kernels():
+    offenders = []
+    for rel in _KERNEL_FILES:
+        src = (PKG / rel).read_text()
+        offenders += [f"{rel}:{i}" for i in _kernel_row_loops(src)]
+    assert not offenders, f"per-row Python in batch text kernels: {offenders}"
+
+
+def test_text_kernel_lint_catches_row_loops():
+    src = (
+        "X = [1]\n"
+        "def f(s, d):\n"
+        "    a = s.map(lambda v: v)\n"
+        "    b = [len(v) for v in s]\n"
+        "    for v in d['col']:\n"
+        "        pass\n"
+        "    for i, r in enumerate(X):\n"
+        "        pass\n"
+        "    for v in s:  # row-loop-ok: reviewed\n"
+        "        pass\n"
+        "    return {n: 0 for n in X}\n"
+    )
+    assert _kernel_row_loops(src) == [3, 4, 5]
 
 
 def test_no_unmarked_collect_anywhere():
