@@ -2,7 +2,11 @@
 
 entry(spark)  -> flagship quality-filter labels over sf0.001 documents
 queries()     -> every implemented operator from SURVEY.md §2
-oracle_sql()  -> DuckDB twins (see ksana_corpus_builder_spark/queries.py)
+oracle_sql()  -> DuckDB twins, staged inputs written first
+
+Each ksana_corpus_builder_spark/queries*.py module ends with a REGISTRY
+table of (q_fn, twin SQL or None) rows; the query's name is the function's
+name minus `q_`. This module assembles the driver surface from them.
 """
 
 from __future__ import annotations
@@ -11,7 +15,49 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ksana_corpus_builder_spark.queries import ORACLE_SQL, QUERIES
+from ksana_corpus_builder_spark import (queries_ext, queries_ref,
+                                        queries_web)
+from ksana_corpus_builder_spark import queries as queries_core
+from ksana_corpus_builder_spark.sources.pages import (stage_jsonl,
+                                                      stage_pages,
+                                                      stage_stream_dedup)
+
+_REGISTRY = [(fn.__name__.removeprefix("q_"), fn, sql)
+             for mod in (queries_core, queries_ext, queries_ref, queries_web)
+             for fn, sql in mod.REGISTRY]
+ORACLE_SQL: dict[str, str] = {n: sql for n, _, sql in _REGISTRY
+                             if sql is not None}
+
+# The driver checks the first 50 queries; oracle-backed entries come first.
+_DRIVER_WINDOW = [
+    "bpe_merges", "bpe_vocab", "bpe_encode_docs", "pack_tokens",
+    "bloom_dedup", "lm_train_score", "hll_distinct", "cms_heavy_hitters",
+    "anchor_texts", "robots_filter",
+    "dup_span_cut", "bpe_fertility", "crawl_schedule", "gopher_rules",
+    "gopher_dup_lines", "normalized_dedup",
+    "redirect_resolve", "token_budget_mix", "shard_manifest",
+    "mojibake_flags", "hits_scores", "charset_sniff",
+    "simhash_hamming_pairs", "label_prop_spam", "cdx_index",
+    "gopher_ngram_gates", "zorder_layout",
+    "rule_ablation", "dataset_diff", "refresh_priority",
+    "contrastive_pairs", "pq_topk", "jsonl_ingest",
+    "lang_confusion", "stupid_backoff", "host_reputation",
+    "char_entropy",
+    "posting_stats", "book_tpos_map",
+    "dedup_components",
+    "scrub_rule_counts",
+    "line_dedup",
+    "pagerank", "boilerplate_blocks",
+    "corpus_manifest",
+    "pack_sequences", "bpe_pair_counts",
+    "minhash_pairs", "simhash", "ccnet_buckets_approx",
+]
+
+_fns = {n: fn for n, fn, _ in _REGISTRY}
+_rest = [n for n in _fns if n not in _DRIVER_WINDOW]
+QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
+    n: _fns[n] for n in _DRIVER_WINDOW
+    + sorted(_rest, key=lambda n: n not in ORACLE_SQL)}
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -27,59 +73,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return dict(QUERIES)
 
 
-def _ensure_staged_pages() -> None:
-    """The pages-backed oracle twins (pages_pipeline / stream_quality /
-    host_stats) read a staged parquet that their Spark queries write. If a
-    harness evaluates an oracle before its Spark twin in a fresh /tmp,
-    synthesize the same deterministic table with pandas + pyarrow: page
-    content is a pure function of (seed, id), so the Spark overwrite that
-    follows is row-equivalent (the compare sorts rows)."""
-    import os
-
-    import pyarrow.parquet as pq
-
-    from ksana_corpus_builder_spark.sources.pages import (STAGE_N,
-                                                          STAGE_PATH,
-                                                          make_pages_pdf)
-    def _sentinel_ok(parts: list[str]) -> bool:
-        # content fingerprint, not just cardinality (the ADVICE r4 #2
-        # discipline): regenerate one sentinel row and compare — a
-        # cardinality-preserving generator/seed drift must be restaged
-        try:
-            first = min(parts)
-            p0 = pq.read_table(first, columns=["url", "text"]).to_pandas()
-        except Exception:
-            return False
-        exp = make_pages_pdf(1, seed=42)
-        return (len(p0) > 0 and p0.iloc[0]["url"] == exp["url"][0]
-                and p0.iloc[0]["text"] == exp["text"][0])
-
-    if os.path.isdir(STAGE_PATH):
-        parts = [os.path.join(STAGE_PATH, f) for f in os.listdir(STAGE_PATH)
-                 if f.endswith(".parquet")]
-        if parts:
-            # validate cardinality (footer-only read) AND a content
-            # sentinel — a stale dir is rewritten, not trusted
-            n = sum(pq.ParquetFile(p).metadata.num_rows for p in parts)
-            if n == STAGE_N and _sentinel_ok(parts):
-                return
-            for p in parts:
-                os.remove(p)
-    import pyarrow as pa
-    os.makedirs(STAGE_PATH, exist_ok=True)
-    pdf = make_pages_pdf(STAGE_N, seed=42)
-    pq.write_table(pa.Table.from_pandas(pdf),
-                   os.path.join(STAGE_PATH, "part-00000.parquet"))
-
-
 def oracle_sql() -> dict[str, str]:
-    _ensure_staged_pages()
-    # stream_dedup's staged input (pages + re-crawl file) is pandas-built
-    # and cardinality-validated by the same helper its Spark query uses
-    from ksana_corpus_builder_spark.sources.pages import (stage_jsonl,
-                                                          stage_stream_dedup)
+    # the twins over pages read the staged files their Spark queries write;
+    # stage them here too, so an oracle evaluated first sees the same input
+    stage_pages()
     stage_stream_dedup()
-    # jsonl_ingest's staged file is python-built and sentinel-validated
-    # by the same helper its Spark query calls
     stage_jsonl()
     return dict(ORACLE_SQL)

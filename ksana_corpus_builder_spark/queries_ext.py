@@ -21,14 +21,13 @@ fingerprints, BPE-ish token counting, composite quality score.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from . import codec
 from .operators import ann, tokens, tpos
 from .operators.dedup import shingles
+from .queries import _SQL_KEEP_DROP, _langid_sql, q_keep_drop, q_langid
 from .sources.tables import load
 
 _TOKS_SQL = "list_filter(string_split({col}, ' '), x -> x <> '')"
@@ -497,7 +496,6 @@ FROM documents
 def q_quality_score(spark: SparkSession, sf: str) -> DataFrame:
     """Integer quality score 0..100: 100 minus 15 per rule hit (floor 0),
     derived from the SAME production kernel the keep/drop label uses."""
-    from .queries import q_keep_drop
     kd = q_keep_drop(spark, sf)
     n_hit = F.when(F.col("rules_hit_str") == "", F.lit(0)) \
              .otherwise(F.size(F.split("rules_hit_str", ",")))
@@ -507,11 +505,11 @@ def q_quality_score(spark: SparkSession, sf: str) -> DataFrame:
         .cast("long").alias("score"))
 
 
-QUALITY_SCORE_SQL_TEMPLATE = """
+_SQL_QUALITY_SCORE = f"""
 SELECT doc_id,
   greatest(0, 100 - 15 * (CASE WHEN rules_hit_str = '' THEN 0
     ELSE len(string_split(rules_hit_str, ',')) END))::BIGINT AS score
-FROM ({keep_drop_sql}) kd
+FROM ({_SQL_KEEP_DROP}) kd
 """
 
 
@@ -520,7 +518,6 @@ def q_quality_report(spark: SparkSession, sf: str) -> DataFrame:
     detected language) — label kernel + langid kernel + dim join in one
     metrics rollup (integer counts only; rate = n_kept/n_docs is left to
     the consumer so the row stays hash-exact)."""
-    from .queries import q_keep_drop, q_langid
     kd = q_keep_drop(spark, sf).select("doc_id", "keep")
     lg = q_langid(spark, sf).select("doc_id", "lang_detected")
     src = load(spark, sf, "documents").select("doc_id", "source")
@@ -530,9 +527,9 @@ def q_quality_report(spark: SparkSession, sf: str) -> DataFrame:
                  F.sum(F.col("keep").cast("long")).alias("n_kept")))
 
 
-QUALITY_REPORT_SQL_TEMPLATE = """
-WITH kd AS ({keep_drop_sql}),
-lg AS ({langid_sql})
+_SQL_QUALITY_REPORT = f"""
+WITH kd AS ({_SQL_KEEP_DROP}),
+lg AS ({_langid_sql()})
 SELECT d.source, lg.lang_detected,
        count(*)::BIGINT AS n_docs,
        sum(CASE WHEN kd.keep THEN 1 ELSE 0 END)::BIGINT AS n_kept
@@ -1092,11 +1089,11 @@ def q_lineage_metrics(spark: SparkSession, sf: str) -> DataFrame:
         F.explode("rule_hit_counts").alias("rule", "n_hits"))
 
 
-def _lineage_sql_template() -> str:
+def _lineage_sql() -> str:
     from .functions.quality import RULE_NAMES
     rules = "[" + ", ".join(f"'{r}'" for r in RULE_NAMES) + "]"
     return f"""
-WITH kd AS ({{keep_drop_sql}}),
+WITH kd AS ({_SQL_KEEP_DROP}),
 b AS (SELECT doc_id % {_LINEAGE_BUCKETS} AS bucket, keep, rules_hit_str
       FROM kd),
 stats AS (SELECT bucket, count(*)::BIGINT AS n_docs,
@@ -1112,8 +1109,6 @@ SELECT stats.bucket::BIGINT AS bucket, n_docs, n_kept, rule, n_hits
 FROM stats JOIN hits USING (bucket)
 """
 
-
-LINEAGE_SQL_TEMPLATE = _lineage_sql_template()
 
 
 # ---------------------------------------------- P6: token-type census
@@ -1405,94 +1400,49 @@ SELECT vec_id, cos_sim FROM s2 ORDER BY cos_sim DESC, vec_id LIMIT 10
 
 # ================================================================ registry
 
-QUERIES_EXT: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "stream_hourly": q_stream_hourly,
-    "tei_lines": q_tei_lines,
-    "stream_sessions": q_stream_sessions,
-    "rollup_orders": q_rollup_orders,
-    "intersect_sources": q_intersect_sources,
-    "base36_ids": q_base36_ids,
-    "book_tpos_map": q_book_tpos_map,
-    "indexed_postings": q_indexed_postings,
-    "preparse_lines": q_preparse_lines,
-    "session_windows": q_session_windows,
-    "value_median": q_value_median,
-    "whitelist_postings": q_whitelist_postings,
-    "asof_broadcast": q_asof_broadcast,
-    "lineage_metrics": q_lineage_metrics,
-    "token_types": q_token_types,
-    "shipping_priority": q_shipping_priority,
-    "order_priority_count": q_order_priority_count,
-    "posting_lists": q_posting_lists,
-    "normalize_tokens": q_normalize_tokens,
-    "salted_source_agg": q_salted_source_agg,
-    "media_meta": q_media_meta,
-    "media_pixels": q_media_pixels,
-    "media_frames": q_media_frames,
-    "media_features": q_media_features,
-    "ivf_topk": q_ivf_topk,
-    "quantized_topk": q_quantized_topk,
-    "char_unigrams": q_char_unigrams,
-    "bigram_ratio": q_bigram_ratio,
-    "kpos_roundtrip": q_kpos_roundtrip,
-    "doc_tpos_map": q_doc_tpos_map,
-    "gap_fill_hours": q_gap_fill_hours,
-    "monotonic_check": q_monotonic_check,
-    "first_error": q_first_error,
-    "unconsumed_dim": q_unconsumed_dim,
-    "ptr_def_pairs": q_ptr_def_pairs,
-    "reverse_links": q_reverse_links,
-    "value_buckets": q_value_buckets,
-    "embed_neardup": q_embed_neardup,
-    "contrastive_pairs": q_contrastive_pairs,
-    "pq_topk": q_pq_topk,
-    "doc_fingerprint": q_doc_fingerprint,
-    "token_count_bpe": q_token_count_bpe,
-    "quality_score": q_quality_score,
-    "quality_report": q_quality_report,
-}
-
-ORACLE_SQL_EXT: dict[str, str] = {
-    "stream_hourly": _stream_hourly_sql(),
-    "tei_lines": _SQL_TEI_LINES,
-    "stream_sessions": _SQL_STREAM_SESSIONS,
-    "rollup_orders": _SQL_ROLLUP_ORDERS,
-    "intersect_sources": _SQL_INTERSECT_SOURCES,
-    "base36_ids": _SQL_BASE36_IDS,
-    "book_tpos_map": _SQL_BOOK_TPOS_MAP,
-    "indexed_postings": _SQL_INDEXED_POSTINGS,
-    "preparse_lines": _SQL_PREPARSE_LINES,
-    "session_windows": _SQL_SESSION_WINDOWS,
-    "value_median": _SQL_VALUE_MEDIAN,
-    "whitelist_postings": _SQL_WHITELIST_POSTINGS,
-    "asof_broadcast": _SQL_ASOF_BROADCAST,
-    "token_types": _SQL_TOKEN_TYPES,
-    "shipping_priority": _SQL_SHIPPING_PRIORITY,
-    "order_priority_count": _SQL_ORDER_PRIORITY_COUNT,
-    "posting_lists": _SQL_POSTING_LISTS,
-    "normalize_tokens": _SQL_NORMALIZE_TOKENS,
-    "salted_source_agg": _SQL_SALTED_SOURCE_AGG,
-    "media_meta": _media_meta_sql(),
-    "media_pixels": _media_pixels_sql(),
-    "media_frames": _media_frames_sql(),
-    "media_features": _SQL_MEDIA_FEATURES,
-    "char_unigrams": _SQL_CHAR_UNIGRAMS,
-    "bigram_ratio": _SQL_BIGRAM_RATIO,
-    "kpos_roundtrip": _kpos_sql(),
-    "quantized_topk": _SQL_QUANTIZED_TOPK,
-    "ivf_topk": _SQL_IVF_TOPK,
-    "doc_tpos_map": _SQL_DOC_TPOS_MAP,
-    "gap_fill_hours": _SQL_GAP_FILL_HOURS,
-    "monotonic_check": _SQL_MONOTONIC_CHECK,
-    "first_error": _SQL_FIRST_ERROR,
-    "unconsumed_dim": _SQL_UNCONSUMED_DIM,
-    "ptr_def_pairs": _SQL_PTR_DEF_PAIRS,
-    "reverse_links": _SQL_REVERSE_LINKS,
-    "value_buckets": _SQL_VALUE_BUCKETS,
-    "embed_neardup": _SQL_EMBED_NEARDUP,
-    "contrastive_pairs": _SQL_CONTRASTIVE_PAIRS,
-    "pq_topk": _SQL_PQ_TOPK,
-    "doc_fingerprint": _SQL_DOC_FINGERPRINT,
-    "token_count_bpe": _SQL_TOKEN_COUNT_BPE,
-    # quality_score SQL is composed in queries.py (owns _SQL_KEEP_DROP)
-}
+REGISTRY = (
+    (q_stream_hourly, _stream_hourly_sql()),
+    (q_tei_lines, _SQL_TEI_LINES),
+    (q_stream_sessions, _SQL_STREAM_SESSIONS),
+    (q_rollup_orders, _SQL_ROLLUP_ORDERS),
+    (q_intersect_sources, _SQL_INTERSECT_SOURCES),
+    (q_base36_ids, _SQL_BASE36_IDS),
+    (q_book_tpos_map, _SQL_BOOK_TPOS_MAP),
+    (q_indexed_postings, _SQL_INDEXED_POSTINGS),
+    (q_preparse_lines, _SQL_PREPARSE_LINES),
+    (q_session_windows, _SQL_SESSION_WINDOWS),
+    (q_value_median, _SQL_VALUE_MEDIAN),
+    (q_whitelist_postings, _SQL_WHITELIST_POSTINGS),
+    (q_asof_broadcast, _SQL_ASOF_BROADCAST),
+    (q_lineage_metrics, _lineage_sql()),
+    (q_token_types, _SQL_TOKEN_TYPES),
+    (q_shipping_priority, _SQL_SHIPPING_PRIORITY),
+    (q_order_priority_count, _SQL_ORDER_PRIORITY_COUNT),
+    (q_posting_lists, _SQL_POSTING_LISTS),
+    (q_normalize_tokens, _SQL_NORMALIZE_TOKENS),
+    (q_salted_source_agg, _SQL_SALTED_SOURCE_AGG),
+    (q_media_meta, _media_meta_sql()),
+    (q_media_pixels, _media_pixels_sql()),
+    (q_media_frames, _media_frames_sql()),
+    (q_media_features, _SQL_MEDIA_FEATURES),
+    (q_ivf_topk, _SQL_IVF_TOPK),
+    (q_quantized_topk, _SQL_QUANTIZED_TOPK),
+    (q_char_unigrams, _SQL_CHAR_UNIGRAMS),
+    (q_bigram_ratio, _SQL_BIGRAM_RATIO),
+    (q_kpos_roundtrip, _kpos_sql()),
+    (q_doc_tpos_map, _SQL_DOC_TPOS_MAP),
+    (q_gap_fill_hours, _SQL_GAP_FILL_HOURS),
+    (q_monotonic_check, _SQL_MONOTONIC_CHECK),
+    (q_first_error, _SQL_FIRST_ERROR),
+    (q_unconsumed_dim, _SQL_UNCONSUMED_DIM),
+    (q_ptr_def_pairs, _SQL_PTR_DEF_PAIRS),
+    (q_reverse_links, _SQL_REVERSE_LINKS),
+    (q_value_buckets, _SQL_VALUE_BUCKETS),
+    (q_embed_neardup, _SQL_EMBED_NEARDUP),
+    (q_contrastive_pairs, _SQL_CONTRASTIVE_PAIRS),
+    (q_pq_topk, _SQL_PQ_TOPK),
+    (q_doc_fingerprint, _SQL_DOC_FINGERPRINT),
+    (q_token_count_bpe, _SQL_TOKEN_COUNT_BPE),
+    (q_quality_score, _SQL_QUALITY_SCORE),
+    (q_quality_report, _SQL_QUALITY_REPORT),
+)

@@ -28,12 +28,13 @@ machinery (string formatting -> regex parse -> kpos pack -> range resolve
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from . import codec
+from .queries import (_SQL_KEEP_DROP, _pages_pipeline_sql,
+                      ccnet_buckets_approx, q_keep_drop)
+from .sources.pages import STAGE_PATH, stage_pages
 from .sources.tables import load
 
 # ---------------------------------------------------------- J5: reverse links
@@ -1123,10 +1124,9 @@ def q_stream_quality(spark: SparkSession, sf: str) -> DataFrame:
     (file-source readStream over the staged pages -> fused kernel pass ->
     append sink, Trigger.AvailableNow). Stateless map => streaming output
     must equal the batch pipeline exactly, so this query shares the
-    pages_pipeline DuckDB twin verbatim (wired in queries.py)."""
-    from .queries import stage_pages
+    pages_pipeline DuckDB twin verbatim."""
     from .streaming.quality import stream_quality_query
-    return stream_quality_query(spark, stage_pages(spark, sf))
+    return stream_quality_query(spark, stage_pages())
 
 
 def q_host_stats(spark: SparkSession, sf: str) -> DataFrame:
@@ -1136,8 +1136,7 @@ def q_host_stats(spark: SparkSession, sf: str) -> DataFrame:
     the skew-surface query — at scale the groupBy uses the same
     salted-two-phase plan as salted_source_agg; here the hot key is one
     group and the plain hash agg (map-side combined) is the right plan."""
-    from .queries import stage_pages
-    staged = spark.read.parquet(stage_pages(spark, sf))
+    staged = spark.read.parquet(stage_pages())
     host = F.regexp_extract("url", r"^https://([^/]+)/", 1)
     return (staged.groupBy(host.alias("host"))
             .agg(F.count("*").alias("n_pages"),
@@ -1145,7 +1144,6 @@ def q_host_stats(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _host_stats_sql() -> str:
-    from .sources.pages import STAGE_PATH
     return f"""
 SELECT regexp_extract(url, '^https://([^/]+)/', 1) AS host,
        count(*)::BIGINT AS n_pages,
@@ -1285,7 +1283,6 @@ def q_ccnet_buckets_approx(spark: SparkSession, sf: str) -> DataFrame:
     agreement with the exact oracle-pinned ntile assigner (>=0.80 exact,
     >=0.99 within one decile) is asserted in tests/test_ccnet.py. Output is
     the same manifest shape as the exact `ccnet_buckets` query."""
-    from .queries import ccnet_buckets_approx
     return (ccnet_buckets_approx(spark, sf)
             .groupBy("lang_detected", "ppl_decile")
             .agg(F.count("*").alias("n_docs")))
@@ -1315,8 +1312,7 @@ def q_line_dedup(spark: SparkSession, sf: str) -> DataFrame:
     AQE still converts to broadcast at runtime when the set is genuinely
     small. Then one per-page re-aggregation; collect_list is bounded by
     a single page's line count."""
-    from .queries import stage_pages
-    p = spark.read.parquet(stage_pages(spark, sf)).select("url", "text")
+    p = spark.read.parquet(stage_pages()).select("url", "text")
     lines = (p.select(
         "url", F.posexplode(F.split("text", "\n")).alias("pos", "line"))
         .withColumn("lh", F.unhex(F.md5(F.col("line").cast("binary")))))
@@ -1336,7 +1332,6 @@ def q_line_dedup(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _line_dedup_sql() -> str:
-    from .sources.pages import STAGE_PATH
     return f"""
 WITH s AS (SELECT url, string_split(text, chr(10)) AS ls
            FROM read_parquet('{STAGE_PATH}/*.parquet')),
@@ -1382,8 +1377,7 @@ def q_url_dedup(spark: SparkSession, sf: str) -> DataFrame:
     row_number window keyed by the canonical url (equivalently min_by) —
     a single shuffle on the dedup key, the same plan a real crawl-log
     dedup runs."""
-    from .queries import stage_pages
-    p = (spark.read.parquet(stage_pages(spark, sf))
+    p = (spark.read.parquet(stage_pages())
          .select("url", F.col("warc_ts").cast("timestamp").alias("ts")))
     m = F.conv(F.substring(F.md5("url"), 1, 7), 16, 10).cast("long")
     host = F.regexp_extract("url", r"^https://([^/]+)", 1)
@@ -1413,7 +1407,6 @@ def q_url_dedup(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _url_dedup_sql() -> str:
-    from .sources.pages import STAGE_PATH
     return f"""
 WITH p AS (SELECT url, warc_ts::TIMESTAMP AS ts,
              ('0x' || substr(md5(url), 1, 7))::BIGINT AS m,
@@ -1471,8 +1464,7 @@ def q_dup_spans(spark: SparkSession, sf: str) -> DataFrame:
     (md5 rather than xxhash64 so the DuckDB twin stays value-exact).
     Windows are generated with ONE transform over the materialized token
     array, hashed in the same transform (no-CSE discipline)."""
-    from .queries import stage_pages
-    p = spark.read.parquet(stage_pages(spark, sf)).select("url", "text")
+    p = spark.read.parquet(stage_pages()).select("url", "text")
     toks = F.filter(F.split(F.regexp_replace("text", r"\s+", " "), " "),
                     lambda x: x != F.lit(""))
     base = (p.select("url", toks.alias("toks"))
@@ -1495,7 +1487,6 @@ def q_dup_spans(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _dup_spans_sql() -> str:
-    from .sources.pages import STAGE_PATH
     return f"""
 WITH t AS (SELECT url,
              list_filter(string_split(regexp_replace(text, '\\s+', ' ', 'g'),
@@ -1542,8 +1533,7 @@ def q_dup_span_cut(spark: SparkSession, sf: str) -> DataFrame:
     no-CSE rule — inside the filter lambda they would re-expand per
     token). The per-row cost of the kept filter is O(tokens · covered),
     both page-bounded."""
-    from .queries import stage_pages
-    p = spark.read.parquet(stage_pages(spark, sf)).select("url", "text")
+    p = spark.read.parquet(stage_pages()).select("url", "text")
     toks = F.filter(F.split(F.regexp_replace("text", r"\s+", " "), " "),
                     lambda x: x != F.lit(""))
     base = (p.select("url", toks.alias("toks"))
@@ -1597,7 +1587,6 @@ def q_dup_span_cut(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _dup_span_cut_sql() -> str:
-    from .sources.pages import STAGE_PATH
     return f"""
 WITH t AS (SELECT url,
              list_filter(string_split(regexp_replace(text, '\\s+', ' ', 'g'),
@@ -1965,8 +1954,7 @@ def q_intra_line_dedup(spark: SparkSession, sf: str) -> DataFrame:
     stream is exploded — inside the fused pipeline the same rule runs
     shuffle-free per Arrow batch)."""
     from pyspark.sql import Window
-    from .queries import stage_pages
-    p = spark.read.parquet(stage_pages(spark, sf)).select("url", "text")
+    p = spark.read.parquet(stage_pages()).select("url", "text")
     aug = p.select("url", F.concat_ws(
         "\n", "text",
         F.element_at(F.split("text", "\n"), 1)).alias("text"))
@@ -1986,7 +1974,6 @@ def q_intra_line_dedup(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _intra_line_dedup_sql() -> str:
-    from .sources.pages import STAGE_PATH
     return f"""
 WITH s0 AS (SELECT url, text || chr(10) || string_split(text, chr(10))[1]
               AS text
@@ -2676,7 +2663,6 @@ def q_corpus_manifest(spark: SparkSession, sf: str) -> DataFrame:
     100 TB shape: three doc-keyed streams hash-join on doc_id — with the
     corpus bucketed by doc_id at rest all three joins are co-located
     (operators/bucketed.py); nothing here adds a new scale surface."""
-    from .queries import q_keep_drop
     kd = q_keep_drop(spark, sf).select(
         "doc_id", F.col("keep").alias("quality_keep"))
     mh = q_minhash_dedup(spark, sf)
@@ -2688,12 +2674,9 @@ def q_corpus_manifest(spark: SparkSession, sf: str) -> DataFrame:
                      & ~F.col("contaminated")).alias("final_keep")))
 
 
-def corpus_manifest_sql(keep_drop_sql: str) -> str:
-    """SQL twin template — keep_drop_sql is injected by queries.py (the
-    quality_report composition pattern; queries_ref must not import
-    queries at module scope)."""
+def _corpus_manifest_sql() -> str:
     return f"""
-WITH kd AS ({keep_drop_sql}),
+WITH kd AS ({_SQL_KEEP_DROP}),
 mh AS ({_minhash_dedup_sql()}),
 dc AS ({_SQL_DECONTAMINATE})
 SELECT kd.doc_id, kd.keep AS quality_keep, mh.is_rep, mh.component,
@@ -2719,8 +2702,7 @@ def q_c4_line_filter(spark: SparkSession, sf: str) -> DataFrame:
     100 TB shape: line tagging is a pure per-row map (codegen'd split +
     endswith + hash); the only shuffle is the per-page re-aggregation
     keyed by url, map-side combined. Page-parallel at any scale."""
-    from .queries import stage_pages
-    p = spark.read.parquet(stage_pages(spark, sf)).select("url", "text")
+    p = spark.read.parquet(stage_pages()).select("url", "text")
     lines = p.select(
         "url", F.posexplode(F.split("text", "\n")).alias("pos", "line"))
     b = (F.conv(F.substring(F.md5(F.col("line")), 1, 7), 16, 10)
@@ -2746,7 +2728,6 @@ def q_c4_line_filter(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _c4_line_filter_sql() -> str:
-    from .sources.pages import STAGE_PATH
     return f"""
 WITH s AS (SELECT url, string_split(text, chr(10)) AS ls
            FROM read_parquet('{STAGE_PATH}/*.parquet')),
@@ -2800,8 +2781,7 @@ def q_gopher_rules(spark: SparkSession, sf: str) -> DataFrame:
     map over exploded lines (codegen split + tiny-array folds, the
     doc_stats pattern); the only shuffle is ONE map-side-combined
     groupBy(url). Page-parallel at any scale."""
-    from .queries import stage_pages
-    p = spark.read.parquet(stage_pages(spark, sf)).select("url", "text")
+    p = spark.read.parquet(stage_pages()).select("url", "text")
     lines = p.select("url", F.explode(F.split("text", "\n")).alias("line"))
     b = (F.conv(F.substring(F.md5(F.col("line")), 1, 7), 16, 10)
          .cast("long") % 7)
@@ -2868,7 +2848,6 @@ def q_gopher_rules(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _gopher_rules_sql() -> str:
-    from .sources.pages import STAGE_PATH
     stop_bits = " + ".join(
         f"(CASE WHEN list_contains(ws, '{s}') THEN {1 << i} ELSE 0 END)"
         for i, s in enumerate(_GOPHER_STOPS))
@@ -2943,8 +2922,7 @@ def q_gopher_dup_lines(spark: SparkSession, sf: str) -> DataFrame:
     md5(url) bucket is 0 (mod 11) get their line list DOUBLED (the
     templated-chrome shape the rule exists to catch), the same
     expression in both engines (the derived-input discipline)."""
-    from .queries import stage_pages
-    p = spark.read.parquet(stage_pages(spark, sf)).select("url", "text")
+    p = spark.read.parquet(stage_pages()).select("url", "text")
     ls = F.split("text", "\n")
     dupy = (F.conv(F.substring(F.md5(F.col("url")), 1, 7), 16, 10)
             .cast("long") % 11) == 0
@@ -2974,7 +2952,6 @@ def q_gopher_dup_lines(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _gopher_dup_lines_sql() -> str:
-    from .sources.pages import STAGE_PATH
     return f"""
 WITH s0 AS (SELECT url, string_split(text, chr(10)) AS ls0
             FROM read_parquet('{STAGE_PATH}/*.parquet')),
@@ -3031,8 +3008,7 @@ def q_gopher_ngram_gates(spark: SparkSession, sf: str) -> DataFrame:
     combined shuffles — (url, n, gram) counts, then the per-url
     conditional rollup. Gram keys are page-scoped so the shuffle is
     skew-free; no window, no broadcast, no sort."""
-    from .queries import stage_pages
-    p = (spark.read.parquet(stage_pages(spark, sf))
+    p = (spark.read.parquet(stage_pages())
          .select("url", "text",
                  F.filter(F.split("text", " "),
                           lambda x: x != F.lit("")).alias("toks")))
@@ -3076,7 +3052,6 @@ def q_gopher_ngram_gates(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _gopher_ngram_gates_sql() -> str:
-    from .sources.pages import STAGE_PATH
     lb = 1 << _GNG_LENBITS
     tops = ",\n".join(
         f"        coalesce(max(CASE WHEN n = {n} THEN c * {lb} + glen END),"
@@ -3133,8 +3108,7 @@ def q_normalized_dedup(spark: SparkSession, sf: str) -> DataFrame:
     carry 16-byte keys, never the normalized text; both sides of the
     re-join are corpus-sized and doc-keyed — a plain shuffle hash join,
     no broadcast (the dup_spans / line_dedup key discipline)."""
-    from .queries import stage_pages
-    p = spark.read.parquet(stage_pages(spark, sf)).select("url", "text")
+    p = spark.read.parquet(stage_pages()).select("url", "text")
     norm = F.trim(F.regexp_replace(F.regexp_replace(
         F.lower(F.col("text")), "[^a-z ]", " "), " +", " "))
     keyed = p.select(
@@ -3153,7 +3127,6 @@ def q_normalized_dedup(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _normalized_dedup_sql() -> str:
-    from .sources.pages import STAGE_PATH
     return f"""
 WITH n AS (SELECT url,
              trim(regexp_replace(regexp_replace(lower(text),
@@ -3190,8 +3163,7 @@ def q_url_filter(spark: SparkSession, sf: str) -> DataFrame:
     rows, still broadcastable); the keyword test is a per-row LIKE chain
     (whole-stage codegen, no HOF) — the whole query is a single
     shuffle-free map over the crawl."""
-    from .queries import stage_pages
-    staged = spark.read.parquet(stage_pages(spark, sf))
+    staged = spark.read.parquet(stage_pages())
     host = F.regexp_extract("url", r"^https://([^/]+)/", 1)
     path = F.regexp_extract("url", r"^https://[^/]+/(.*)$", 1)
     block = (spark.range(16).filter(F.col("id") % 3 == 0)
@@ -3214,7 +3186,6 @@ def q_url_filter(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _url_filter_sql() -> str:
-    from .sources.pages import STAGE_PATH
     likes = " OR ".join(f"path LIKE '%{k}%'" for k in _UF_KWS)
     return f"""
 WITH p AS (SELECT url,
@@ -3318,109 +3289,59 @@ LEFT JOIN w1 ON r.i = w1.b LEFT JOIN d2 ON r.i = d2.b
 
 # ================================================================ registry
 
-QUERIES_REF: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "reverse_links_resolved": q_reverse_links_resolved,
-    "standoff_kfields": q_standoff_kfields,
-    "standoff_afields": q_standoff_afields,
-    "a3_toc": q_a3_toc,
-    "kpos_roundtrip_col": q_kpos_roundtrip_col,
-    "incremental_hourly": q_incremental_hourly,
-    "train_split": q_train_split,
-    "sample_per_source": q_sample_per_source,
-    "context_chunks": q_context_chunks,
-    "embed_neardup_lsh": q_embed_neardup_lsh,
-    "dedup_components": q_dedup_components,
-    "local_supplier_volume": q_local_supplier_volume,
-    "media_base64": q_media_base64,
-    "stream_sliding": q_stream_sliding,
-    "minhash_md5": q_minhash_md5,
-    "simhash_md5": q_simhash_md5,
-    "ivf_kmeans_topk": q_ivf_kmeans_topk,
-    "repetition_ngrams": q_repetition_ngrams,
-    "tfidf_topk": q_tfidf_topk,
-    "host_stats": q_host_stats,
-    "stream_quality": q_stream_quality,
-    "text_embed_topk": q_text_embed_topk,
-    "scrub_phone_fixture": q_scrub_phone_fixture,
-    "line_dedup": q_line_dedup,
-    "decontaminate": q_decontaminate,
-    "url_dedup": q_url_dedup,
-    "dup_spans": q_dup_spans,
-    "dsir_weights": q_dsir_weights,
-    "domain_mix": q_domain_mix,
-    "semdedup": q_semdedup,
-    "quality_classifier": q_quality_classifier,
-    "classifier_train": q_classifier_train,
-    "url_filter": q_url_filter,
-    "intra_line_dedup": q_intra_line_dedup,
-    "c4_line_filter": q_c4_line_filter,
-    "gopher_rules": q_gopher_rules,
-    "gopher_dup_lines": q_gopher_dup_lines,
-    "gopher_ngram_gates": q_gopher_ngram_gates,
-    "normalized_dedup": q_normalized_dedup,
-    "minhash_dedup": q_minhash_dedup,
-    "corpus_manifest": q_corpus_manifest,
-    "cross_snapshot_minhash": q_cross_snapshot_minhash,
-    "pack_sequences": q_pack_sequences,
-    "bpe_pair_counts": q_bpe_pair_counts,
-    "bpe_merges": q_bpe_merges,
-    "bpe_vocab": q_bpe_vocab,
-    "bpe_encode_docs": q_bpe_encode_docs,
-    "bpe_fertility": q_bpe_fertility,
-    "dup_span_cut": q_dup_span_cut,
-    "pack_tokens": q_pack_tokens,
-    "ccnet_buckets_approx": q_ccnet_buckets_approx,  # rows-only by design
-}
-
-ORACLE_SQL_REF: dict[str, str] = {
-    "reverse_links_resolved": _SQL_REVERSE_LINKS_RESOLVED,
-    "standoff_kfields": _SQL_STANDOFF_KFIELDS,
-    "standoff_afields": _SQL_STANDOFF_AFIELDS,
-    "a3_toc": _a3_toc_sql(),
-    "kpos_roundtrip_col": _kpos_col_sql(),
-    "incremental_hourly": _SQL_INCREMENTAL_HOURLY,
-    "train_split": _SQL_TRAIN_SPLIT,
-    "sample_per_source": _SQL_SAMPLE_PER_SOURCE,
-    "context_chunks": _SQL_CONTEXT_CHUNKS,
-    "embed_neardup_lsh": _embed_neardup_lsh_sql(),
-    "dedup_components": _SQL_DEDUP_COMPONENTS,
-    "local_supplier_volume": _SQL_LOCAL_SUPPLIER_VOLUME,
-    "media_base64": _SQL_MEDIA_BASE64,
-    "stream_sliding": _stream_sliding_sql(),
-    "minhash_md5": _minhash_md5_sql(),
-    "simhash_md5": _SQL_SIMHASH_MD5,
-    "ivf_kmeans_topk": _ivf_kmeans_sql(),
-    "repetition_ngrams": _SQL_REPETITION_NGRAMS,
-    "tfidf_topk": _SQL_TFIDF_TOPK,
-    "host_stats": _host_stats_sql(),
-    "text_embed_topk": _text_embed_topk_sql(),
-    "scrub_phone_fixture": _SQL_SCRUB_PHONE_FIXTURE,
-    "line_dedup": _line_dedup_sql(),
-    "decontaminate": _SQL_DECONTAMINATE,
-    "url_dedup": _url_dedup_sql(),
-    "dup_spans": _dup_spans_sql(),
-    "dsir_weights": _SQL_DSIR_WEIGHTS,
-    "domain_mix": _SQL_DOMAIN_MIX,
-    "semdedup": _semdedup_sql(),
-    "quality_classifier": _SQL_QUALITY_CLASSIFIER,
-    "classifier_train": _SQL_CLASSIFIER_TRAIN,
-    "url_filter": _url_filter_sql(),
-    "intra_line_dedup": _intra_line_dedup_sql(),
-    "c4_line_filter": _c4_line_filter_sql(),
-    "gopher_rules": _gopher_rules_sql(),
-    "gopher_dup_lines": _gopher_dup_lines_sql(),
-    "gopher_ngram_gates": _gopher_ngram_gates_sql(),
-    "normalized_dedup": _normalized_dedup_sql(),
-    "minhash_dedup": _minhash_dedup_sql(),
-    "cross_snapshot_minhash": _cross_snapshot_minhash_sql(),
-    "pack_sequences": _SQL_PACK_SEQUENCES,
-    "bpe_pair_counts": _SQL_BPE_PAIR_COUNTS,
-    "bpe_merges": _bpe_merges_sql(),
-    "bpe_vocab": _bpe_vocab_sql(),
-    "bpe_encode_docs": _bpe_encode_docs_sql(),
-    "bpe_fertility": _bpe_fertility_sql(),
-    "dup_span_cut": _dup_span_cut_sql(),
-    "pack_tokens": _SQL_PACK_TOKENS,
-    # ccnet_buckets_approx: NO oracle by design (percentile_approx has no
-    # DuckDB twin); agreement with the exact assigner is pytest-gated
-}
+REGISTRY = (
+    (q_reverse_links_resolved, _SQL_REVERSE_LINKS_RESOLVED),
+    (q_standoff_kfields, _SQL_STANDOFF_KFIELDS),
+    (q_standoff_afields, _SQL_STANDOFF_AFIELDS),
+    (q_a3_toc, _a3_toc_sql()),
+    (q_kpos_roundtrip_col, _kpos_col_sql()),
+    (q_incremental_hourly, _SQL_INCREMENTAL_HOURLY),
+    (q_train_split, _SQL_TRAIN_SPLIT),
+    (q_sample_per_source, _SQL_SAMPLE_PER_SOURCE),
+    (q_context_chunks, _SQL_CONTEXT_CHUNKS),
+    (q_embed_neardup_lsh, _embed_neardup_lsh_sql()),
+    (q_dedup_components, _SQL_DEDUP_COMPONENTS),
+    (q_local_supplier_volume, _SQL_LOCAL_SUPPLIER_VOLUME),
+    (q_media_base64, _SQL_MEDIA_BASE64),
+    (q_stream_sliding, _stream_sliding_sql()),
+    (q_minhash_md5, _minhash_md5_sql()),
+    (q_simhash_md5, _SQL_SIMHASH_MD5),
+    (q_ivf_kmeans_topk, _ivf_kmeans_sql()),
+    (q_repetition_ngrams, _SQL_REPETITION_NGRAMS),
+    (q_tfidf_topk, _SQL_TFIDF_TOPK),
+    (q_host_stats, _host_stats_sql()),
+    # streaming run of the pages pipeline: same rows, same twin
+    (q_stream_quality, _pages_pipeline_sql()),
+    (q_text_embed_topk, _text_embed_topk_sql()),
+    (q_scrub_phone_fixture, _SQL_SCRUB_PHONE_FIXTURE),
+    (q_line_dedup, _line_dedup_sql()),
+    (q_decontaminate, _SQL_DECONTAMINATE),
+    (q_url_dedup, _url_dedup_sql()),
+    (q_dup_spans, _dup_spans_sql()),
+    (q_dsir_weights, _SQL_DSIR_WEIGHTS),
+    (q_domain_mix, _SQL_DOMAIN_MIX),
+    (q_semdedup, _semdedup_sql()),
+    (q_quality_classifier, _SQL_QUALITY_CLASSIFIER),
+    (q_classifier_train, _SQL_CLASSIFIER_TRAIN),
+    (q_url_filter, _url_filter_sql()),
+    (q_intra_line_dedup, _intra_line_dedup_sql()),
+    (q_c4_line_filter, _c4_line_filter_sql()),
+    (q_gopher_rules, _gopher_rules_sql()),
+    (q_gopher_dup_lines, _gopher_dup_lines_sql()),
+    (q_gopher_ngram_gates, _gopher_ngram_gates_sql()),
+    (q_normalized_dedup, _normalized_dedup_sql()),
+    (q_minhash_dedup, _minhash_dedup_sql()),
+    (q_corpus_manifest, _corpus_manifest_sql()),
+    (q_cross_snapshot_minhash, _cross_snapshot_minhash_sql()),
+    (q_pack_sequences, _SQL_PACK_SEQUENCES),
+    (q_bpe_pair_counts, _SQL_BPE_PAIR_COUNTS),
+    (q_bpe_merges, _bpe_merges_sql()),
+    (q_bpe_vocab, _bpe_vocab_sql()),
+    (q_bpe_encode_docs, _bpe_encode_docs_sql()),
+    (q_bpe_fertility, _bpe_fertility_sql()),
+    (q_dup_span_cut, _dup_span_cut_sql()),
+    (q_pack_tokens, _SQL_PACK_TOKENS),
+    # rows-only by design: percentile_approx has no DuckDB twin; its
+    # agreement with the exact assigner is pytest-gated
+    (q_ccnet_buckets_approx, None),
+)

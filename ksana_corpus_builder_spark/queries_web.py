@@ -28,14 +28,18 @@ from __future__ import annotations
 
 import itertools
 import tempfile
-from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .operators.dedup import bloom_membership
+from .queries import _pages_pipeline_sql, q_pages_pipeline
+from .queries_ref import (_DOC_TOKS, _MD5H28, _idiv, _url_filter_sql,
+                          q_url_filter)
 from .sources.pages import STAGE_PATH as _PAGES_STAGE
 from .sources.pages import STREAM_DEDUP_PATH as _SD_STAGE
+from .sources.pages import (JSONL_PATH, stage_jsonl, stage_pages,
+                           stage_stream_dedup)
 from .sources.tables import load
 
 _STREAM_DEDUP_SEQ = itertools.count()  # unique memory-sink names per call
@@ -150,8 +154,7 @@ def q_boilerplate_blocks(spark: SparkSession, sf: str) -> DataFrame:
     all; the regex lexer is one JVM-side pass per page. Each HOF stage is
     materialized in its own projection (blocks, then kept, then joined)
     so the no-CSE interpreted-HOF rule cannot re-lex the page."""
-    from .queries import stage_pages
-    p = spark.read.parquet(stage_pages(spark, sf)).select("url", "html")
+    p = spark.read.parquet(stage_pages()).select("url", "html")
     blocks = p.select("url", F.regexp_extract_all(
         F.decode("html", "UTF-8"), F.lit(r"<p>(.*?)</p>"), 1).alias("blocks"))
     kept = blocks.select(
@@ -251,7 +254,6 @@ def q_stream_dedup(spark: SparkSession, sf: str) -> DataFrame:
     key across the cluster (RocksDB-backed state store in production);
     in a continuous run a watermark on warc_ts bounds it — unbounded here
     only because the staged input is finite."""
-    from .sources.pages import stage_stream_dedup
     staged = stage_stream_dedup()
     schema = spark.read.parquet(staged).schema
     stream = (spark.readStream.schema(schema)
@@ -731,8 +733,7 @@ def q_robots_filter(spark: SparkSession, sf: str) -> DataFrame:
     url here; <= rule-list depth in general). Ties are impossible by
     construction: per host and per length, at most one prefix matches
     a given path, so max_by on plen is deterministic."""
-    from .queries import stage_pages
-    p = (spark.read.parquet(stage_pages(spark, sf))
+    p = (spark.read.parquet(stage_pages())
          .select("url",
                  F.regexp_extract("url", r"^https://([^/]+)/", 1)
                  .alias("host"),
@@ -774,12 +775,11 @@ def q_robots_filter(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _robots_filter_sql() -> str:
-    from .sources.pages import STAGE_PATH
     return f"""
 WITH p AS (SELECT url,
              regexp_extract(url, '^https://([^/]+)/', 1) AS host,
              regexp_extract(url, '^https://[^/]+/(.*)$', 1) AS path
-           FROM read_parquet('{STAGE_PATH}/*.parquet')),
+           FROM read_parquet('{_PAGES_STAGE}/*.parquet')),
 hx AS (SELECT CASE WHEN hi = 0 THEN 'bighost.example'
                    ELSE 'host' || hi || '.example' END AS host, hi, c
        FROM (SELECT i % {_RB_HOSTS} AS hi, i // {_RB_HOSTS} AS c
@@ -835,8 +835,7 @@ def q_crawl_schedule(spark: SparkSession, sf: str) -> DataFrame:
     partition, no global sort); production bounds the per-host queue
     with exactly this window (rank <= depth cap). Skew is handled
     upstream by the depth cap, not by key engineering."""
-    from .queries import stage_pages
-    p = (spark.read.parquet(stage_pages(spark, sf))
+    p = (spark.read.parquet(stage_pages())
          .select("url",
                  F.regexp_extract("url", r"^https://([^/]+)/", 1)
                  .alias("host"))
@@ -857,11 +856,10 @@ def q_crawl_schedule(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _crawl_schedule_sql() -> str:
-    from .sources.pages import STAGE_PATH
     return f"""
 WITH p AS (SELECT DISTINCT url,
              regexp_extract(url, '^https://([^/]+)/', 1) AS host
-           FROM read_parquet('{STAGE_PATH}/*.parquet')),
+           FROM read_parquet('{_PAGES_STAGE}/*.parquet')),
 r AS (SELECT url, host,
         (length(host) % 5 + 1)::BIGINT AS crawl_delay,
         (row_number() OVER (PARTITION BY host ORDER BY
@@ -960,7 +958,6 @@ def q_token_budget_mix(spark: SparkSession, sf: str) -> DataFrame:
     bounded window per source partition (at extreme scale the cumulative
     cutoff becomes a quantile-estimated token-rank threshold — no global
     sort either way)."""
-    from .queries_ref import _idiv
     d = load(spark, sf, "documents").select("doc_id", "source", "text")
     toks = F.filter(F.split("text", " "), lambda x: x != F.lit(""))
     per = d.select("doc_id", "source",
@@ -1027,7 +1024,6 @@ def q_shard_manifest(spark: SparkSession, sf: str) -> DataFrame:
     oracle replays the offsets as a flat SQL window sum — the same
     equivalence the operator's own tests pin."""
     from .operators.tpos import measure_offsets_hierarchical
-    from .queries_ref import _idiv
     d = load(spark, sf, "documents").select("doc_id", "text")
     sized = d.select(
         "doc_id",
@@ -1093,9 +1089,7 @@ def q_mojibake_flags(spark: SparkSession, sf: str) -> DataFrame:
     100 TB shape: a pure per-row codegen map (replace + regexp_count,
     no HOF, no shuffle, no UDF) — the scan's pushed-projection is (url,
     text) and the stage fuses into whatever runs next."""
-    from .queries import stage_pages
-    from .queries_ref import _idiv
-    p = spark.read.parquet(stage_pages(spark, sf)).select("url", "text")
+    p = spark.read.parquet(stage_pages()).select("url", "text")
     b = F.substring(F.md5("url"), 1, 1)
     dmg = (F.when(b.isin("0", "1", "2"),
                   F.replace(F.col("text"), F.lit("a"), F.lit(_MJ_UTF8)))
@@ -1126,7 +1120,6 @@ q_mojibake_flags.__doc__ = q_mojibake_flags.__doc__.format(ppm=_MJ_PPM)
 
 
 def _mojibake_flags_sql() -> str:
-    from .sources.pages import STAGE_PATH
     return f"""
 WITH d AS (SELECT url,
         CASE WHEN substr(md5(url), 1, 1) IN ('0', '1', '2')
@@ -1136,7 +1129,7 @@ WITH d AS (SELECT url,
              WHEN substr(md5(url), 1, 1) IN ('6', '7', '8')
                THEN replace(text, 'i', '{_MJ_REPL}')
              ELSE text END AS t
-      FROM read_parquet('{STAGE_PATH}/*.parquet')),
+      FROM read_parquet('{_PAGES_STAGE}/*.parquet')),
 c AS (SELECT url,
         len(regexp_extract_all(t, 'Ã.'))::BIGINT AS n_double_utf8,
         len(regexp_extract_all(t, 'â€.'))::BIGINT AS n_win1252,
@@ -1149,6 +1142,71 @@ SELECT url, n_double_utf8, n_win1252, n_repl,
        ((1000000 * (n_double_utf8 * 2 + n_win1252 * 3 + n_repl))
         // greatest(n_bytes, 1) >= {_MJ_PPM}) AS flagged
 FROM c
+"""
+
+
+# ------------- per-host crawl policy (url_filter x pages_pipeline x mojibake)
+
+def q_host_reputation(spark: SparkSession, sf: str) -> DataFrame:
+    """Per-host crawl-policy reputation table — the capstone join a crawl
+    operator actually acts on: for every host, the page count, kernel
+    quality keep rate, mojibake (encoding-damage) rate, and
+    blocklist/path-filter hit rate (each integer ppm), folded into a
+    policy tier — `blocked` (every page URL-filtered out), `quarantine`
+    (keep rate under 30% or mojibake over 20%), else `healthy`. All
+    three per-url signal stacks are the proven oracle-backed queries
+    (`pages_pipeline`, `mojibake_flags`, `url_filter`); the twin nests
+    their SQL verbatim, so the composition is exactly as trustworthy as
+    its parts (the corpus_manifest discipline, host-level).
+
+    100 TB shape: three url-keyed streams join on the at-rest bucket
+    key (Exchange-free under bucketed layout), then ONE host-keyed
+    map-side-combined rollup; tiering is per-row codegen on the
+    host-cardinality aggregate."""
+    kd = (q_pages_pipeline(spark, sf)
+          .select("url", F.col("keep").alias("q_keep")))
+    mj = (q_mojibake_flags(spark, sf)
+          .select("url", F.col("flagged").alias("mj_flag")))
+    uf = (q_url_filter(spark, sf)
+          .select("url", "host", F.col("keep").alias("u_keep")))
+    j = uf.join(kd, "url").join(mj, "url")
+    g = j.groupBy("host").agg(
+        F.count("*").cast("long").alias("n_pages"),
+        F.expr("sum(CASE WHEN q_keep THEN 1 ELSE 0 END) * 1000000"
+               " div count(*)").cast("long").alias("keep_ppm"),
+        F.expr("sum(CASE WHEN mj_flag THEN 1 ELSE 0 END) * 1000000"
+               " div count(*)").cast("long").alias("mojibake_ppm"),
+        F.expr("sum(CASE WHEN NOT u_keep THEN 1 ELSE 0 END) * 1000000"
+               " div count(*)").cast("long").alias("blocked_ppm"))
+    tier = (F.when(F.col("blocked_ppm") >= 1_000_000, F.lit("blocked"))
+            .when((F.col("keep_ppm") < 300_000)
+                  | (F.col("mojibake_ppm") >= 200_000),
+                  F.lit("quarantine"))
+            .otherwise(F.lit("healthy")))
+    return g.select("host", "n_pages", "keep_ppm", "mojibake_ppm",
+                    "blocked_ppm", tier.alias("tier"))
+
+
+def _host_reputation_sql() -> str:
+    return f"""
+SELECT host, n_pages, keep_ppm, mojibake_ppm, blocked_ppm,
+       CASE WHEN blocked_ppm >= 1000000 THEN 'blocked'
+            WHEN keep_ppm < 300000 OR mojibake_ppm >= 200000
+              THEN 'quarantine'
+            ELSE 'healthy' END AS tier
+FROM (
+  SELECT u.host, count(*)::BIGINT AS n_pages,
+         (sum(CASE WHEN q.keep THEN 1 ELSE 0 END) * 1000000
+          // count(*))::BIGINT AS keep_ppm,
+         (sum(CASE WHEN m.flagged THEN 1 ELSE 0 END) * 1000000
+          // count(*))::BIGINT AS mojibake_ppm,
+         (sum(CASE WHEN NOT u.keep THEN 1 ELSE 0 END) * 1000000
+          // count(*))::BIGINT AS blocked_ppm
+  FROM ({_url_filter_sql()}) u
+  JOIN ({_pages_pipeline_sql()}) q ON u.url = q.url
+  JOIN ({_mojibake_flags_sql()}) m ON u.url = m.url
+  GROUP BY u.host
+) h
 """
 
 
@@ -1299,8 +1357,7 @@ def q_charset_sniff(spark: SparkSession, sf: str) -> DataFrame:
     slicing), the meta scan decodes lazily behind the UTF-16 guard
     (ANSI decode of non-UTF-8 bytes throws, and never runs), no
     shuffle, no UDF."""
-    from .queries import stage_pages
-    p = spark.read.parquet(stage_pages(spark, sf)).select("url", "html")
+    p = spark.read.parquet(stage_pages()).select("url", "html")
     b = F.substring(F.md5("url"), 1, 1)
     s_meta = F.replace(F.decode("html", "UTF-8"), F.lit("<head>"),
                        F.lit("<head>" + _CS_META))
@@ -1338,7 +1395,6 @@ def q_charset_sniff(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _charset_sniff_sql() -> str:
-    from .sources.pages import STAGE_PATH
     return f"""
 WITH v AS (SELECT url,
         CASE WHEN substr(md5(url), 1, 1) IN ('0', '1')
@@ -1348,7 +1404,7 @@ WITH v AS (SELECT url,
                THEN encode(replace(decode(html), '<head>',
                                    '<head>{_CS_META}'))
              ELSE html END AS blob
-      FROM read_parquet('{STAGE_PATH}/*.parquet')),
+      FROM read_parquet('{_PAGES_STAGE}/*.parquet')),
 d AS (SELECT url, blob, substr(upper(hex(blob)), 1, 6) AS h3 FROM v),
 e AS (SELECT url, h3,
         h3 = 'EFBBBF' AS p8,
@@ -1456,7 +1512,6 @@ def _simfold_sql(hv: str) -> str:
 
 
 def _simhash_hamming_sql() -> str:
-    from .queries_ref import _DOC_TOKS, _MD5H28
     h_plain = _MD5H28.format(s="s")
     h_salt = _MD5H28.format(s="'~' || s")
     mask = (1 << _SH_BAND_BITS) - 1
@@ -1605,8 +1660,7 @@ def q_cdx_index(spark: SparkSession, sf: str) -> DataFrame:
     append stream — bounded by design; a trillion-record crawl lifts
     the same running sum onto the 3-level hierarchical prefix sum in
     operators/tpos.py. No collect, no broadcast."""
-    from .queries import stage_pages
-    p = (spark.read.parquet(stage_pages(spark, sf))
+    p = (spark.read.parquet(stage_pages())
          .select("url", "warc_ts", "html"))
     n = F.octet_length("html").cast("long")
     hdr = F.concat(F.lit(_CDX_HDR), F.col("url"),
@@ -1629,14 +1683,13 @@ q_cdx_index.__doc__ = q_cdx_index.__doc__.format(sh=_CDX_SHARDS)
 
 
 def _cdx_index_sql() -> str:
-    from .sources.pages import STAGE_PATH
     crlf = "chr(13) || chr(10)"
     hdr = (f"'WARC/1.0' || {crlf} || 'WARC-Target-URI: ' || url || "
            f"{crlf} || 'Content-Length: ' || "
            f"octet_length(html)::VARCHAR || {crlf} || {crlf}")
     return f"""
 WITH p AS (SELECT url, warc_ts, html
-           FROM read_parquet('{STAGE_PATH}/*.parquet')),
+           FROM read_parquet('{_PAGES_STAGE}/*.parquet')),
 r AS (SELECT url, warc_ts,
         ((strpos('0123456789abcdef', substr(md5(url), 1, 1)) - 1) * 16
          + (strpos('0123456789abcdef', substr(md5(url), 2, 1)) - 1))
@@ -1678,8 +1731,7 @@ def q_zorder_layout(spark: SparkSession, sf: str) -> DataFrame:
     is repartitionByRange(zkey), a sampled range shuffle, never a global
     row_number); the manifest itself is ONE map-side-combined hash agg
     to at most 2^{tb} rows. No window, no broadcast, no collect."""
-    from .queries import stage_pages
-    p = (spark.read.parquet(stage_pages(spark, sf))
+    p = (spark.read.parquet(stage_pages())
          .select("url", "warc_ts"))
     host = F.regexp_extract("url", r"^https://([^/]+)/", 1)
     hb = F.conv(F.substring(F.md5(host), 1, 1), 16, 10).cast("long")
@@ -1706,7 +1758,6 @@ q_zorder_layout.__doc__ = q_zorder_layout.__doc__.format(
 
 
 def _zorder_layout_sql() -> str:
-    from .sources.pages import STAGE_PATH
     zbits = [f"(((day >> {i}) & 1) << {2 * i})" for i in range(_ZO_DBITS)]
     zbits += [f"(((hb >> {i}) & 1) << {2 * i + 1})"
               for i in range(_ZO_HBITS)]
@@ -1717,7 +1768,7 @@ WITH p AS (SELECT url,
                 regexp_extract(url, '^https://([^/]+)/', 1)), 1, 1))
               - 1)::BIGINT AS hb,
              (warc_ts::DATE - DATE '2024-03-01')::BIGINT AS day
-           FROM read_parquet('{STAGE_PATH}/*.parquet')),
+           FROM read_parquet('{_PAGES_STAGE}/*.parquet')),
 z AS (SELECT url, hb, day, ({zexpr})::BIGINT AS zkey FROM p)
 SELECT (zkey // {_ZO_GROUP})::BIGINT AS file_group,
        count(*)::BIGINT AS n_pages,
@@ -1748,8 +1799,7 @@ def q_dataset_diff(spark: SparkSession, sf: str) -> DataFrame:
     url-keyed full-outer shuffle join of (url, md5) rows — no broadcast
     by design; digests are computed map-side so text never shuffles.
     Status is a per-row codegen CASE on the join result."""
-    from .queries import stage_pages
-    p = spark.read.parquet(stage_pages(spark, sf)).select("url", "text")
+    p = spark.read.parquet(stage_pages()).select("url", "text")
     b = (F.conv(F.substring(F.md5("url"), 1, 1), 16, 10)
          .cast("long") % 16)
     a_side = p.select("url", F.md5(F.col("text")).alias("h_old"))
@@ -1775,12 +1825,11 @@ def q_dataset_diff(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _dataset_diff_sql() -> str:
-    from .sources.pages import STAGE_PATH
     bkt = ("(strpos('0123456789abcdef', substr(md5(url), 1, 1)) - 1)"
            " % 16")
     return f"""
 WITH p AS (SELECT url, text, {bkt} AS b
-           FROM read_parquet('{STAGE_PATH}/*.parquet')),
+           FROM read_parquet('{_PAGES_STAGE}/*.parquet')),
 a AS (SELECT url, md5(text) AS h_old FROM p),
 bb AS (SELECT url,
          md5(CASE WHEN b IN (2, 3) THEN text || ' [edited]'
@@ -2052,7 +2101,6 @@ def q_jsonl_ingest(spark: SparkSession, sf: str) -> DataFrame:
     corpus — on 100 TB an inference pass IS a full extra read); parse,
     unbase64, md5 and casts are all JVM-side per-row codegen — zero
     shuffle, zero Python."""
-    from .sources.pages import stage_jsonl
     path = stage_jsonl()
     j = spark.read.schema(_JSONL_SCHEMA).json(path)
     raw = F.unbase64("html_b64")
@@ -2066,7 +2114,6 @@ def q_jsonl_ingest(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _jsonl_ingest_sql() -> str:
-    from .sources.pages import JSONL_PATH
     return f"""
 SELECT url, warc_ts::TIMESTAMP AS ts, lang,
        octet_length(from_base64(html_b64))::BIGINT AS n_bytes,
@@ -2081,60 +2128,32 @@ FROM read_json('{JSONL_PATH}', format='newline_delimited',
 
 # ================================================================ registry
 
-QUERIES_WEB: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "pagerank": q_pagerank,
-    "boilerplate_blocks": q_boilerplate_blocks,
-    "cross_snapshot_dedup": q_cross_snapshot_dedup,
-    "stream_dedup": q_stream_dedup,
-    "bloom_dedup": q_bloom_dedup,
-    "lm_train_score": q_lm_train_score,
-    "hll_distinct": q_hll_distinct,
-    "cms_heavy_hitters": q_cms_heavy_hitters,
-    "anchor_texts": q_anchor_texts,
-    "robots_filter": q_robots_filter,
-    "crawl_schedule": q_crawl_schedule,
-    "redirect_resolve": q_redirect_resolve,
-    "token_budget_mix": q_token_budget_mix,
-    "shard_manifest": q_shard_manifest,
-    "mojibake_flags": q_mojibake_flags,
-    "hits_scores": q_hits_scores,
-    "charset_sniff": q_charset_sniff,
-    "simhash_hamming_pairs": q_simhash_hamming_pairs,
-    "label_prop_spam": q_label_prop_spam,
-    "cdx_index": q_cdx_index,
-    "zorder_layout": q_zorder_layout,
-    "dataset_diff": q_dataset_diff,
-    "refresh_priority": q_refresh_priority,
-    "jsonl_ingest": q_jsonl_ingest,
-    "stupid_backoff": q_stupid_backoff,
-    "char_entropy": q_char_entropy,
-}
-
-ORACLE_SQL_WEB: dict[str, str] = {
-    "pagerank": _pagerank_sql(),
-    "boilerplate_blocks": _SQL_BOILERPLATE_BLOCKS,
-    "cross_snapshot_dedup": _SQL_CROSS_SNAPSHOT_DEDUP,
-    "stream_dedup": _SQL_STREAM_DEDUP,
-    "bloom_dedup": _SQL_BLOOM_DEDUP,
-    "lm_train_score": _SQL_LM_TRAIN_SCORE,
-    "hll_distinct": _SQL_HLL_DISTINCT,
-    "cms_heavy_hitters": _SQL_CMS_HEAVY_HITTERS,
-    "anchor_texts": _SQL_ANCHOR_TEXTS,
-    "robots_filter": _robots_filter_sql(),
-    "crawl_schedule": _crawl_schedule_sql(),
-    "redirect_resolve": _redirect_resolve_sql(),
-    "token_budget_mix": _SQL_TOKEN_BUDGET_MIX,
-    "shard_manifest": _SQL_SHARD_MANIFEST,
-    "mojibake_flags": _mojibake_flags_sql(),
-    "hits_scores": _hits_sql(),
-    "charset_sniff": _charset_sniff_sql(),
-    "simhash_hamming_pairs": _simhash_hamming_sql(),
-    "label_prop_spam": _label_prop_sql(),
-    "cdx_index": _cdx_index_sql(),
-    "zorder_layout": _zorder_layout_sql(),
-    "dataset_diff": _dataset_diff_sql(),
-    "refresh_priority": _refresh_priority_sql(),
-    "jsonl_ingest": _jsonl_ingest_sql(),
-    "stupid_backoff": _SQL_STUPID_BACKOFF,
-    "char_entropy": _SQL_CHAR_ENTROPY,
-}
+REGISTRY = (
+    (q_pagerank, _pagerank_sql()),
+    (q_boilerplate_blocks, _SQL_BOILERPLATE_BLOCKS),
+    (q_cross_snapshot_dedup, _SQL_CROSS_SNAPSHOT_DEDUP),
+    (q_stream_dedup, _SQL_STREAM_DEDUP),
+    (q_bloom_dedup, _SQL_BLOOM_DEDUP),
+    (q_lm_train_score, _SQL_LM_TRAIN_SCORE),
+    (q_hll_distinct, _SQL_HLL_DISTINCT),
+    (q_cms_heavy_hitters, _SQL_CMS_HEAVY_HITTERS),
+    (q_anchor_texts, _SQL_ANCHOR_TEXTS),
+    (q_robots_filter, _robots_filter_sql()),
+    (q_crawl_schedule, _crawl_schedule_sql()),
+    (q_redirect_resolve, _redirect_resolve_sql()),
+    (q_token_budget_mix, _SQL_TOKEN_BUDGET_MIX),
+    (q_shard_manifest, _SQL_SHARD_MANIFEST),
+    (q_mojibake_flags, _mojibake_flags_sql()),
+    (q_host_reputation, _host_reputation_sql()),
+    (q_hits_scores, _hits_sql()),
+    (q_charset_sniff, _charset_sniff_sql()),
+    (q_simhash_hamming_pairs, _simhash_hamming_sql()),
+    (q_label_prop_spam, _label_prop_sql()),
+    (q_cdx_index, _cdx_index_sql()),
+    (q_zorder_layout, _zorder_layout_sql()),
+    (q_dataset_diff, _dataset_diff_sql()),
+    (q_refresh_priority, _refresh_priority_sql()),
+    (q_jsonl_ingest, _jsonl_ingest_sql()),
+    (q_stupid_backoff, _SQL_STUPID_BACKOFF),
+    (q_char_entropy, _SQL_CHAR_ENTROPY),
+)

@@ -17,11 +17,17 @@ two agree row-for-row at any scale.
 
 from __future__ import annotations
 
+import base64
 import datetime as dt
 import hashlib
+import json
+import os
+import shutil
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
 
 from ..functions.text import extract_text
 
@@ -109,10 +115,10 @@ def make_pages_pdf(n: int, seed: int = 42, start_id: int = 0) -> pd.DataFrame:
 PAGES_SCHEMA = ("url string, warc_ts timestamp, html binary, "
                 "text string, lang string")
 
-# fixed staging path for oracle-twinned queries over pages: Spark writes
-# here (overwrite per run), DuckDB twins read the same files back. The
-# staged table always has STAGE_N rows regardless of sf (see
-# queries.stage_pages) so any staged dir is valid for any oracle run.
+# fixed staging path for oracle-twinned queries over pages: the Spark
+# queries and their DuckDB twins read the same files (see stage_pages). The
+# staged table always has STAGE_N rows regardless of sf, so any staged dir
+# is valid for any oracle run.
 STAGE_PATH = "/tmp/ksana_oracle_pages/current.parquet"
 STAGE_N = 400
 
@@ -144,6 +150,74 @@ def pages_df(spark, n: int, seed: int = 42, slices: int | None = None):
     return rng.select(F.col("id")).mapInPandas(gen, schema=PAGES_SCHEMA)
 
 
+# ---- staged inputs: pure pandas + pyarrow writers, one content sentinel
+
+
+def _ends_match(n: int, ends: list, n_expected: int, last_id: int,
+                key) -> bool:
+    """The sentinel every stage is trusted by: `n_expected` rows, and the
+    first and last stored rows (`ends`, already passed through `key`)
+    equal to `key` of the generator's rows 0 and `last_id`, regenerated
+    and compared byte for byte. A drift that keeps the cardinality is
+    restaged, never reused by both engines."""
+    exp = [key(make_pages_pdf(1, seed=42, start_id=i).iloc[0])
+           for i in (0, last_id)]
+    return n == n_expected and ends == exp
+
+
+def _url_text(rec) -> tuple:
+    return rec["url"], rec["text"]
+
+
+def _parquet_stage_ok(path: str, n_expected: int, last_id: int,
+                      ts_type: str) -> bool:
+    """`_ends_match` over a parquet stage dir (row count from the footers,
+    first row of the first part, last row of the last part), plus the
+    physical type of `warc_ts`: a stage Spark cannot read is rewritten."""
+    try:
+        parts = sorted(os.path.join(path, f) for f in os.listdir(path)
+                       if f.endswith(".parquet"))
+        files = [pq.ParquetFile(p) for p in parts]
+        schema = files[0].schema
+        ts = schema.column(schema.names.index("warc_ts")).physical_type
+        head = files[0].read(columns=["url", "text"]).to_pylist()[0]
+        tail = files[-1].read(columns=["url", "text"]).to_pylist()[-1]
+    except Exception:  # missing/unreadable/partial stage -> restage
+        return False
+    n = sum(f.metadata.num_rows for f in files)
+    return ts == ts_type and _ends_match(
+        n, [_url_text(head), _url_text(tail)], n_expected, last_id,
+        _url_text)
+
+
+def _restage(path: str) -> None:
+    shutil.rmtree(path, ignore_errors=True)
+    os.makedirs(path)
+
+
+def stage_pages() -> str:
+    """Stage the STAGE_N deterministic pages at STAGE_PATH and return it.
+    Every query over pages reads the staged parquet, so its DuckDB twin
+    sees byte-identical input via read_parquet on the same files, and an
+    oracle evaluated before its Spark twin (`oracle_sql()` stages first)
+    reads the same table. Pure pandas + pyarrow, so no SparkSession is
+    needed. `warc_ts` is stored as INT96, the type Spark itself writes:
+    Spark rejects the TIMESTAMP(NANOS) pyarrow writes by default.
+
+    Idempotent: a stage that passes the sentinel is reused, not
+    rewritten. A composition query whose sub-stacks each stage
+    (host_reputation joins three) would otherwise replace the files
+    under the earlier DataFrames' file lists mid-plan."""
+    if _parquet_stage_ok(STAGE_PATH, STAGE_N, STAGE_N - 1, "INT96"):
+        return STAGE_PATH
+    _restage(STAGE_PATH)
+    t = pa.Table.from_pandas(make_pages_pdf(STAGE_N, seed=42),
+                             preserve_index=False)
+    pq.write_table(t, os.path.join(STAGE_PATH, "part-00000.parquet"),
+                   use_deprecated_int96_timestamps=True)
+    return STAGE_PATH
+
+
 # ---- stream-dedup staged input: pages + deterministic re-crawl duplicates
 
 STREAM_DEDUP_PATH = "/tmp/ksana_stream_dedup/current.parquet"
@@ -158,48 +232,15 @@ def stage_stream_dedup() -> str:
     maxFilesPerTrigger=1 stream sees the duplicates in a LATER micro-batch
     than the originals (cross-batch dedup state, not within-batch).
 
-    Pure pandas + pyarrow (no SparkSession) so the Spark query and the
-    DuckDB-oracle pre-seed in __spark_entry__ share it verbatim; content is
-    a pure function of the seed, and a stale dir is validated by row count
-    AND a content fingerprint — two sentinel rows regenerated and compared
-    byte-for-byte, so a cardinality-preserving generator/seed drift is
-    rewritten, never silently reused by both engines (ADVICE r4 #2)."""
-    import os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    def _sentinels_match() -> bool:
-        try:
-            p0 = pq.read_table(
-                os.path.join(STREAM_DEDUP_PATH, "part-00000.parquet"),
-                columns=["url", "text"]).to_pandas()
-            p1 = pq.read_table(
-                os.path.join(STREAM_DEDUP_PATH, "part-00001.parquet"),
-                columns=["url", "text"]).to_pandas()
-        except Exception:  # unreadable/renamed parts -> restage
-            return False
-        exp0 = make_pages_pdf(1, seed=42, start_id=0)
-        last_re = ((STAGE_N - 1) // STREAM_DEDUP_RECRAWL_STEP
-                   ) * STREAM_DEDUP_RECRAWL_STEP
-        exp1 = make_pages_pdf(1, seed=42, start_id=last_re)
-        return (len(p0) > 0 and len(p1) > 0
-                and p0.iloc[0]["url"] == exp0["url"][0]
-                and p0.iloc[0]["text"] == exp0["text"][0]
-                and p1.iloc[-1]["url"] == exp1["url"][0]
-                and p1.iloc[-1]["text"] == exp1["text"][0])
-
-    if os.path.isdir(STREAM_DEDUP_PATH):
-        parts = [os.path.join(STREAM_DEDUP_PATH, f)
-                 for f in os.listdir(STREAM_DEDUP_PATH)
-                 if f.endswith(".parquet")]
-        if parts:
-            n = sum(pq.ParquetFile(p).metadata.num_rows for p in parts)
-            if n == STREAM_DEDUP_N and len(parts) >= 2 and _sentinels_match():
-                return STREAM_DEDUP_PATH
-            for p in parts:
-                os.remove(p)
-    os.makedirs(STREAM_DEDUP_PATH, exist_ok=True)
+    Pure pandas + pyarrow, shared verbatim by the Spark query and
+    `oracle_sql()`; a stale dir is checked by the stage sentinel (the last
+    row is the re-crawl of the last re-crawled page)."""
+    last_re = ((STAGE_N - 1) // STREAM_DEDUP_RECRAWL_STEP
+               ) * STREAM_DEDUP_RECRAWL_STEP
+    if _parquet_stage_ok(STREAM_DEDUP_PATH, STREAM_DEDUP_N, last_re,
+                         "INT64"):
+        return STREAM_DEDUP_PATH
+    _restage(STREAM_DEDUP_PATH)
     base = make_pages_pdf(STAGE_N, seed=42)
     recrawl = base.iloc[::STREAM_DEDUP_RECRAWL_STEP].copy()
     recrawl["warc_ts"] = recrawl["warc_ts"] + pd.Timedelta(days=1)
@@ -226,44 +267,26 @@ def stage_jsonl() -> str:
     ship in (Dolma, RedPajama, FineWeb dumps are jsonl.gz; WARC payloads
     ride as base64 strings). Pure python/pandas (no SparkSession) so the
     Spark reader and the DuckDB read_json twin consume byte-identical
-    files; a pre-existing stage is trusted only after a sentinel-row
-    content check (the stage_stream_dedup discipline)."""
-    import base64
-    import json
-    import os
-
-    def _row(i: int, pdf) -> dict:
-        return {
-            "url": pdf["url"][0],
-            "warc_ts": pdf["warc_ts"][0].isoformat(),
-            "html_b64": base64.b64encode(bytes(pdf["html"][0])).decode(),
-            "text": pdf["text"][0],
-            "lang": pdf["lang"][0],
-        }
-
-    def _line(i: int) -> str:
-        return json.dumps(_row(i, make_pages_pdf(1, seed=42, start_id=i)),
-                          ensure_ascii=True, separators=(",", ":"))
+    files; a pre-existing stage is trusted only after the stage sentinel
+    compares its first and last lines."""
+    def _row(rec) -> str:
+        return json.dumps({
+            "url": rec["url"],
+            "warc_ts": rec["warc_ts"].isoformat(),
+            "html_b64": base64.b64encode(bytes(rec["html"])).decode(),
+            "text": rec["text"],
+            "lang": rec["lang"],
+        }, ensure_ascii=True, separators=(",", ":"))
 
     if os.path.isfile(JSONL_PATH):
         with open(JSONL_PATH, encoding="utf-8") as f:
             lines = f.read().splitlines()
-        if (len(lines) == STAGE_N and lines[0] == _line(0)
-                and lines[-1] == _line(STAGE_N - 1)):
+        if lines and _ends_match(len(lines), [lines[0], lines[-1]],
+                                 STAGE_N, STAGE_N - 1, _row):
             return JSONL_PATH
     os.makedirs(os.path.dirname(JSONL_PATH), exist_ok=True)
     pdf = make_pages_pdf(STAGE_N, seed=42)
     with open(JSONL_PATH + ".tmp", "w", encoding="utf-8") as f:
-        for i in range(STAGE_N):
-            row = {
-                "url": pdf["url"][i],
-                "warc_ts": pdf["warc_ts"][i].isoformat(),
-                "html_b64": base64.b64encode(
-                    bytes(pdf["html"][i])).decode(),
-                "text": pdf["text"][i],
-                "lang": pdf["lang"][i],
-            }
-            f.write(json.dumps(row, ensure_ascii=True,
-                               separators=(",", ":")) + "\n")
+        f.writelines(_row(rec) + "\n" for rec in pdf.to_dict("records"))
     os.replace(JSONL_PATH + ".tmp", JSONL_PATH)
     return JSONL_PATH

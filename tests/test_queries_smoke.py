@@ -90,39 +90,73 @@ def test_quality_classifier_feature_count_and_sign_rule(spark):
         assert r.keep == (r.n_feats > 0 and r.qc_score >= 0), r
 
 
-def test_stage_pages_idempotent_reuse_and_drift_restage(spark):
+def test_stage_pages_idempotent_reuse_and_drift_restage():
     """stage_pages must REUSE a sentinel-valid stage (composition queries
     whose sub-stacks each stage — host_reputation joins three — would
     otherwise invalidate earlier DataFrames' captured file lists
-    mid-plan) and must RESTAGE when content drifts even at matching
-    cardinality (the ADVICE r4 #2 sentinel discipline)."""
+    mid-plan) and must RESTAGE when the first or the last row drifts at
+    matching cardinality, or when warc_ts is stored in a type Spark
+    cannot read."""
     import os
+    import shutil
 
+    import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from ksana_corpus_builder_spark.queries import stage_pages
-    from ksana_corpus_builder_spark.sources.pages import STAGE_PATH
+    from ksana_corpus_builder_spark.sources.pages import (STAGE_N,
+                                                          STAGE_PATH,
+                                                          stage_pages)
 
-    path = stage_pages(spark, SF)
-    parts = sorted(os.path.join(path, f) for f in os.listdir(path)
-                   if f.endswith(".parquet"))
-    mtimes = {p: os.path.getmtime(p) for p in parts}
+    def parts():
+        return sorted(os.path.join(STAGE_PATH, f)
+                      for f in os.listdir(STAGE_PATH)
+                      if f.endswith(".parquet"))
+
+    shutil.rmtree(STAGE_PATH, ignore_errors=True)
+    assert stage_pages() == STAGE_PATH
+    mtimes = {p: os.path.getmtime(p) for p in parts()}
     # second call: valid stage -> byte-identical reuse, no rewrite
-    assert stage_pages(spark, SF) == STAGE_PATH
-    parts2 = sorted(os.path.join(path, f) for f in os.listdir(path)
-                    if f.endswith(".parquet"))
-    assert parts2 == parts
-    assert all(os.path.getmtime(p) == mtimes[p] for p in parts)
-    # drift: corrupt the sentinel row's file (keep cardinality) -> restage
-    first = parts[0]
-    t = pq.read_table(first)
-    pdf = t.to_pandas()
-    pdf.loc[0, "text"] = "DRIFTED " + str(pdf.loc[0, "text"])
-    import pyarrow as pa
-    pq.write_table(pa.Table.from_pandas(pdf, schema=t.schema), first)
-    assert stage_pages(spark, SF) == STAGE_PATH
-    back = pq.read_table(
-        sorted(os.path.join(path, f) for f in os.listdir(path)
-               if f.endswith(".parquet"))[0],
-        columns=["text"]).to_pandas()
-    assert not str(back.iloc[0]["text"]).startswith("DRIFTED")
+    assert stage_pages() == STAGE_PATH
+    assert {p: os.path.getmtime(p) for p in parts()} == mtimes
+
+    def restage_after(drift_row, **write_kw):
+        (part,) = parts()
+        pdf = pq.read_table(part).to_pandas()
+        if drift_row is not None:
+            pdf.loc[pdf.index[drift_row], "text"] = "DRIFTED"
+        pq.write_table(pa.Table.from_pandas(pdf, preserve_index=False),
+                       part, **write_kw)
+        assert stage_pages() == STAGE_PATH
+        return pq.read_table(parts()[0]).to_pandas()
+
+    for row in (0, -1):  # content drift, same cardinality and types
+        back = restage_after(row, use_deprecated_int96_timestamps=True)
+        assert len(back) == STAGE_N
+        assert back["text"].iloc[row] != "DRIFTED"
+    # same content, warc_ts as TIMESTAMP(NANOS): Spark cannot read it
+    restage_after(None)
+    schema = pq.ParquetFile(parts()[0]).schema
+    assert schema.column(schema.names.index("warc_ts")).physical_type \
+        == "INT96"
+
+
+def test_oracle_first_stage_is_spark_readable(spark):
+    """oracle_sql() stages the pages before any Spark query has run, and
+    the Spark queries then reuse that stage: it must read back in Spark
+    with the pages schema and the generator's rows."""
+    import shutil
+
+    from ksana_corpus_builder_spark.sources.pages import (STAGE_N,
+                                                          STAGE_PATH,
+                                                          pages_df)
+
+    shutil.rmtree(STAGE_PATH, ignore_errors=True)
+    entrymod.oracle_sql()
+    staged = spark.read.parquet(STAGE_PATH)
+    assert staged.schema.simpleString() == (
+        "struct<url:string,warc_ts:timestamp,html:binary,text:string,"
+        "lang:string>")
+    gen = pages_df(spark, STAGE_N)
+    assert staged.exceptAll(gen).count() == 0
+    assert gen.exceptAll(staged).count() == 0
+    assert QS["pages_pipeline"](spark, SF).count() == STAGE_N

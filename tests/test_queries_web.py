@@ -11,6 +11,7 @@ import numpy as np
 import pandas as pd
 
 from ksana_corpus_builder_spark import queries_web as qw
+from ksana_corpus_builder_spark.sources.pages import stage_pages
 
 SF = "/root/testdata/sf0.001"
 
@@ -78,8 +79,7 @@ def test_boilerplate_blocks_pandas_replay(spark):
     over the same staged html bytes."""
     import re
 
-    from ksana_corpus_builder_spark.queries import stage_pages
-    staged = stage_pages(spark, SF)
+    staged = stage_pages()
     pdf = pd.read_parquet(staged, columns=["url", "html"])
     got = {r.url: r for r in qw.q_boilerplate_blocks(spark, SF).collect()}
     assert len(got) == len(pdf)
@@ -148,9 +148,8 @@ def test_intra_line_dedup_invariants(spark):
 
 def test_intra_line_dedup_pandas_replay(spark):
     """Byte-exact pandas replay: first occurrence wins, order preserved."""
-    from ksana_corpus_builder_spark.queries import stage_pages
     from ksana_corpus_builder_spark.queries_ref import q_intra_line_dedup
-    staged = stage_pages(spark, SF)
+    staged = stage_pages()
     got = {r.url: r for r in q_intra_line_dedup(spark, SF).collect()}
     pdf = pd.read_parquet(staged, columns=["url", "text"])
     for _, row in pdf.iterrows():
@@ -170,9 +169,8 @@ def test_c4_line_filter_pandas_replay(spark):
     """Byte-exact pandas/hashlib replay of the C4 line rules, including
     the md5-derived terminal punctuation; both predicate branches must
     fire somewhere in the corpus."""
-    from ksana_corpus_builder_spark.queries import stage_pages
     from ksana_corpus_builder_spark.queries_ref import q_c4_line_filter
-    staged = stage_pages(spark, SF)
+    staged = stage_pages()
     got = {r.url: r for r in q_c4_line_filter(spark, SF).collect()}
     pdf = pd.read_parquet(staged, columns=["url", "text"])
     any_punct_fail = any_words_fail = False
@@ -557,9 +555,7 @@ def test_robots_filter_longest_match_replay(spark):
     """Longest-prefix-match resolution (most specific rule wins, default
     allow) equals an explicit Python replay, and the fixture exercises
     the no-match, 1-char, and 2-char-override branches."""
-    from ksana_corpus_builder_spark.queries import stage_pages
-
-    staged = stage_pages(spark, SF)
+    staged = stage_pages()
     pdf = pd.read_parquet(staged, columns=["url"])
     rules = _robots_rules()
     got = {r.url: r for r in qw.q_robots_filter(spark, SF).collect()}
@@ -589,11 +585,10 @@ def test_dup_span_cut_python_replay(spark):
     import re
     from collections import defaultdict
 
-    from ksana_corpus_builder_spark.queries import stage_pages
     from ksana_corpus_builder_spark.queries_ref import (_SPAN_S, _SPAN_W,
                                                         q_dup_span_cut)
 
-    staged = stage_pages(spark, SF)
+    staged = stage_pages()
     pdf = pd.read_parquet(staged, columns=["url", "text"])
     toks_by_url = {}
     for url, text in zip(pdf["url"], pdf["text"]):
@@ -675,9 +670,7 @@ def test_crawl_schedule_politeness_replay(spark):
     per-host priority queue, the politeness invariant holds (same-host
     fetches are exactly crawl_delay apart), and the generator's host skew
     shows up as bighost dominating the makespan."""
-    from ksana_corpus_builder_spark.queries import stage_pages
-
-    staged = stage_pages(spark, SF)
+    staged = stage_pages()
     pdf = pd.read_parquet(staged, columns=["url"]).drop_duplicates()
     by_host: dict[str, list[tuple[int, str]]] = {}
     for url in pdf["url"]:
@@ -707,10 +700,9 @@ def test_gopher_rules_pandas_replay(spark):
     listy-page override; every rule must fail somewhere in the corpus
     (all fourteen branches live)."""
     import re
-    from ksana_corpus_builder_spark.queries import stage_pages
     from ksana_corpus_builder_spark.queries_ref import (
         _GOPHER_STOPS, q_gopher_rules)
-    staged = stage_pages(spark, SF)
+    staged = stage_pages()
     got = {r.url: r for r in q_gopher_rules(spark, SF).collect()}
     pdf = pd.read_parquet(staged, columns=["url", "text"])
     assert len(got) == len(pdf)
@@ -772,9 +764,8 @@ def test_gopher_dup_lines_pandas_replay(spark):
     """Byte-exact pandas/hashlib replay of the Gopher line-repetition
     gates, including the md5-derived doubled-line "templated chrome"
     pages; both keep branches must fire."""
-    from ksana_corpus_builder_spark.queries import stage_pages
     from ksana_corpus_builder_spark.queries_ref import q_gopher_dup_lines
-    staged = stage_pages(spark, SF)
+    staged = stage_pages()
     got = {r.url: r for r in q_gopher_dup_lines(spark, SF).collect()}
     pdf = pd.read_parquet(staged, columns=["url", "text"])
     assert len(got) == len(pdf)
@@ -811,9 +802,8 @@ def test_normalized_dedup_pandas_replay(spark):
     must exist naturally (no derived input) and every group keeps
     exactly one page."""
     import re
-    from ksana_corpus_builder_spark.queries import stage_pages
     from ksana_corpus_builder_spark.queries_ref import q_normalized_dedup
-    staged = stage_pages(spark, SF)
+    staged = stage_pages()
     got = {r.url: r for r in q_normalized_dedup(spark, SF).collect()}
     pdf = pd.read_parquet(staged, columns=["url", "text"])
     assert len(got) == len(pdf)

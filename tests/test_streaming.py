@@ -110,9 +110,9 @@ def test_sessionize_stateful_equals_batch(spark, tmp_path):
     got = {r.user_id: (r.n_events, r.n_sessions)
            for r in spark.table(name).collect()}
 
-    from ksana_corpus_builder_spark.queries import QUERIES
+    import __spark_entry__ as entrymod
     exp = {r.user_id: (r.n_events, r.n_sessions)
-           for r in QUERIES["sessionize"](spark, SF).collect()}
+           for r in entrymod.queries()["sessionize"](spark, SF).collect()}
     assert got == exp and len(got) > 0
 
 

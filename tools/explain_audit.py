@@ -17,7 +17,7 @@ from contextlib import redirect_stdout
 
 sys.path.insert(0, "/root/repo")
 
-from ksana_corpus_builder_spark.queries import QUERIES  # noqa: E402
+from __spark_entry__ import queries  # noqa: E402
 from ksana_corpus_builder_spark.session import get_spark  # noqa: E402
 
 SF = "/root/testdata/sf0.01"
@@ -304,7 +304,7 @@ EXPECT_NOHINT: dict[str, list[str]] = {
 
 
 def plan_of(name: str, spark) -> str:
-    df = QUERIES[name](spark, SF)
+    df = queries()[name](spark, SF)
     buf = io.StringIO()
     with redirect_stdout(buf):
         df.explain("formatted")
