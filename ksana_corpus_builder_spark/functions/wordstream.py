@@ -57,11 +57,12 @@ class WordStream:
 
     @classmethod
     def from_tokens(cls, tokens: list[str], lens: np.ndarray,
-                    surrogates: bool) -> WordStream:
+                    hash_unsafe: bool) -> WordStream:
         """Flat token sequence + tokens per doc -> WordStream.
-        ``surrogates``: whether any token may hold a lone surrogate."""
+        ``hash_unsafe``: whether any token may hold a lone surrogate or NUL
+        (see :func:`_factorize`)."""
         n = len(lens)
-        codes, uniq = _factorize(tokens, surrogates)
+        codes, uniq = _factorize(tokens, hash_unsafe)
         starts = np.zeros(n, np.int64)
         if n:
             np.cumsum(lens[:-1], out=starts[1:])
@@ -117,15 +118,16 @@ class WordStream:
 
 
 def _factorize(values: list[str],
-               surrogates: bool) -> tuple[np.ndarray, np.ndarray]:
+               hash_unsafe: bool) -> tuple[np.ndarray, np.ndarray]:
     """pd.factorize of a list of str -> (codes, uniques). pandas' string
-    hash table can conflate strings that hold lone surrogates, so when
-    ``surrogates`` is set their surrogatepass UTF-8 bytes are factorized
+    hash table can conflate strings that hold lone surrogates, and reads
+    strings as NUL-terminated (so "\\x00" and "\\x00the" collide); when
+    ``hash_unsafe`` is set their surrogatepass UTF-8 bytes are factorized
     instead (a rare per-value path)."""
     flat = np.array(values, dtype=object)
     if not flat.size:
         return np.zeros(0, np.int64), np.zeros(0, object)
-    if not surrogates:
+    if not hash_unsafe:
         codes, uniq = pd.factorize(flat)
         return codes, np.asarray(uniq)
     codes, _ = pd.factorize(np.array(
@@ -134,7 +136,10 @@ def _factorize(values: list[str],
     return codes, flat[np.unique(codes, return_index=True)[1]]
 
 
-def _has_surrogates(s: str) -> bool:
+def _hash_unsafe(s: str) -> bool:
+    """Whether `s` holds a lone surrogate or NUL (see :func:`_factorize`)."""
+    if "\x00" in s:
+        return True
     try:
         s.encode("utf-8")
     except UnicodeEncodeError:
@@ -157,7 +162,7 @@ def build(words: pd.Series) -> WordStream:
     lens = words.str.len().fillna(0).astype(np.int64).to_numpy()
     tokens = list(itertools.chain.from_iterable(words.dropna()))
     return WordStream.from_tokens(tokens, lens,
-                                  _has_surrogates("".join(tokens)))
+                                  _hash_unsafe("".join(tokens)))
 
 
 DIGITS = "0123456789"
@@ -223,6 +228,7 @@ class TextBatch:
         except UnicodeEncodeError:  # lone surrogates: one unit each
             self.buf, _ = _narrowest_buffer(joined, "surrogatepass")
             self.surrogates = True
+        self.hash_unsafe = self.surrogates or "\x00" in joined
         self._nonempty = self.lens > 0
 
     def seg_sum(self, mask: np.ndarray) -> np.ndarray:
@@ -275,7 +281,7 @@ class TextBatch:
         lens = self.seg_sum(start)
         tokens = " ".join(self.vals).split()
         assert len(tokens) == int(lens.sum())
-        return WordStream.from_tokens(tokens, lens, self.surrogates)
+        return WordStream.from_tokens(tokens, lens, self.hash_unsafe)
 
     @cached_property
     def lines(self) -> LineStats:
@@ -286,7 +292,7 @@ class TextBatch:
         multi = np.flatnonzero(n_nl)
         if multi.size:
             lines = "\n".join(self.vals[multi]).split("\n")
-            codes, uniq = _factorize(lines, self.surrogates)
+            codes, uniq = _factorize(lines, self.hash_unsafe)
             line_lens = pd.Series(uniq, dtype=object).str.len() \
                 .to_numpy(np.int64)[codes]
             per_doc = n_lines[multi]

@@ -152,7 +152,9 @@ def test_batch_edge_cases():
                  ["".join(_ODD) + " the cat"] * 3,
                  ["line\n" * 3 + "w" * 70, "\U0001f389 " * 30],
                  # pandas' string hash table conflates some of these
-                 ["\U0001f389\ud800", "00\x80", "x", "\ud800", "\udfff"]):
+                 ["\U0001f389\ud800", "00\x80", "x", "\ud800", "\udfff"],
+                 # ...and reads strings only up to a NUL
+                 ["\x00", "\x00the", "a\x00b a\x00c", "x\n\x00\n\x00y"]):
         _check_batch(_series(docs))
 
 
