@@ -17,6 +17,8 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
+from . import wordstream
+
 PROFILES: dict[str, tuple[str, ...]] = {
     "en": ("the", "a", "an", "of", "and", "to", "in", "is", "it", "that",
            "for", "on", "with", "was", "this", "are", "be", "you", "not"),
@@ -53,8 +55,6 @@ def detect(texts: pd.Series, words: pd.Series | None = None,
     ``words`` (a per-doc split) is accepted for callers of the older
     signature and not needed.
     """
-    from . import wordstream
-
     t = texts.fillna("")
     stream, chars = wordstream.views(t, stream, chars)
     n_words = pd.Series(stream.lens, index=t.index)

@@ -18,7 +18,7 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
-from .text import _narrowest_buffer
+from .wordstream import TextBatch
 
 _ALPHABET = "abcdefghijklmnopqrstuvwxyz .,0123456789"
 _V = len(_ALPHABET) + 1  # +1 = OOV bucket
@@ -37,7 +37,7 @@ _SEED_CORPUS = (
 def _build_matrix() -> np.ndarray:
     counts = np.ones((_V, _V), dtype=np.float64)  # add-one smoothing
     codes = [_CODE.get(c, _V - 1) for c in _SEED_CORPUS.lower()]
-    for a, b in zip(codes, codes[1:]):
+    for a, b in zip(codes, codes[1:]):  # row-loop-ok: import-time model build
         counts[a, b] += 1.0
     return np.log10(counts / counts.sum(axis=1, keepdims=True))
 
@@ -63,9 +63,7 @@ for _ch, _i in _CODE.items():
 def _perplexity_one(t: str) -> float:
     if not isinstance(t, str) or len(t) < 2:
         return float("inf")
-    codes = np.frombuffer(t.lower().encode("utf-32-le", "surrogatepass"),
-                          dtype=np.uint32)
-    idx = _LUT[codes]
+    idx = _LUT[np.fromiter(map(ord, t.lower()), np.int64)]
     s = int(_LOGP_E6[idx[:-1], idx[1:]].sum())
     n = len(idx) - 1
     return float(10.0 ** (-s / (n * 1e6)))
@@ -75,8 +73,9 @@ def perplexity_series(texts: pd.Series) -> pd.Series:
     """pd.Series[str] -> pd.Series[float64] perplexity (lower = more fluent).
 
     Whole-batch: per-doc lowercase (C calls; str.lower is per-codepoint, so
-    lowering before concatenation equals lowering each doc), ONE utf-32
-    encode + LUT gather over the concatenated buffer, ONE transition-score
+    lowering before concatenation equals lowering each doc), ONE code-unit
+    buffer of the lowered batch (wordstream.TextBatch; a lone surrogate is
+    one OOV unit, as in the per-doc path) + LUT gather, ONE transition-score
     gather, then per-doc EXACT int64 sums as cumsum differences — the same
     integer the per-doc path sums, so the resulting float is bit-identical
     (pinned vs _perplexity_one in tests/test_properties.py). Transitions
@@ -85,16 +84,13 @@ def perplexity_series(texts: pd.Series) -> pd.Series:
     n_rows = len(texts)
     if n_rows == 0:
         return pd.Series(np.empty(0, np.float64), index=texts.index)
-    vals = texts.to_numpy(dtype=object)
-    lowered = [t.lower() if isinstance(t, str) else "" for t in vals]
-    # narrowest code-unit buffer (uint8/uint16/uint32): LUT gather is
-    # dtype-agnostic, bus traffic drops 4x/2x on ascii/BMP webtext; a lone
-    # surrogate stays one unit (an OOV codepoint, as in the per-doc path)
-    buf, _ = _narrowest_buffer("".join(lowered), "surrogatepass")
-    lens = np.fromiter(map(len, lowered), np.int64, n_rows)
-    offs = np.zeros(n_rows + 1, np.int64)
-    np.cumsum(lens, out=offs[1:])
-    idx = _LUT[buf]
+    lowered = pd.Series(
+        [t.lower() if isinstance(t, str) else ""
+         for t in texts.to_numpy(dtype=object)],  # row-loop-ok: str.lower per doc
+        dtype=object)
+    batch = TextBatch(lowered)
+    offs, lens = batch.offs, batch.lens
+    idx = _LUT[batch.buf]
     if len(idx) < 2:
         return pd.Series(np.full(n_rows, np.inf), index=texts.index)
     trans = _LOGP_E6[idx[:-1], idx[1:]]
@@ -107,15 +103,14 @@ def perplexity_series(texts: pd.Series) -> pd.Series:
     n_tr = lens - 1
     # the per-doc path gates on the ORIGINAL length (lowercasing can change
     # length: len('İ')==1 but len('İ'.lower())==2), then divides by the
-    # LOWERED transition count — mirror both exactly
-    orig_ok = np.fromiter(
-        (isinstance(t, str) and len(t) >= 2 for t in vals), bool, n_rows)
-    ok = orig_ok & (n_tr >= 1)
+    # LOWERED transition count — mirror both exactly (a non-str doc lowers
+    # to "", so its n_tr < 1 whatever its length)
+    ok = (texts.str.len() >= 2).to_numpy(bool, na_value=False) & (n_tr >= 1)
     out = np.full(n_rows, np.inf)
     expo = (-s[ok] / (n_tr[ok] * 1e6)).tolist()
     # CPython float.__pow__, not np.power — they differ by 1 ULP on some
     # inputs and the per-doc path (and golden oracle) uses the former
-    out[ok] = [10.0 ** e for e in expo]
+    out[ok] = [10.0 ** e for e in expo]  # row-loop-ok: CPython pow per doc
     return pd.Series(out, index=texts.index)
 
 

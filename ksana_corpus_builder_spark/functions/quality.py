@@ -33,6 +33,8 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
+from . import wordstream
+
 MIN_WORDS = 20
 MAX_WORDS = 100_000
 MIN_MEAN_WL_NUM = 3     # mean word len < 3   <=>  sum < 3*n
@@ -60,10 +62,8 @@ def word_stats(texts: pd.Series, words: pd.Series | None = None,
     wordstream.TextBatch (the one behind ``chars`` when given). ``words``
     (a per-doc split) is accepted for callers of the older signature and
     not needed: the split is derived from the buffer."""
-    from . import wordstream
     stream, chars = wordstream.views(texts, stream, chars)
-    lines = (chars.batch if chars.batch is not None
-             else wordstream.TextBatch(texts)).lines
+    lines = chars.batch.lines
     # word-level stats over the shared factorized token stream: per-token
     # work is a C-level gather of the unique-word table, per-doc reductions
     # are boundary cumsum/bincount — no per-document Python loop. Line stats
@@ -103,11 +103,29 @@ def rule_flags(stats: pd.DataFrame) -> pd.DataFrame:
     }, index=stats.index)
 
 
-_RULE_BITS = 1 << np.arange(len(RULE_NAMES), dtype=np.int64)
-# bitmask -> the names of the rules whose bits are set, in rule order
-_HIT_LISTS = np.empty(1 << len(RULE_NAMES), dtype=object)
-for _mask in range(len(_HIT_LISTS)):
-    _HIT_LISTS[_mask] = [n for n, b in zip(RULE_NAMES, _RULE_BITS) if _mask & b]
+def labels(flags: np.ndarray,
+           names: list[str]) -> tuple[np.ndarray, np.ndarray]:
+    """Bool matrix of rule flags (one column per rule, named by position in
+    ``names``) -> (keep, rules_hit): keep = no rule hit; rules_hit = the
+    names of the hit columns in column order, a fresh list per row. The one
+    hit-list builder for built-in and plugged rules: each row's flags pack
+    into a 64-bit mask, one name list is built per DISTINCT mask, then
+    gathered and copied per row (so no two rows share a mutable list)."""
+    n_rules = flags.shape[1]
+    if n_rules > 64:
+        raise ValueError(f"{n_rules} rule columns; a row's hit bitmask "
+                         "holds at most 64")
+    bits = flags.astype(np.uint64) @ (np.uint64(1) << np.arange(
+        n_rules, dtype=np.uint64))
+    _, first, inverse = np.unique(bits, return_index=True,
+                                  return_inverse=True)
+    name_arr = np.array(names, dtype=object)
+    hit_lists = np.fromiter(
+        (name_arr[flags[i]].tolist() for i in first),  # row-loop-ok: one per distinct mask
+        object, len(first))
+    rules_hit = np.fromiter(map(list.copy, hit_lists[inverse]), object,
+                            len(bits))
+    return bits == 0, rules_hit
 
 
 def rules_hit_and_keep(texts: pd.Series,
@@ -115,10 +133,5 @@ def rules_hit_and_keep(texts: pd.Series,
                        stream=None, chars=None) -> pd.DataFrame:
     """text -> (keep: bool, rules_hit: list[str]) — the oracle's label kernel."""
     flags = rule_flags(word_stats(texts, words, stream, chars))
-    m = flags[RULE_NAMES].to_numpy()  # one bool matrix, no row-wise apply
-    # each row's rule bitmask indexes the table of hit lists; every row
-    # gets its own copy, so no two rows share a mutable list
-    bits = m.astype(np.int64) @ _RULE_BITS
-    hits = pd.Series(list(map(list.copy, _HIT_LISTS[bits])), index=texts.index,
-                     dtype=object)
-    return pd.DataFrame({"keep": bits == 0, "rules_hit": hits}, index=texts.index)
+    keep, hits = labels(flags[RULE_NAMES].to_numpy(), RULE_NAMES)
+    return pd.DataFrame({"keep": keep, "rules_hit": hits}, index=texts.index)

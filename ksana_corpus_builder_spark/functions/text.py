@@ -16,6 +16,8 @@ import re
 import numpy as np
 import pandas as pd
 
+from .wordstream import TextBatch
+
 _BOM = "﻿"
 _CRLF = re.compile(r"\r\n?")
 
@@ -49,30 +51,10 @@ _MULTI_NL = re.compile(r"\n{3,}")
 _ENTITIES = [("&lt;", "<"), ("&gt;", ">"), ("&quot;", '"'), ("&#39;", "'"), ("&amp;", "&")]
 
 
-def _narrowest_buffer(joined: str,
-                      errors: str = "strict") -> tuple[np.ndarray, str]:
-    """Narrowest numpy code-unit view of a str: ascii -> uint8, BMP-only ->
-    uint16 (utf-16-le; astral chars detected by the surrogate-pair byte-length
-    mismatch), else uint32 (utf-32-le). In every returned tier the code units
-    EQUAL the codepoints, so masks and LUT gathers are dtype-agnostic while
-    narrower buffers cut memory-bus traffic 4x/2x — the single-box 32-core
-    bottleneck. With the default errors="strict" it raises
-    UnicodeEncodeError on lone surrogates (callers fall back to their
-    per-doc/regex path); errors="surrogatepass" encodes each lone surrogate
-    as one code unit equal to its codepoint, for callers that never decode
-    the buffer back."""
-    if joined.isascii():
-        return np.frombuffer(joined.encode("ascii"), np.uint8), "ascii"
-    b = joined.encode("utf-16-le", errors)
-    if len(b) == 2 * len(joined):  # no astral chars: units == codepoints
-        return np.frombuffer(b, np.uint16), "utf-16-le"
-    return (np.frombuffer(joined.encode("utf-32-le", errors), np.uint32),
-            "utf-32-le")
-
-
 def _collapse_ws_regex(s: pd.Series) -> pd.Series:
     """Steps 5-6 of the contract as the original three regex passes + strip.
-    Kept as the fallback and the equivalence oracle for the numpy path."""
+    Test oracle only (tests/test_properties.py): :func:`_collapse_ws` is the
+    one production path, lone surrogates included."""
     s = s.str.replace(_SPACES, " ", regex=True)
     s = s.str.replace(_LINE_EDGE, "\n", regex=True)
     s = s.str.replace(_MULTI_NL, "\n\n", regex=True)
@@ -92,25 +74,16 @@ def _collapse_ws(texts: pd.Series) -> pd.Series:
     is untouched by all three passes — it splits runs exactly like any
     non-matched char, and only the final str.strip() removes it at the
     edges. That makes the passes a pure per-run rewrite, done here as mask
-    algebra over one flat UTF-32 buffer (match-per-space regex scanning was
-    ~6x the cost of this whole-batch form; equivalence is pinned by
-    tests/test_properties.py against _collapse_ws_regex).
+    algebra over the batch's code-unit buffer (wordstream.TextBatch;
+    match-per-space regex scanning was ~6x the cost of this whole-batch
+    form; equivalence is pinned by tests/test_properties.py against
+    _collapse_ws_regex).
     """
-    n_rows = len(texts)
-    if n_rows == 0:
-        return texts
-    vals = texts.to_numpy()
-    try:
-        joined = "".join(vals)
-        buf, enc = _narrowest_buffer(joined)
-    except UnicodeEncodeError:  # lone surrogates: rare, regex path handles
-        return _collapse_ws_regex(texts)
+    batch = TextBatch(texts)
+    buf, offs, lens = batch.buf, batch.offs, batch.lens
     n = len(buf)
-    if n == 0:
-        return pd.Series([""] * n_rows, index=texts.index)
-    lens = np.fromiter((len(v) for v in vals), np.int64, n_rows)
-    offs = np.zeros(n_rows + 1, np.int64)
-    np.cumsum(lens, out=offs[1:])
+    if n == 0:  # the run masks below index [0] and [-1]
+        return pd.Series([""] * len(texts), index=texts.index, dtype=object)
 
     is_nl = buf == 10
     is_ws = (buf == 32) | (buf == 9) | (buf == 12) | (buf == 11) | is_nl
@@ -147,20 +120,13 @@ def _collapse_ws(texts: pd.Series) -> pd.Series:
     keep_cum = np.zeros(n + 1, np.int32)
     np.cumsum(keep, out=keep_cum[1:])
     new_offs = keep_cum[offs]
-    flat = out[keep].tobytes().decode(enc)
+    flat = batch.decode(out[keep])
     res = pd.Series(
-        [flat[new_offs[i]:new_offs[i + 1]] for i in range(n_rows)],
+        [flat[new_offs[i]:new_offs[i + 1]]
+         for i in range(batch.n_docs)],  # row-loop-ok: one slice per doc
         index=texts.index,
     )
     return res.str.strip()
-
-
-_TAG_STRIP = _ANY_TAG
-
-
-def strip_tags(texts: pd.Series) -> pd.Series:
-    """Bare tag strip (reference handlers.js:92 sic/orig cleanup)."""
-    return texts.fillna("").str.replace(_TAG_STRIP, "", regex=True)
 
 
 # --- configurable handler registry (reference setHandlers, U1/U4) ---------
@@ -183,13 +149,13 @@ DEFAULT_TAG_RULES: dict[str, str] = dict(
 
 def compile_rules(rules: dict[str, str]):
     """rules -> (drop_re, break_re) regex pair for the kernel."""
-    drop = [t for t, a in rules.items() if a == "drop"]
-    brk = [t for t, a in rules.items() if a == "break"]
+    drop = [t for t, a in rules.items() if a == "drop"]  # row-loop-ok: tag registry
+    brk = [t for t, a in rules.items() if a == "break"]  # row-loop-ok: tag registry
     drop_re = (re.compile(r"<(%s)\b.*?</\1\s*>" % "|".join(drop),
                           re.DOTALL | re.IGNORECASE) if drop else None)
     # void elements (br, hr) break at the OPEN tag; others at the close tag
-    voids = [t for t in brk if t in ("br", "hr")]
-    closers = [t for t in brk if t not in ("br", "hr")]
+    voids = [t for t in brk if t in ("br", "hr")]  # row-loop-ok: tag registry
+    closers = [t for t in brk if t not in ("br", "hr")]  # row-loop-ok: tag registry
     parts = []
     if closers:
         parts.append(r"</(?:%s)\s*>" % "|".join(closers))
@@ -216,7 +182,7 @@ def extract_text_with_rules(htmls: pd.Series,
     drop_re, brk_re = (_DEFAULT_RULES_RE
                        if not rules or rules is DEFAULT_TAG_RULES
                        else compile_rules(rules))
-    s = htmls.map(lambda b: b.decode("utf-8", "replace")
+    s = htmls.map(lambda b: b.decode("utf-8", "replace")  # row-loop-ok: per-doc utf-8 decode
                   if isinstance(b, (bytes, bytearray)) else (b or ""))
     s = normalize_raw(s)
     if drop_re is not None:

@@ -27,8 +27,10 @@ most once each:
 - the digit-run / '.' / '-' / '@' / 'w'-position arrays the scrub
   kernel's gates look around (functions/scrub.py).
 
-The buffer is encoded with `surrogatepass`, so lone surrogates stay one
-code unit each (code units == codepoints in every tier) instead of raising.
+TextBatch is the only place a batch of text becomes a code-unit buffer:
+the narrowest dtype that holds its codepoints (uint8 ascii, uint16 BMP,
+else uint32 with `surrogatepass`, so a lone surrogate is one code unit and
+the buffer decodes back to the same text; :meth:`TextBatch.decode`).
 """
 
 from __future__ import annotations
@@ -41,8 +43,6 @@ from functools import cached_property
 import numpy as np
 import pandas as pd
 
-from .text import _narrowest_buffer
-
 
 @dataclass
 class WordStream:
@@ -52,8 +52,6 @@ class WordStream:
     codes: np.ndarray       # unique-word code per token
     uniq: np.ndarray        # unique words (object)
     starts: np.ndarray      # token-stream start offset per doc
-    _uniq_series: pd.Series | None = None
-    _uniq_lens: np.ndarray | None = None
 
     @classmethod
     def from_tokens(cls, tokens: list[str], lens: np.ndarray,
@@ -71,20 +69,14 @@ class WordStream:
                    codes=np.asarray(codes), uniq=np.asarray(uniq),
                    starts=starts)
 
-    @property
+    @cached_property
     def uniq_series(self) -> pd.Series:
-        if self._uniq_series is None:
-            self._uniq_series = pd.Series(self.uniq, dtype=object)
-        return self._uniq_series
+        return pd.Series(self.uniq, dtype=object)
 
-    @property
+    @cached_property
     def uniq_lens(self) -> np.ndarray:
-        if self._uniq_lens is None:
-            self._uniq_lens = (self.uniq_series.str.len()
-                               .to_numpy(dtype=np.int64)
-                               if len(self.uniq) else
-                               np.zeros(0, np.int64))
-        return self._uniq_lens
+        return (self.uniq_series.str.len().to_numpy(dtype=np.int64)
+                if len(self.uniq) else np.zeros(0, np.int64))
 
     def seg_sum(self, per_token: np.ndarray) -> np.ndarray:
         """Exact per-doc sums of a per-token array (cumsum boundary diff —
@@ -136,17 +128,6 @@ def _factorize(values: list[str],
     return codes, flat[np.unique(codes, return_index=True)[1]]
 
 
-def _hash_unsafe(s: str) -> bool:
-    """Whether `s` holds a lone surrogate or NUL (see :func:`_factorize`)."""
-    if "\x00" in s:
-        return True
-    try:
-        s.encode("utf-8")
-    except UnicodeEncodeError:
-        return True
-    return False
-
-
 def _distinct_per_doc(pos: np.ndarray, codes: np.ndarray, n_uniq: int,
                       n_docs: int) -> np.ndarray:
     """Per-doc count of distinct codes: one hash-unique over the
@@ -161,8 +142,9 @@ def build(words: pd.Series) -> WordStream:
     """words: Series[list[str]] (one entry per doc) -> WordStream."""
     lens = words.str.len().fillna(0).astype(np.int64).to_numpy()
     tokens = list(itertools.chain.from_iterable(words.dropna()))
-    return WordStream.from_tokens(tokens, lens,
-                                  _hash_unsafe("".join(tokens)))
+    # the tokens' own buffer tells whether factorize must hash bytes
+    batch = TextBatch(pd.Series(["".join(tokens)], dtype=object))
+    return WordStream.from_tokens(tokens, lens, batch.hash_unsafe)
 
 
 DIGITS = "0123456789"
@@ -196,7 +178,7 @@ class CharStats:
     nonspace: np.ndarray
     cjk: np.ndarray
     digits: np.ndarray
-    batch: TextBatch | None = None
+    batch: TextBatch
 
 
 @dataclass
@@ -207,11 +189,36 @@ class LineStats:
     max_line_len: np.ndarray
 
 
+def _encode(joined: str) -> tuple[np.ndarray, bool]:
+    """str -> (narrowest code-unit buffer, whether it holds a lone
+    surrogate). ascii -> uint8; BMP text that encodes strictly -> uint16
+    (astral chars show as a surrogate-pair byte-length mismatch); anything
+    else -> uint32 with surrogatepass. In every tier code units EQUAL
+    codepoints, so masks and LUT gathers are dtype-agnostic while narrower
+    buffers cut memory-bus traffic 4x/2x. Lone surrogates must not stay in
+    uint16: an adjacent high+low pair would decode back as ONE astral char."""
+    if joined.isascii():
+        return np.frombuffer(joined.encode("ascii"), np.uint8), False
+    try:
+        b = joined.encode("utf-16-le")
+    except UnicodeEncodeError:  # a lone surrogate
+        surrogates = True
+    else:
+        if len(b) == 2 * len(joined):
+            return np.frombuffer(b, np.uint16), False
+        surrogates = False
+    return (np.frombuffer(joined.encode("utf-32-le", "surrogatepass"),
+                          np.uint32), surrogates)
+
+
+_CODECS = {1: "ascii", 2: "utf-16-le", 4: "utf-32-le"}  # by unit itemsize
+
+
 class TextBatch:
     """One batch of documents as ONE code-unit buffer with doc offsets.
 
     `buf[offs[i]:offs[i+1]]` are document i's codepoints, in the narrowest
-    dtype that holds them (uint8/uint16/uint32). Every derived view is a
+    dtype that holds them (see :func:`_encode`). Every derived view is a
     cached property, computed on first use and then shared by all kernels.
     """
 
@@ -221,15 +228,20 @@ class TextBatch:
         self.lens = np.fromiter(map(len, self.vals), np.int64, n)
         self.offs = np.zeros(n + 1, np.int64)
         np.cumsum(self.lens, out=self.offs[1:])
-        joined = "".join(self.vals)
-        try:
-            self.buf, _ = _narrowest_buffer(joined)
-            self.surrogates = False
-        except UnicodeEncodeError:  # lone surrogates: one unit each
-            self.buf, _ = _narrowest_buffer(joined, "surrogatepass")
-            self.surrogates = True
-        self.hash_unsafe = self.surrogates or "\x00" in joined
+        self.buf, self.surrogates = _encode("".join(self.vals))
         self._nonempty = self.lens > 0
+
+    @cached_property
+    def hash_unsafe(self) -> bool:
+        """Whether any token or line may hold a lone surrogate or NUL (see
+        :func:`_factorize`); only batches that factorize pay the NUL scan."""
+        return self.surrogates or bool((self.buf == 0).any())
+
+    def decode(self, units: np.ndarray) -> str:
+        """Code units of this batch's dtype (e.g. a masked copy of ``buf``)
+        -> str, one char per unit."""
+        return units.tobytes().decode(_CODECS[units.dtype.itemsize],
+                                      "surrogatepass")
 
     def seg_sum(self, mask: np.ndarray) -> np.ndarray:
         """Per-doc sums of a per-code-unit mask: reduceat over NON-EMPTY doc
@@ -335,12 +347,9 @@ def views(texts: pd.Series, stream: WordStream | None = None,
           chars: CharStats | None = None) -> tuple[WordStream, CharStats]:
     """The (stream, chars) pair a kernel needs: what the caller shares, the
     rest derived from ONE TextBatch (the one behind ``chars`` when given)."""
-    if stream is None or chars is None:
-        batch = chars.batch if chars is not None and chars.batch is not None \
-            else TextBatch(texts)
-        stream = batch.stream if stream is None else stream
-        chars = batch.chars if chars is None else chars
-    return stream, chars
+    batch = chars.batch if chars is not None else TextBatch(texts)
+    return (batch.stream if stream is None else stream,
+            batch.chars if chars is None else chars)
 
 
 def char_stats(texts: pd.Series) -> CharStats:

@@ -31,6 +31,7 @@ from __future__ import annotations
 from collections.abc import Callable, Iterator
 from dataclasses import dataclass, field
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -50,9 +51,10 @@ class PipelineHooks:
     callbacks (index.js:477-516 lifecycle; setHandlers in parsepre.js):
 
     - ``extra_rules``: {rule_name: Series[str] -> Series[bool]} — extra
-      vectorized quality rules, merged into ``rules_hit`` and ANDed into
-      ``keep`` exactly like built-in rules. Runs INSIDE the fused batch
-      pass, so a plugged rule costs zero extra Python boundaries.
+      vectorized quality rules, labelled by the same builder as the
+      built-in rules (``quality.labels``: names appended after them in
+      dict order, ``keep`` ANDed). Runs INSIDE the fused batch pass, so a
+      plugged rule costs zero extra Python boundaries.
     - ``on_batch``: called with each result batch (post-kernel) — the
       custom-log-sink hook (U5); side effects only, the returned value is
       ignored. Runs on executors: use it for accumulators/logging, not
@@ -65,22 +67,6 @@ class PipelineHooks:
     extra_rules: dict[str, Callable[[pd.Series], pd.Series]] = field(
         default_factory=dict)
     on_batch: Callable[[pd.DataFrame], None] | None = None
-
-    def apply_rules(self, text: pd.Series,
-                    labels: pd.DataFrame) -> pd.DataFrame:
-        """Merge extra rule hits into (keep, rules_hit) — same semantics
-        as the built-in rule fold (name appended in rule order, keep ANDed
-        with NOT hit)."""
-        if not self.extra_rules:
-            return labels
-        keep = labels["keep"].copy()
-        rules_hit = labels["rules_hit"].copy()
-        for name, fn in self.extra_rules.items():
-            hit = fn(text).astype(bool)
-            keep &= ~hit
-            rules_hit = rules_hit.combine(
-                hit, lambda rh, h: rh + [name] if h else rh)
-        return pd.DataFrame({"keep": keep, "rules_hit": rules_hit})
 
 RESULT_SCHEMA = (
     "url string, warc_ts timestamp, lang string, "
@@ -114,15 +100,19 @@ def _process_batch(pdf: pd.DataFrame, hooks: PipelineHooks | None = None,
     # the scrub gates all derive from it
     batch = W.TextBatch(text)
     stream, chars = batch.stream, batch.chars
-    labels = Q.rules_hit_and_keep(text, None, stream, chars)
-    if hooks is not None:
-        labels = hooks.apply_rules(text, labels)
+    extra = hooks.extra_rules if hooks is not None else {}
+    flags = Q.rule_flags(Q.word_stats(text, None, stream, chars))
+    keep, rules_hit = Q.labels(
+        np.column_stack([flags[Q.RULE_NAMES].to_numpy(),
+                         *(np.asarray(fn(text), bool)
+                           for fn in extra.values())]),
+        Q.RULE_NAMES + list(extra))
     lang = L.detect(text, None, stream, chars)
     scrubbed = S.scrub_series(text, batch)
     kernel = {
         "text": scrubbed["text"],
-        "keep": labels["keep"],
-        "rules_hit": labels["rules_hit"],
+        "keep": keep,
+        "rules_hit": rules_hit,
         "lang_detected": lang["lang_detected"],
         "lang_score": (lang["lang_hits"] / lang["n_words"].clip(lower=1)).astype("float64"),
         "perplexity": perplexity_series(text),

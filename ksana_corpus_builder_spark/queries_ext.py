@@ -1257,26 +1257,43 @@ def q_pq_topk(spark: SparkSession, sf: str) -> DataFrame:
     query-sized ({mk} rows, broadcast); top-k is TakeOrdered, never a
     global sort. Memory story: {m} bytes/vector at rest vs
     {dim}x4 floats — the billion-scale regime PQ exists for."""
-    e = load(spark, sf, "embeddings")
+    return (_pq_codes(spark, sf)
+            .orderBy("est_d2_micro", "vec_id").limit(10))
+
+
+def _pq_pairs(spark: SparkSession, sf: str) -> DataFrame:
+    """(vec_id, j, cb, d6): each vector's squared L2 distance to each
+    centroid cb in subspace j, in 6dp micro-units. Squares in double, as
+    the twin does: float32 squares round differently and move some
+    micro-distances by one unit."""
+    e = load(spark, sf, "embeddings").select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("embedding"))
     cents = (e.where(F.col("vec_id") < _PQ_K)
              .select(F.col("vec_id").alias("cb"),
                      F.col("embedding").alias("cemb")))
     sub = F.explode(F.lit(list(range(_PQ_M)))).alias("j")
-    pairs = (e.select("vec_id", "embedding", sub)
-             .crossJoin(F.broadcast(cents)))
     d2 = F.aggregate(
         F.zip_with(
             F.expr(f"slice(embedding, j * {_PQ_SUB} + 1, {_PQ_SUB})"),
             F.expr(f"slice(cemb, j * {_PQ_SUB} + 1, {_PQ_SUB})"),
             lambda a, b: (a - b) * (a - b)),
         F.lit(0.0), lambda acc, x: acc + x)
-    d6 = F.round(d2 * F.lit(1_000_000.0)).cast("long")
+    return (e.select("vec_id", "embedding", sub)
+            .crossJoin(F.broadcast(cents))
+            .select("vec_id", "j", "cb",
+                    F.round(d2 * F.lit(1_000_000.0)).cast("long").alias("d6")))
+
+
+def _pq_codes(spark: SparkSession, sf: str) -> DataFrame:
+    """Every vector's PQ codes and ADC distance estimate (pq_topk before its
+    top-k)."""
+    pairs = _pq_pairs(spark, sf)
     enc = (pairs.select("vec_id", "j",
-                        (d6 * _PQ_K + F.col("cb")).alias("mk"))
+                        (F.col("d6") * _PQ_K + F.col("cb")).alias("mk"))
            .groupBy("vec_id", "j").agg(F.min("mk").alias("mk"))
            .select("vec_id", "j", F.expr(f"mk % {_PQ_K}").alias("code")))
     qt = (pairs.where(F.col("vec_id") == 0)
-          .select("j", F.col("cb").alias("code"), d6.alias("qd6")))
+          .select("j", F.col("cb").alias("code"), F.col("d6").alias("qd6")))
     est = (enc.join(F.broadcast(qt), ["j", "code"])
            .groupBy("vec_id").agg(F.sum("qd6").alias("est")))
     codes = [F.max(F.when(F.col("j") == j, F.col("code")))
@@ -1284,15 +1301,14 @@ def q_pq_topk(spark: SparkSession, sf: str) -> DataFrame:
     wide = enc.groupBy("vec_id").agg(*codes)
     return (wide.join(est, "vec_id")
             .select("vec_id", *[f"c{j}" for j in range(_PQ_M)],
-                    F.col("est").cast("long").alias("est_d2_micro"))
-            .orderBy("est_d2_micro", "vec_id").limit(10))
+                    F.col("est").cast("long").alias("est_d2_micro")))
 
 
 q_pq_topk.__doc__ = q_pq_topk.__doc__.format(
     m=_PQ_M, sub=_PQ_SUB, k=_PQ_K, k2=_PQ_K, mk=_PQ_M * _PQ_K, dim=64)
 
 
-_SQL_PQ_TOPK = f"""
+_SQL_PQ_PAIRS = f"""
 WITH e AS (SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS emb
            FROM embeddings),
 cents AS (SELECT vec_id AS cb, emb AS cemb FROM e WHERE vec_id < {_PQ_K}),
@@ -1302,7 +1318,8 @@ pairs AS (
       i -> (emb[j * {_PQ_SUB} + i] - cemb[j * {_PQ_SUB} + i])
            * (emb[j * {_PQ_SUB} + i] - cemb[j * {_PQ_SUB} + i])))
       * 1000000.0)::BIGINT AS d6
-  FROM e, unnest(range(0, {_PQ_M})) AS u(j), cents),
+  FROM e, unnest(range(0, {_PQ_M})) AS u(j), cents)"""
+_SQL_PQ_CODES = _SQL_PQ_PAIRS + f""",
 enc AS (SELECT vec_id, j, (min(d6 * {_PQ_K} + cb) % {_PQ_K}) AS code
         FROM pairs GROUP BY vec_id, j),
 qt AS (SELECT j, cb AS code, d6 AS qd6 FROM pairs WHERE vec_id = 0),
@@ -1316,8 +1333,8 @@ wide AS (SELECT vec_id,
 SELECT wide.vec_id, {", ".join(f"c{j}" for j in range(_PQ_M))},
        est::BIGINT AS est_d2_micro
 FROM wide JOIN est ON wide.vec_id = est.vec_id
-ORDER BY est_d2_micro, wide.vec_id LIMIT 10
 """
+_SQL_PQ_TOPK = _SQL_PQ_CODES + "ORDER BY est_d2_micro, wide.vec_id LIMIT 10\n"
 
 
 def q_quantized_topk(spark: SparkSession, sf: str) -> DataFrame:

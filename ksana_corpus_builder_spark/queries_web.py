@@ -1474,8 +1474,16 @@ def q_simhash_hamming_pairs(spark: SparkSession, sf: str) -> DataFrame:
     # sides of the candidate self-join branch from it, and without a
     # checkpoint each branch re-runs the HOF folds over the corpus. In
     # production the fingerprint table is an at-rest artifact (Manku's
-    # sorted tables derive from it) — 16 bytes/doc, doc-keyed.
-    fp = fp.localCheckpoint()
+    # sorted tables derive from it) — 16 bytes/doc, doc-keyed. The
+    # checkpoint is lazy (the first action fills it) and planned without
+    # AQE, which would run the repartition's shuffle stage as soon as the
+    # checkpoint asks for its RDD: building the plan runs no corpus job.
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        fp = fp.localCheckpoint(eager=False)
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
     bands = (fp.select(
         "doc_id", "fp",
         F.explode(F.lit(list(range(_SH_BANDS)))).alias("b"))

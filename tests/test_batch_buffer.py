@@ -15,6 +15,7 @@ import sys
 
 import numpy as np
 import pandas as pd
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as hst
 
@@ -176,6 +177,35 @@ def test_rule_hit_lists_are_not_shared():
     assert "mutated" not in lists[1]
     assert "mutated" not in Q.rules_hit_and_keep(
         pd.Series([""]))["rules_hit"].iloc[0]
+
+
+def test_plugged_rules_label_like_built_ins():
+    """Plugged rules go through the same hit-list builder as the built-in
+    ones: their hit names follow the built-in list in dict order (a plugged
+    rule reusing a built-in name appends a second entry), keep is the AND
+    of all rules, and every row owns its list."""
+    from ksana_corpus_builder_spark.plans import quality_pipeline as qp
+    texts = ["", "the cat sat on the mat " * 5, "zzzz", "the zoo", ""]
+    pdf = pd.DataFrame({"doc_id": range(len(texts)), "text": texts})
+    extra = {"too_short": lambda t: t.str.contains("z", regex=False),
+             "has_the": lambda t: t.str.contains("the", regex=False)}
+    out = qp._process_batch(pdf, qp.PipelineHooks(extra_rules=extra),
+                            ["doc_id", "keep", "rules_hit"])
+    base = Q.rules_hit_and_keep(pdf["text"])
+    plugged = [[n for n, fn in extra.items() if fn(pd.Series([t])).iloc[0]]
+               for t in texts]
+    assert [list(h) for h in out["rules_hit"]] == [
+        b + p for b, p in zip(base["rules_hit"], plugged)]
+    assert out["keep"].tolist() == [
+        bool(k) and not p for k, p in zip(base["keep"], plugged)]
+    assert out["rules_hit"].iloc[2].count("too_short") == 2
+    assert out["rules_hit"].iloc[3][-2:] == ["too_short", "has_the"]
+    assert len({id(h) for h in out["rules_hit"]}) == len(texts)
+
+
+def test_labels_refuses_more_rules_than_mask_bits():
+    with pytest.raises(ValueError):
+        Q.labels(np.zeros((1, 65), bool), [str(i) for i in range(65)])
 
 
 def test_lone_surrogates_run_through_golden_oracle():

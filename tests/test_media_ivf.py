@@ -253,3 +253,32 @@ def test_semdedup_flags_exact_duplicate(spark):
     dup = out[10_003]
     assert dup.cell == out[3].cell
     assert dup.is_dup and dup.max_lower_sim == 1.0
+
+
+def test_pq_codes_and_adc_distances_match_twin(spark):
+    """At sf0.01, every (vector, subspace, centroid) micro-distance and
+    every vector's PQ codes and ADC estimate equal the DuckDB twin's — the
+    whole encode -> table -> estimate chain, not only the top-10 the
+    registered query returns. Both engines square in double."""
+    import duckdb
+    import numpy as np
+
+    from ksana_corpus_builder_spark import queries_ext as qe
+    sf = SF.replace("sf0.001", "sf0.01")
+    con = duckdb.connect()
+    con.execute("CREATE VIEW embeddings AS "
+                f"SELECT * FROM '{sf}/embeddings.parquet'")
+    pair_cols = ["vec_id", "j", "cb", "d6"]
+    code_cols = ["vec_id", *[f"c{j}" for j in range(qe._PQ_M)],
+                 "est_d2_micro"]
+    for got, sql, cols in [
+            (qe._pq_pairs(spark, sf), qe._SQL_PQ_PAIRS
+             + "\nSELECT vec_id, j, cb, d6 FROM pairs", pair_cols),
+            (qe._pq_codes(spark, sf), qe._SQL_PQ_CODES, code_cols)]:
+        g = got.toPandas()[cols].sort_values(cols[:-1]).to_numpy(np.int64)
+        w = con.execute(sql).fetchdf()[cols].sort_values(cols[:-1]) \
+            .to_numpy(np.int64)
+        assert g.shape == w.shape and len(g) > 0
+        diff = np.flatnonzero((g != w).any(axis=1))
+        assert not diff.size, (f"{diff.size} of {len(g)} rows differ",
+                               g[diff[:5]].tolist(), w[diff[:5]].tolist())

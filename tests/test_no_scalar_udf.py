@@ -57,7 +57,8 @@ def test_no_per_row_loops_in_columnar_kernels():
 # carries a `# row-loop-ok:` marker on its line. Module-level code runs
 # once per process and is not checked.
 _KERNEL_FILES = ("functions/wordstream.py", "functions/quality.py",
-                 "functions/scrub.py", "functions/langid.py")
+                 "functions/scrub.py", "functions/langid.py",
+                 "functions/text.py", "functions/perplexity.py")
 _MAP_LAMBDA = re.compile(r"\.map\(\s*lambda")
 _ITER_HELPERS = {"enumerate", "range", "zip", "len", "reversed"}
 

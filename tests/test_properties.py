@@ -112,9 +112,11 @@ def test_codec_column_roundtrip_property(book, page, col, line, ch):
     assert codec.parse(codec.stringify(k, pat), pat) == k
 
 
+# "\ud83c" + "\udf89" are a lone high and a lone low surrogate: adjacent
+# they must stay two chars (a uint16 buffer would decode them as one)
 _WS_ALPHABET = st.sampled_from(
     [" ", "\t", "\n", "\f", "\v", "\xa0", "　", " ", "a", "b",
-     "<", ">", "\U0001f600"])
+     "<", ">", "\U0001f600", "\ud83c", "\udf89"])
 
 
 @given(st.lists(st.lists(_WS_ALPHABET, max_size=16).map("".join),
@@ -124,7 +126,8 @@ def test_collapse_ws_matches_regex_path(rows):
     """The numpy whitespace-collapse path is byte-identical to the three
     sequential regex passes + strip it replaces (extract_text contract
     steps 5-6), including non-ASCII whitespace that must survive the
-    collapse untouched and only strip at the edges."""
+    collapse untouched and only strip at the edges, and lone surrogates
+    (inside a doc and across doc boundaries), which take the same path."""
     import pandas as pd
 
     from ksana_corpus_builder_spark.functions import text as T
@@ -135,13 +138,15 @@ def test_collapse_ws_matches_regex_path(rows):
 
 
 @given(st.lists(st.text(
-    alphabet=st.sampled_from(list("abZ9 .,İΣßé中") + ["\U0001f600"]),
+    alphabet=st.sampled_from(list("abZ9 .,İΣßé中")
+                             + ["\U0001f600", "\ud83c", "\udf89"]),
     max_size=12), max_size=8))
 @settings(max_examples=300, deadline=None)
 def test_perplexity_batch_matches_per_doc(rows):
     """The whole-batch perplexity (one concatenated gather + cumsum
     segment sums) is bit-identical to the per-doc reference path,
-    including case-expanding lowercases and len<2 edge docs."""
+    including case-expanding lowercases, lone surrogates and len<2 edge
+    docs."""
     import pandas as pd
 
     from ksana_corpus_builder_spark.functions import perplexity as P

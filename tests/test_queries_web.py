@@ -910,6 +910,31 @@ def test_simhash_hamming_pairs_invariants(spark):
                 assert (ids[i], ids[j]) in zero, (ids[i], ids[j])
 
 
+def test_simhash_hamming_pairs_plan_build_runs_no_job(spark):
+    """Building the query's DataFrame runs no job beyond the parquet
+    schema read every `spark.read.parquet` makes: the fingerprint
+    checkpoint is lazy, planned without AQE (which would run the
+    repartition's shuffle stage at once), and fills on the first action."""
+    from ksana_corpus_builder_spark.sources.tables import load
+    sc = spark.sparkContext
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+
+    def jobs_while(group, build):
+        sc.setJobGroup(group, "plan construction only")
+        try:
+            return build(), sc.statusTracker().getJobIdsForGroup(group)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+
+    _, read = jobs_while("documents-schema-read",
+                         lambda: load(spark, SF, "documents"))
+    df, built = jobs_while("simhash-hamming-plan-build",
+                           lambda: qw.q_simhash_hamming_pairs(spark, SF))
+    assert len(built) == len(read)
+    assert spark.conf.get("spark.sql.adaptive.enabled") == aqe
+    assert df.count() > 0
+
+
 def test_label_prop_seeds_clamped_and_votes_sane(spark):
     """Seeds never change label (the semi-supervised clamp); non-seed
     labels only ever take values a neighbor could have voted."""
