@@ -148,7 +148,9 @@ def process(pages: DataFrame, buckets: int | None = None,
     ``hooks``: user lifecycle hooks (extra rules, per-batch observers) —
     None keeps the stock pipeline bit-identical.
     """
-    df = pages
+    # the batch extracts ``html`` and ignores an input ``text``: keep it
+    # out of the scan and the Arrow transfer
+    df = pages.drop("text") if "html" in pages.columns else pages
     if buckets:
         # url-hash bucketing: even distribution regardless of host skew
         df = df.repartition(buckets, F.xxhash64("url"))

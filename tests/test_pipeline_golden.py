@@ -8,6 +8,10 @@
 
 from __future__ import annotations
 
+import io
+import re
+from contextlib import redirect_stdout
+
 import pandas as pd
 import pytest
 
@@ -149,3 +153,73 @@ def test_text_table_hooks_parity(spark):
     n = out.count()
     assert n > 0
     assert out.where("keep").count() == 0  # plugged rule forces drop
+
+
+def test_process_scan_leaves_out_input_text(spark, tmp_path):
+    """process() extracts ``html`` and never reads the staged ``text``, so
+    the parquet scan must not read it either."""
+    path = str(tmp_path / "pages")
+    spark.createDataFrame(make_pages_pdf(40)).write.parquet(path)
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        qp.process(spark.read.parquet(path), buckets=4).explain()
+    scans = re.findall(r"ReadSchema: (\S+)", buf.getvalue())
+    assert len(scans) == 1, buf.getvalue()
+    assert "html:binary" in scans[0]
+    assert "text:" not in scans[0], scans[0]
+
+
+def _hostile_pages() -> pd.DataFrame:
+    """Html that a crawl can hand the pipeline: invalid UTF-8 (an encoded
+    surrogate, stray continuation and truncated sequences, a lone lead
+    byte), null, empty and whitespace-only pages, a page past MAX_WORDS and
+    one past MAX_LINE_LEN; then generated pages, 10,001 rows in all."""
+    html = [
+        b"<p>bad \xed\xa0\x80 surrogate</p>",
+        b"<p>\xed\xa0\x80\xed\xb0\x80 pair of halves</p>",
+        b"\xff\xfe<html><body><p>no bom</p></body></html>",
+        b"<p>trunc\xe4\xb8</p><p>x\x80y\xc3(z</p>",
+        b"<p>" + b"\xf0\x9f\x8e" * 40 + b"</p>",
+        None, b"", b" ", b" \n\t\r\n  ", b"<p>   </p>\n",
+        b"<p>" + b"ab " * 100_001 + b"</p>",  # past MAX_WORDS
+        b"<p>" + b"word " * 1_000 + b"</p>",  # one line past MAX_LINE_LEN
+    ]
+    gen = make_pages_pdf(200, seed=11)
+    html += [gen["html"].iloc[i % len(gen)] for i in range(10_001 - len(html))]
+    n = len(html)
+    return pd.DataFrame({
+        "url": [f"http://hostile.example/{i:05d}" for i in range(n)],
+        "warc_ts": pd.Timestamp("2024-03-01"),
+        "html": html,
+        "text": None,
+        "lang": "en",
+    })
+
+
+def test_hostile_html_matches_golden(spark):
+    """Hostile html through process() matches golden.run byte for byte;
+    one partition of 10,001 rows crosses the Arrow boundary as two batches
+    (maxRecordsPerBatch 10,000), the second with one row."""
+    pages = _hostile_pages()
+    df = spark.createDataFrame(
+        pages, "url string, warc_ts timestamp, html binary, text string, lang string")
+    batches = spark.sparkContext.accumulator(0)
+    one_row = spark.sparkContext.accumulator(0)
+
+    def observe(out):
+        batches.add(1)
+        one_row.add(int(len(out) == 1))
+
+    hooks = qp.PipelineHooks(on_batch=observe)
+    got = (qp.process(df, buckets=1, hooks=hooks).toPandas()
+           .sort_values("url").reset_index(drop=True))
+    assert (batches.value, one_row.value) == (2, 1)
+    exp = golden.run(pages).sort_values("url").reset_index(drop=True)
+    assert list(got["url"]) == list(exp["url"])
+    cols = ["keep", "lang_detected"] + [c for c in exp.columns if c.startswith("scrub_")]
+    for c in cols:
+        assert (got[c] == exp[c]).all(), c
+    assert (got["text"] == exp["scrubbed_text"]).all()
+    assert list(map(list, got["rules_hit"])) == list(map(list, exp["rules_hit"]))
+    a, b = got["perplexity"].to_numpy(), exp["perplexity"].to_numpy()
+    assert ((a == b) | (pd.isna(a) & pd.isna(b))).all()
