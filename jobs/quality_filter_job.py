@@ -7,11 +7,14 @@
         [--buckets 256] [--snapshot-id 0] [--incremental]
 
 Reads pages (url, warc_ts, html, text, lang), runs the fused single-pass
-kernel stage (extract + langid + rules + perplexity + scrub), writes
-labels / scrubbed / metrics tables plus the full result, and prints one
-JSON line with docs/sec. With --incremental, each input parquet file is
-treated as a committed-once increment (streaming/incremental.py) so a
-re-run resumes from the checkpoint manifest.
+kernel stage (extract + langid + rules + perplexity + scrub), writes the
+full result plus labels / scrubbed projections of it, a metrics table of
+per-processing-task lineage rows counted in that same pass, and the run
+record ``<output>/_run.json`` (totals, partition count, skew), and prints
+one JSON line with docs/sec (its doc count from the run record). With
+--incremental, each input parquet file is treated as a committed-once
+increment (streaming/incremental.py) so a re-run resumes from the
+checkpoint manifest.
 
 The package zip is built by `python tools/build_pyfiles.py`. On a cluster
 substitute the parquet paths with Iceberg table identifiers — the plan is
@@ -77,8 +80,8 @@ def main() -> None:
 
     pages = spark.read.parquet(args.input)
     result = qp.process(pages, buckets=args.buckets)
-    qp.write_outputs(result, args.output, snapshot_id=args.snapshot_id)
-    n = spark.read.parquet(f"{args.output}/labels").count()
+    n = qp.write_outputs(result, args.output,
+                         snapshot_id=args.snapshot_id)["totals"]["docs"]
     sec = time.perf_counter() - t0
     print(json.dumps({
         "job": "quality_filter",

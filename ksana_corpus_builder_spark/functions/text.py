@@ -44,21 +44,8 @@ def normalize_raw(texts: pd.Series) -> pd.Series:
 
 _COMMENT = re.compile(r"<!--.*?-->", re.DOTALL)
 _ANY_TAG = re.compile(r"<.+?>", re.DOTALL)  # reference handlers.js:3
-_SPACES = re.compile(r"[ \t\f\v]+")
-_LINE_EDGE = re.compile(r" *\n *")
-_MULTI_NL = re.compile(r"\n{3,}")
 
 _ENTITIES = [("&lt;", "<"), ("&gt;", ">"), ("&quot;", '"'), ("&#39;", "'"), ("&amp;", "&")]
-
-
-def _collapse_ws_regex(s: pd.Series) -> pd.Series:
-    """Steps 5-6 of the contract as the original three regex passes + strip.
-    Test oracle only (tests/test_properties.py): :func:`_collapse_ws` is the
-    one production path, lone surrogates included."""
-    s = s.str.replace(_SPACES, " ", regex=True)
-    s = s.str.replace(_LINE_EDGE, "\n", regex=True)
-    s = s.str.replace(_MULTI_NL, "\n\n", regex=True)
-    return s.str.strip()
 
 
 def _collapse_ws(texts: pd.Series) -> pd.Series:
@@ -76,8 +63,8 @@ def _collapse_ws(texts: pd.Series) -> pd.Series:
     edges. That makes the passes a pure per-run rewrite, done here as mask
     algebra over the batch's code-unit buffer (wordstream.TextBatch;
     match-per-space regex scanning was ~6x the cost of this whole-batch
-    form; equivalence is pinned by tests/test_properties.py against
-    _collapse_ws_regex).
+    form; equivalence is pinned against the three regex passes, kept as the
+    oracle `_collapse_ws_regex` in tests/test_properties.py).
     """
     batch = TextBatch(texts)
     buf, offs, lens = batch.buf, batch.offs, batch.lens

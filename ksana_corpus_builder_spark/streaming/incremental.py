@@ -16,9 +16,10 @@ runs anywhere (the sandbox has no Iceberg runtime jar):
   difference on file names — metadata-sized, never data-sized), and runs
   the user's batch function only over new files.
 
-Lineage: every increment's output is tagged with the increment id and a
-per-partition metrics row (plans/quality_pipeline.metrics) — the Spark
-re-imagination of the reference's buildMeta provenance (index.js:293-318).
+Lineage: every increment's marker records its increment id, output path
+and row count, the count observed during the output write itself (no
+re-read) — the Spark re-imagination of the reference's buildMeta
+provenance (index.js:293-318).
 """
 
 from __future__ import annotations
@@ -30,7 +31,8 @@ import time
 from collections.abc import Callable
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 
 def _safe_name(fn: str) -> str:
@@ -103,8 +105,10 @@ def process_new(
         out = batch_fn(df, inc)
         out_path = os.path.join(out_dir, _safe_name(inc))
         # overwrite => re-running a crashed increment is idempotent
-        out.write.mode("overwrite").parquet(out_path)
-        n = spark.read.parquet(out_path).count()
+        written = Observation()
+        (out.observe(written, F.count(F.lit(1)).alias("n_rows"))
+         .write.mode("overwrite").parquet(out_path))
+        n = written.get["n_rows"]
         sec = time.perf_counter() - t0
         cp.commit(inc, {"increment": inc, "n_rows": n,
                         "out_path": out_path, "seconds": round(sec, 3)})

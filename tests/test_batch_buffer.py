@@ -5,7 +5,7 @@ Every per-doc quantity the fused kernel chain takes from the buffer —
 token stream, char classes, line stats, rule hits, langid, scrub gates —
 is checked here against a plain per-document reference: the formulas the
 kernels used before they moved onto the buffer, kept as test-only
-equivalence oracles (as functions/text.py keeps `_collapse_ws_regex`).
+equivalence oracles (as tests/test_properties.py keeps `_collapse_ws_regex`).
 """
 
 from __future__ import annotations
@@ -189,8 +189,8 @@ def test_plugged_rules_label_like_built_ins():
     pdf = pd.DataFrame({"doc_id": range(len(texts)), "text": texts})
     extra = {"too_short": lambda t: t.str.contains("z", regex=False),
              "has_the": lambda t: t.str.contains("the", regex=False)}
-    out = qp._process_batch(pdf, qp.PipelineHooks(extra_rules=extra),
-                            ["doc_id", "keep", "rules_hit"])
+    out, _ = qp._process_batch(pdf, qp.PipelineHooks(extra_rules=extra),
+                               ["doc_id", "keep", "rules_hit"])
     base = Q.rules_hit_and_keep(pdf["text"])
     plugged = [[n for n, fn in extra.items() if fn(pd.Series([t])).iloc[0]]
                for t in texts]

@@ -50,7 +50,8 @@ def test_no_per_row_loops_in_columnar_kernels():
 
 
 # The text kernels the fused quality pass runs per Arrow batch derive every
-# per-doc quantity from one batch buffer (wordstream.TextBatch). Inside
+# per-doc quantity from one batch buffer (wordstream.TextBatch), and the
+# plan that runs them counts each task's lineage per batch. Inside
 # their functions, flag `.map(lambda` and every loop or comprehension that
 # does not iterate a module constant (the rule / language tables); a
 # reviewed per-row loop — e.g. `subn` over the docs a scrub gate admits —
@@ -58,7 +59,8 @@ def test_no_per_row_loops_in_columnar_kernels():
 # once per process and is not checked.
 _KERNEL_FILES = ("functions/wordstream.py", "functions/quality.py",
                  "functions/scrub.py", "functions/langid.py",
-                 "functions/text.py", "functions/perplexity.py")
+                 "functions/text.py", "functions/perplexity.py",
+                 "plans/quality_pipeline.py")
 _MAP_LAMBDA = re.compile(r"\.map\(\s*lambda")
 _ITER_HELPERS = {"enumerate", "range", "zip", "len", "reversed"}
 

@@ -3,18 +3,22 @@
 - keep/drop F1 >= 0.99 (BASELINE.json)
 - scrubbed text BYTE-IDENTICAL per url
 - extraction byte-identical (pages.text column == extract_text(html))
-- metrics table accounts for every document
+- metrics table accounts for every document, one lineage row per task
 """
 
 from __future__ import annotations
 
 import io
+import json
 import re
 from contextlib import redirect_stdout
 
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
+from ksana_corpus_builder_spark.functions import quality as Q
+from ksana_corpus_builder_spark.functions import scrub as S
 from ksana_corpus_builder_spark.oracle import golden
 from ksana_corpus_builder_spark.plans import quality_pipeline as qp
 from ksana_corpus_builder_spark.sources.pages import make_pages_pdf, pages_df
@@ -86,6 +90,81 @@ def test_metrics_account_for_all_docs(spark, pages_pdf):
     total_hits = int(orc["rules_hit"].map(len).sum())
     got_hits = int(sum(sum(d.values()) for d in m["rule_hit_counts"]))
     assert got_hits == total_hits
+
+
+def _jobs_in_group(spark, group, action):
+    """Run ``action`` under a job group -> the ids of the jobs it ran."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        action()
+        return sorted(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+def test_write_outputs_runs_three_jobs_without_shuffle(spark, pages_pdf, tmp_path):
+    """The kernel pass writes result; labels and scrubbed are its re-read
+    projections; metrics and the run record come from the pass's own
+    lineage rows: three jobs, each one stage (no shuffle)."""
+    result = qp.process(spark.createDataFrame(pages_pdf))
+    jobs = _jobs_in_group(spark, "write-outputs",
+                          lambda: qp.write_outputs(result, str(tmp_path)))
+    assert len(jobs) == 3, jobs
+    tracker = spark.sparkContext.statusTracker()
+    assert [len(tracker.getJobInfo(j).stageIds) for j in jobs] == [1, 1, 1]
+
+
+def test_metrics_table_is_per_task_lineage(spark, pages_pdf, tmp_path):
+    """write_outputs' metrics hold one row per task of the kernel pass,
+    counted in that pass: bucket ids 0-7 with each bucket's docs, the
+    schema the metrics() query gives a stored result, totals that match
+    labels and the golden oracle, and no doubled row when the same
+    process() result runs twice."""
+    out = str(tmp_path)
+    result = qp.process(spark.createDataFrame(pages_pdf), buckets=8)
+    assert result.count() == N  # a first action over the same plan
+    record = qp.write_outputs(result, out, snapshot_id=7)
+
+    m = spark.read.parquet(f"{out}/metrics")
+    stored = qp.metrics(spark.read.parquet(f"{out}/result"), input_snapshot_id=7)
+    stored.write.parquet(f"{out}/metrics-query")
+    assert m.schema == spark.read.parquet(f"{out}/metrics-query").schema
+
+    got = m.toPandas().sort_values("partition_id").reset_index(drop=True)
+    bucket = (spark.createDataFrame(pages_pdf)
+              .groupBy(F.expr("pmod(hash(xxhash64(url)), 8)").alias("pid"))
+              .count().toPandas().sort_values("pid"))
+    assert got["partition_id"].tolist() == list(range(8))
+    assert got["n_docs"].tolist() == bucket["count"].tolist()
+    assert (got["input_snapshot_id"] == 7).all()
+
+    lab = spark.read.parquet(f"{out}/labels").toPandas()
+    assert got["n_docs"].sum() == len(lab) == N
+    assert got["n_kept"].sum() == lab["keep"].sum()
+    orc = golden.run(pages_pdf)
+    hits = {r: sum(d[r] for d in got["rule_hit_counts"]) for r in Q.RULE_NAMES}
+    assert hits == {r: int(orc["rules_hit"].map(lambda h: r in h).sum())
+                    for r in Q.RULE_NAMES}
+    scrub = {n: sum(d[n] for d in got["scrub_stats"]) for n in S.SCRUB_RULE_NAMES}
+    assert scrub == {n: int(orc[f"scrub_{n}"].sum()) for n in S.SCRUB_RULE_NAMES}
+
+    # the run record holds the same totals
+    with open(f"{out}/_run.json") as f:
+        assert json.load(f) == record
+    assert record["input_snapshot_id"] == 7
+    assert record["partitions"] == 8
+    assert record["totals"] == {"docs": N, "kept": int(lab["keep"].sum()),
+                                "rule_hits": hits, "scrub": scrub}
+    rows = got["n_docs"]
+    assert record["skew"]["rows_max_over_median"] == rows.max() / rows.median()
+    assert record["skew"]["kernel_ns_max_over_median"] >= 1.0
+
+
+def test_write_outputs_needs_a_process_result(spark, pages_pdf, tmp_path):
+    result = qp.process(spark.createDataFrame(pages_pdf))
+    with pytest.raises(ValueError):
+        qp.write_outputs(result.select("*"), str(tmp_path))
 
 
 def test_distributed_generator_matches_pandas(spark, pages_pdf):

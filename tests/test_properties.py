@@ -4,6 +4,8 @@ for the codec, tokenizer, and scrub invariants."""
 
 from __future__ import annotations
 
+import re
+
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -112,6 +114,16 @@ def test_codec_column_roundtrip_property(book, page, col, line, ch):
     assert codec.parse(codec.stringify(k, pat), pat) == k
 
 
+def _collapse_ws_regex(s):
+    """Steps 5-6 of the extract_text contract as the original three regex
+    passes + strip: the oracle for the whole-batch ``text._collapse_ws``,
+    which is the one production path, lone surrogates included."""
+    s = s.str.replace(re.compile(r"[ \t\f\v]+"), " ", regex=True)
+    s = s.str.replace(re.compile(r" *\n *"), "\n", regex=True)
+    s = s.str.replace(re.compile(r"\n{3,}"), "\n\n", regex=True)
+    return s.str.strip()
+
+
 # "\ud83c" + "\udf89" are a lone high and a lone low surrogate: adjacent
 # they must stay two chars (a uint16 buffer would decode them as one)
 _WS_ALPHABET = st.sampled_from(
@@ -133,7 +145,7 @@ def test_collapse_ws_matches_regex_path(rows):
     from ksana_corpus_builder_spark.functions import text as T
     s = pd.Series(rows, dtype=object)
     got = T._collapse_ws(s)
-    want = T._collapse_ws_regex(s)
+    want = _collapse_ws_regex(s)
     assert got.tolist() == want.tolist()
 
 

@@ -66,6 +66,150 @@ def test_incremental_crash_recovery(spark, tmp_path):
     assert spark.read.parquet(os.path.join(str(out), "b1.parquet")).count() == 500
 
 
+# A driver that SIGKILL takes down at a chosen point of process_new: it
+# runs the quality pipeline over three page increments and, at the
+# ``where`` point of increment b1, touches ``flag`` and waits to be killed.
+_CRASH_CHILD = r"""
+import os, sys, time
+from pyspark import TaskContext
+from ksana_corpus_builder_spark.plans import quality_pipeline as qp
+from ksana_corpus_builder_spark.session import get_spark
+from ksana_corpus_builder_spark.streaming import incremental
+
+inp, out, flag, where = sys.argv[1:]
+
+
+def hold():
+    open(flag, "w").close()
+    time.sleep(120)
+    os._exit(3)  # not killed: the test fails on the exit code
+
+
+def hold_in_task_1(batch):  # on executors: a write with one task done
+    if TaskContext.get().partitionId() == 1:
+        hold()
+
+
+mid_write = qp.PipelineHooks(on_batch=hold_in_task_1)
+commit = incremental.Checkpoint.commit
+
+
+def commit_or_hold(self, inc, info):  # the data of ``inc`` is written
+    if inc == "b1.parquet":
+        hold()
+    commit(self, inc, info)
+
+
+if where == "before_commit":
+    incremental.Checkpoint.commit = commit_or_hold
+spark = get_spark(cpus=2, shuffle_partitions=2)
+incremental.process_new(spark, inp, out, lambda df, inc: qp.process(
+    df, buckets=2,
+    hooks=mid_write if where == "mid_write" and inc == "b1.parquet" else None))
+"""
+
+_INCREMENT_ROWS = 40
+
+
+def _pages_batch(df, inc):
+    from ksana_corpus_builder_spark.plans import quality_pipeline as qp
+    return qp.process(df, buckets=2)
+
+
+@pytest.fixture(scope="module")
+def page_increments(spark, tmp_path_factory):
+    """Three page increments b0..b2 and the outputs of a clean run."""
+    from ksana_corpus_builder_spark.sources.pages import make_pages_pdf
+    base = tmp_path_factory.mktemp("increments")
+    inp = base / "in"
+    inp.mkdir()
+    for k in range(3):
+        pdf = make_pages_pdf(_INCREMENT_ROWS, seed=5, start_id=k * _INCREMENT_ROWS)
+        pdf["warc_ts"] = pdf["warc_ts"].dt.tz_localize("UTC").astype("datetime64[us, UTC]")
+        pdf.to_parquet(inp / f"b{k}.parquet", index=False)
+    clean = str(base / "clean")
+    incremental.process_new(spark, str(inp), clean, _pages_batch)
+    return str(inp), _read_outputs(spark, clean)
+
+
+def _read_outputs(spark, out):
+    """Every increment's output -> (url, keep, hits, lang, text) sorted."""
+    df = spark.read.parquet(os.path.join(out, "b*.parquet"))
+    return sorted((r.url, r.keep, tuple(r.rules_hit), r.lang_detected, r.text)
+                  for r in df.collect())
+
+
+def _crash(tmp_path, inp: str, where: str) -> str:
+    """Run process_new over ``inp`` in a child driver until it reaches
+    ``where`` in increment b1, then SIGKILL its whole process group (the
+    driver, its JVM and the Python workers) -> the output directory."""
+    import signal
+    import subprocess
+    import sys
+    import time
+    out, flag = str(tmp_path / "out"), str(tmp_path / "reached")
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {**os.environ, "PYTHONPATH": repo, "SPARK_DRIVER_MEM": "1g",
+           "SPARK_LOCAL_DIRS": str(tmp_path / "local")}
+    with open(tmp_path / "child.log", "w") as log:
+        child = subprocess.Popen(
+            [sys.executable, "-c", _CRASH_CHILD, inp, out, flag, where],
+            env=env, stdout=log, stderr=log, start_new_session=True)
+    try:
+        deadline = time.monotonic() + 300
+        while not os.path.exists(flag):
+            assert child.poll() is None, (tmp_path / "child.log").read_text()
+            assert time.monotonic() < deadline, "child never reached " + where
+            time.sleep(0.1)
+    finally:
+        os.killpg(child.pid, signal.SIGKILL)
+        child.wait(timeout=60)
+    assert child.returncode == -signal.SIGKILL
+    return out
+
+
+def _resume_and_check(spark, inp, out, clean):
+    """process_new picks up b1 and b2; the outputs then equal a clean
+    run's, each url exactly once."""
+    r = incremental.process_new(spark, inp, out, _pages_batch)
+    assert [x.increment for x in r] == ["b1.parquet", "b2.parquet"]
+    assert [x.n_rows for x in r] == [_INCREMENT_ROWS] * 2
+    got = _read_outputs(spark, out)
+    assert len({row[0] for row in got}) == len(got) == 3 * _INCREMENT_ROWS
+    assert got == clean
+    assert incremental.Checkpoint(out).committed() == {
+        "b0.parquet", "b1.parquet", "b2.parquet"}
+
+
+def test_incremental_resume_after_kill_before_commit(spark, tmp_path, page_increments):
+    """SIGKILL after b1's data write, before its marker: b1's output is
+    complete but uncommitted; the anti-join against what was written leaves
+    exactly b2's rows, and process_new redoes b1 (overwrite) and b2."""
+    inp, clean = page_increments
+    out = _crash(tmp_path, inp, "before_commit")
+    assert incremental.Checkpoint(out).committed() == {"b0.parquet"}
+    written = spark.read.parquet(os.path.join(out, "b*.parquet"))
+    assert written.count() == 2 * _INCREMENT_ROWS
+    pages = spark.read.parquet(inp)
+    left = incremental.resume_anti_join(written, pages)
+    b2 = spark.read.parquet(os.path.join(inp, "b2.parquet"))
+    assert sorted(r.url for r in left.select("url").collect()) == sorted(
+        r.url for r in b2.select("url").collect())
+    _resume_and_check(spark, inp, out, clean)
+
+
+def test_incremental_resume_after_kill_mid_write(spark, tmp_path, page_increments):
+    """SIGKILL while b1's write has one task done and one running: nothing
+    of b1 is committed or readable; process_new redoes b1 and b2."""
+    inp, clean = page_increments
+    out = _crash(tmp_path, inp, "mid_write")
+    assert incremental.Checkpoint(out).committed() == {"b0.parquet"}
+    assert not os.path.exists(os.path.join(out, "b1.parquet", "_SUCCESS"))
+    written = spark.read.parquet(os.path.join(out, "b*.parquet"))
+    assert written.count() == _INCREMENT_ROWS
+    _resume_and_check(spark, inp, out, clean)
+
+
 def test_resume_anti_join(spark):
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     done = docs.limit(100).select("doc_id")
