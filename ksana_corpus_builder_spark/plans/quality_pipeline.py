@@ -146,7 +146,7 @@ def _process_batch(pdf: pd.DataFrame, hooks: PipelineHooks | None = None,
     # counts them: a plugged rule of the same name counts toward it
     named = np.array(names)
     counts = np.array(
-        [len(out), keep.sum(),
+        [len(keep), keep.sum(),
          *(flags[:, named == r].any(axis=1).sum() for r in Q.RULE_NAMES),
          *(scrubbed[f"scrub_{n}"].sum() for n in S.SCRUB_RULE_NAMES), 0],
         np.int64)

@@ -1068,8 +1068,8 @@ def q_lineage_metrics(spark: SparkSession, sf: str) -> DataFrame:
     id-hash bucket (the Iceberg ``bucket(url, N)`` write-spec stand-in, the
     same key plans/quality_pipeline repartitions by), so the rows are
     engine-independent and the whole lineage table has a DuckDB twin built
-    from the keep_drop rule SQL. The real pipeline's runtime-partition
-    variant stays in plans/quality_pipeline.metrics()."""
+    from the keep_drop rule SQL. The real pipeline's per-task variant is
+    the metrics table plans/quality_pipeline.write_outputs writes."""
     from .functions.quality import RULE_NAMES
     from .plans import quality_pipeline as qp
     docs = load(spark, sf, "documents")

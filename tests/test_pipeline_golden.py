@@ -92,26 +92,20 @@ def test_metrics_account_for_all_docs(spark, pages_pdf):
     assert got_hits == total_hits
 
 
-def _jobs_in_group(spark, group, action):
-    """Run ``action`` under a job group -> the ids of the jobs it ran."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        action()
-        return sorted(sc.statusTracker().getJobIdsForGroup(group))
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-
-
 def test_write_outputs_runs_three_jobs_without_shuffle(spark, pages_pdf, tmp_path):
     """The kernel pass writes result; labels and scrubbed are its re-read
     projections; metrics and the run record come from the pass's own
     lineage rows: three jobs, each one stage (no shuffle)."""
     result = qp.process(spark.createDataFrame(pages_pdf))
-    jobs = _jobs_in_group(spark, "write-outputs",
-                          lambda: qp.write_outputs(result, str(tmp_path)))
+    sc = spark.sparkContext
+    sc.setJobGroup("write-outputs", "write_outputs")
+    try:
+        qp.write_outputs(result, str(tmp_path))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup("write-outputs")
     assert len(jobs) == 3, jobs
-    tracker = spark.sparkContext.statusTracker()
     assert [len(tracker.getJobInfo(j).stageIds) for j in jobs] == [1, 1, 1]
 
 

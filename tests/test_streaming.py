@@ -85,7 +85,7 @@ def hold():
     os._exit(3)  # not killed: the test fails on the exit code
 
 
-def hold_in_task_1(batch):  # on executors: a write with one task done
+def hold_in_task_1(batch):  # on executors: task 1 holds, task 0 runs on
     if TaskContext.get().partitionId() == 1:
         hold()
 
@@ -143,6 +143,7 @@ def _crash(tmp_path, inp: str, where: str) -> str:
     """Run process_new over ``inp`` in a child driver until it reaches
     ``where`` in increment b1, then SIGKILL its whole process group (the
     driver, its JVM and the Python workers) -> the output directory."""
+    import contextlib
     import signal
     import subprocess
     import sys
@@ -162,7 +163,8 @@ def _crash(tmp_path, inp: str, where: str) -> str:
             assert time.monotonic() < deadline, "child never reached " + where
             time.sleep(0.1)
     finally:
-        os.killpg(child.pid, signal.SIGKILL)
+        with contextlib.suppress(ProcessLookupError):  # the group is gone
+            os.killpg(child.pid, signal.SIGKILL)
         child.wait(timeout=60)
     assert child.returncode == -signal.SIGKILL
     return out
