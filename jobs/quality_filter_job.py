@@ -30,6 +30,13 @@ import time
 from pyspark.sql import SparkSession
 
 
+def read_pages(spark: SparkSession, path: str):
+    """The pages table at ``path``, read with its known schema, so that
+    building the read runs no Spark job to infer it from parquet footers."""
+    from ksana_corpus_builder_spark.sources.pages import PAGES_SCHEMA
+    return spark.read.schema(PAGES_SCHEMA).parquet(path)
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--config", default=None,
@@ -78,7 +85,7 @@ def main() -> None:
         }))
         return
 
-    pages = spark.read.parquet(args.input)
+    pages = read_pages(spark, args.input)
     result = qp.process(pages, buckets=args.buckets)
     n = qp.write_outputs(result, args.output,
                          snapshot_id=args.snapshot_id)["totals"]["docs"]

@@ -15,10 +15,13 @@ a real model without touching callers.
 
 from __future__ import annotations
 
+import functools
+
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 
-from .wordstream import TextBatch
+from . import wordstream as W
 
 _ALPHABET = "abcdefghijklmnopqrstuvwxyz .,0123456789"
 _V = len(_ALPHABET) + 1  # +1 = OOV bucket
@@ -52,12 +55,28 @@ _LOGP = _build_matrix()
 # 1000-executor rollup both need; the float appears only once at the end
 # (10 ** (-sum / (1e6 * n)), two exactly-representable integer inputs).
 _LOGP_E6 = np.round(_LOGP * 1e6).astype(np.int64)
+# the scores by flat pair index, plus a zero slot for the pairs that cross
+# a doc boundary, as float64: every partial sum of a batch's integer scores
+# stays far below 2**53, so a float64 sum is the exact int64 sum
+_PAIR_SCORE = pa.array(np.append(_LOGP_E6.ravel(), 0).astype(np.float64))
 
 # codepoint -> alphabet index LUT: one vectorized gather per document
 # instead of one masked scan per alphabet character (39x fewer passes)
 _LUT = np.full(0x110000, _V - 1, dtype=np.uint8)
 for _ch, _i in _CODE.items():
     _LUT[ord(_ch)] = _i
+
+
+@functools.cache
+def _fold_lut() -> pa.Array:
+    """Codepoint -> the alphabet index of its lowercase, i.e.
+    ``_LUT[ord(chr(c).lower())]`` wherever that lowercase is one char.
+    U+0130 'İ' is the one codepoint whose lowercase is two chars: it maps
+    to OOV here, and docs that hold it are scored per doc. Built once per
+    process by one str.lower over every codepoint."""
+    low = W._every_char().replace("\u0130", "\x00").lower()
+    assert len(low) == 0x110000  # one char per char (checked per codepoint in tests)
+    return pa.array(_LUT[W._codepoints(low)])
 
 
 def _perplexity_one(t: str) -> float:
@@ -69,49 +88,45 @@ def _perplexity_one(t: str) -> float:
     return float(10.0 ** (-s / (n * 1e6)))
 
 
-def perplexity_series(texts: pd.Series) -> pd.Series:
+def perplexity_series(texts: pd.Series,
+                      batch: W.TextBatch | None = None) -> pd.Series:
     """pd.Series[str] -> pd.Series[float64] perplexity (lower = more fluent).
 
-    Whole-batch: per-doc lowercase (C calls; str.lower is per-codepoint, so
-    lowering before concatenation equals lowering each doc), ONE code-unit
-    buffer of the lowered batch (wordstream.TextBatch; a lone surrogate is
-    one OOV unit, as in the per-doc path) + LUT gather, ONE transition-score
-    gather, then per-doc EXACT int64 sums as cumsum differences — the same
-    integer the per-doc path sums, so the resulting float is bit-identical
-    (pinned vs _perplexity_one in tests/test_properties.py). Transitions
-    crossing doc boundaries are excluded by summing only each doc's
-    interior [start, end-1) pair range."""
-    n_rows = len(texts)
-    if n_rows == 0:
-        return pd.Series(np.empty(0, np.float64), index=texts.index)
-    lowered = pd.Series(
-        [t.lower() if isinstance(t, str) else ""
-         for t in texts.to_numpy(dtype=object)],  # row-loop-ok: str.lower per doc
-        dtype=object)
-    batch = TextBatch(lowered)
-    offs, lens = batch.offs, batch.lens
-    idx = _LUT[batch.buf]
-    if len(idx) < 2:
-        return pd.Series(np.full(n_rows, np.inf), index=texts.index)
-    trans = _LOGP_E6[idx[:-1], idx[1:]]
-    tcum = np.zeros(len(trans) + 1, np.int64)
-    np.cumsum(trans, out=tcum[1:])
-    m = len(trans)  # tcum valid indices: 0..m
-    starts = np.minimum(offs[:-1], m)
-    ends = np.minimum(np.maximum(offs[1:] - 1, starts), m)
-    s = tcum[ends] - tcum[starts]  # garbage for len<2 docs; masked below
-    n_tr = lens - 1
-    # the per-doc path gates on the ORIGINAL length (lowercasing can change
-    # length: len('İ')==1 but len('İ'.lower())==2), then divides by the
-    # LOWERED transition count — mirror both exactly (a non-str doc lowers
-    # to "", so its n_tr < 1 whatever its length)
-    ok = (texts.str.len() >= 2).to_numpy(bool, na_value=False) & (n_tr >= 1)
-    out = np.full(n_rows, np.inf)
-    expo = (-s[ok] / (n_tr[ok] * 1e6)).tolist()
-    # CPython float.__pow__, not np.power — they differ by 1 ULP on some
-    # inputs and the per-doc path (and golden oracle) uses the former
-    out[ok] = [10.0 ** e for e in expo]  # row-loop-ok: CPython pow per doc
-    return pd.Series(out, index=texts.index)
+    Whole-batch over the code-unit buffer of ``texts`` (``batch``, the
+    fused pipeline's, or a new wordstream.TextBatch): ONE gather of the
+    case-folding LUT (lowercase, then alphabet index), ONE flat gather of
+    the transition scores of adjacent pairs, whose pairs across a doc
+    boundary point at a zero slot, and ONE segment sum per doc, exact in
+    float64 — the same integer the per-doc path sums, so the
+    resulting float is bit-identical (pinned vs _perplexity_one in
+    tests/test_properties.py). str.lower maps one char to one char except
+    for U+0130, so a doc's lowered length is its length and the per-doc
+    path's gate (original length >= 2) and divisor (lowered transitions)
+    agree; docs holding U+0130 take the per-doc path."""
+    if batch is None:
+        batch = W.TextBatch(texts)
+    buf, offs, lens = batch.buf, batch.offs, batch.lens
+    out = np.full(batch.n_docs, np.inf)
+    ok = np.flatnonzero(lens >= 2)
+    if ok.size:
+        idx = W.gather(_fold_lut(), buf)
+        pair = np.multiply(idx[:-1], _V, dtype=np.uint16)
+        pair += idx[1:]
+        cross = offs[1:-1]
+        pair[cross[(cross > 0) & (cross < buf.size)] - 1] = _V * _V
+        trans = W.gather(_PAIR_SCORE, pair)
+        # each scored doc's segment runs to the next scored doc's start:
+        # its own pairs, then only pairs across a boundary (zero)
+        s = np.add.reduceat(trans, offs[ok])
+        expo = (-s / ((lens[ok] - 1) * 1e6)).tolist()
+        # CPython float.__pow__, not np.power — they differ by 1 ULP on some
+        # inputs and the per-doc path (and golden oracle) uses the former
+        out[ok] = [10.0 ** e for e in expo]  # row-loop-ok: CPython pow per doc
+    if buf.dtype != np.uint8:
+        dotted = np.unique(np.searchsorted(
+            offs, np.flatnonzero(buf == 0x130), side="right") - 1)
+        out[dotted] = [_perplexity_one(t) for t in batch.vals[dotted]]  # row-loop-ok: docs holding U+0130
+    return pd.Series(out, index=batch.index)
 
 
 def sql_parts() -> tuple[str, str, int]:

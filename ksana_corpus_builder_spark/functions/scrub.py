@@ -43,7 +43,8 @@ SCRUB_RULE_NAMES = [name for name, _, _ in SCRUB_RULES]
 #   toxicity     w o r d, either case     (every lexicon word ends so)
 # A doc without its rule's shape cannot match, so the full-pattern subn
 # runs only on gated docs. Each shape is searched with numpy only around
-# anchors (TextBatch.docs_with): positions of one of its rare chars, or,
+# anchors (TextBatch.docs_with): positions of one of its rare chars (a
+# class code each, wordstream.ANCHORS, so one compare finds them), or,
 # for a digit that follows a non-digit in the shape, the starts of digit
 # runs (every occurrence of the shape starts a run there) — never with a
 # per-doc regex. Soundness across the ORDERED rewrite, i.e. gating on the
@@ -69,13 +70,11 @@ _GATES: dict[str, tuple[int, tuple[str, ...]]] = {
 
 def gated_docs(batch: wordstream.TextBatch) -> dict[str, np.ndarray]:
     """rule name -> sorted indexes of the docs that pass its gate."""
-    anchors: dict[str, np.ndarray] = {}
     out = {}
     for name, (at, shape) in _GATES.items():
-        a = shape[at]
-        if a not in anchors:
-            anchors[a] = batch.digit_run_at if a == _D else batch.ascii_at(a)
-        out[name] = batch.docs_with(anchors[a], at, shape)
+        anchors = (batch.digit_run_at if shape[at] == _D
+                   else batch.where(wordstream.ANCHORS[shape[at]]))
+        out[name] = batch.docs_with(anchors, at, shape)
     return out
 
 

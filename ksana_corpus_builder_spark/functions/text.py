@@ -16,7 +16,7 @@ import re
 import numpy as np
 import pandas as pd
 
-from .wordstream import TextBatch
+from .wordstream import BLANK, LF, TextBatch
 
 _BOM = "﻿"
 _CRLF = re.compile(r"\r\n?")
@@ -48,72 +48,61 @@ _ANY_TAG = re.compile(r"<.+?>", re.DOTALL)  # reference handlers.js:3
 _ENTITIES = [("&lt;", "<"), ("&gt;", ">"), ("&quot;", '"'), ("&#39;", "'"), ("&amp;", "&")]
 
 
-def _collapse_ws(texts: pd.Series) -> pd.Series:
-    """Whitespace collapse (contract steps 5-6), whole-batch numpy.
+def _collapse_ws(texts: pd.Series) -> TextBatch:
+    """Whitespace collapse and strip (contract steps 5-6) in the batch's
+    code-unit buffer -> the batch of the result.
 
     The three sequential regex passes ([ \\t\\f\\v]+ -> ' ', ' *\\n *' ->
-    '\\n', \\n{3,} -> '\\n\\n') compose, per maximal run of the chars
+    '\\n', \\n{3,} -> '\\n\\n') compose, per maximal run of the blanks
     {space, tab, FF, VT, LF}, to: a run containing no LF collapses to one
     space; a run containing k LFs collapses to min(k, 2) newlines (every
     space subrun inside or at the edge of such a run borders an LF, so the
-    line-edge pass deletes it). Runs never merge across the non-whitespace
+    line-edge pass deletes it). Runs never merge across the non-blank
     chars separating them, and other Unicode whitespace (NBSP, U+3000, ...)
     is untouched by all three passes — it splits runs exactly like any
-    non-matched char, and only the final str.strip() removes it at the
-    edges. That makes the passes a pure per-run rewrite, done here as mask
-    algebra over the batch's code-unit buffer (wordstream.TextBatch;
-    match-per-space regex scanning was ~6x the cost of this whole-batch
-    form; equivalence is pinned against the three regex passes, kept as the
-    oracle `_collapse_ws_regex` in tests/test_properties.py).
+    non-matched char. str.strip() then removes the \\s runs at each doc's
+    edges; as the collapse maps \\s runs to \\s runs and leaves every
+    other char, those are the edge \\s runs of the input. Only \\s units
+    change, so the work runs over their sorted positions
+    (TextBatch.ws_at), and the result is the buffer's kept units with each
+    run's rewrite, in the narrowest tier that holds them. Equivalence is
+    pinned against the regex passes, kept as the oracle
+    `_collapse_ws_regex` in tests/test_properties.py.
     """
     batch = TextBatch(texts)
-    buf, offs, lens = batch.buf, batch.offs, batch.lens
-    n = len(buf)
-    if n == 0:  # the run masks below index [0] and [-1]
-        return pd.Series([""] * len(texts), index=texts.index, dtype=object)
+    at = batch.ws_at
+    if not at.size:
+        return batch
+    code = batch.cls[at]
+    blank = (code & BLANK) != 0
+    cont = batch.ws_cont
+    # the first unit of each run of blanks, and the LFs in the run (the
+    # \s units up to the next run's head that are not in it are no LF)
+    head = blank.copy()
+    head[1:] &= ~(cont[1:] & blank[:-1])
+    heads = np.flatnonzero(head)
+    k = np.add.reduceat(code == LF, heads, dtype=np.int64)
+    two = heads[k >= 2] + 1  # the run's second unit, kept as '\n'
+    drop = blank & ~head
+    drop[two] = False
+    # str.strip(): the \s runs holding a doc's first or last unit go whole
+    run = np.cumsum(~cont) - 1
+    edge = np.zeros(run[-1] + 1, bool)
+    ne = batch.lens > 0
+    edge[run[batch.ws_index(batch.offs[:-1][ne])]] = True
+    edge[run[batch.ws_index(batch.offs[1:][ne] - 1)]] = True
+    drop |= edge[run]
 
-    is_nl = buf == 10
-    is_ws = (buf == 32) | (buf == 9) | (buf == 12) | (buf == 11) | is_nl
-
-    # run starts/ends, never crossing row boundaries
-    prev_ws = np.empty(n, bool)
-    prev_ws[0] = False
-    prev_ws[1:] = is_ws[:-1]
-    next_ws = np.empty(n, bool)
-    next_ws[-1] = False
-    next_ws[:-1] = is_ws[1:]
-    at_row_start = np.zeros(n, bool)
-    at_row_start[offs[:-1][lens > 0]] = True
-    at_row_end = np.zeros(n, bool)
-    at_row_end[offs[1:][lens > 0] - 1] = True
-    start_mask = is_ws & (~prev_ws | at_row_start)
-    end_mask = is_ws & (~next_ws | at_row_end)
-    starts = np.flatnonzero(start_mask)
-    ends = np.flatnonzero(end_mask)  # same count, pairwise inclusive
-
-    # newlines per run via one cumsum (int32 is safe: n < 2^31 per batch)
-    nl_cum = np.zeros(n + 1, np.int32)
-    np.cumsum(is_nl, out=nl_cum[1:])
-    k = nl_cum[ends + 1] - nl_cum[starts]
-
-    out = buf.copy()
-    keep = ~is_ws
-    keep[starts] = True
-    out[starts] = np.where(k == 0, 32, 10)
-    two = starts[k >= 2] + 1  # run length >= k >= 2, stays in-run
-    keep[two] = True
-    out[two] = 10
-
-    keep_cum = np.zeros(n + 1, np.int32)
-    np.cumsum(keep, out=keep_cum[1:])
-    new_offs = keep_cum[offs]
-    flat = batch.decode(out[keep])
-    res = pd.Series(
-        [flat[new_offs[i]:new_offs[i + 1]]
-         for i in range(batch.n_docs)],  # row-loop-ok: one slice per doc
-        index=texts.index,
-    )
-    return res.str.strip()
+    units = batch.buf.copy()
+    units[at[heads]] = np.where(k == 0, 32, 10)
+    units[at[two]] = 10
+    gone = at[drop]
+    units = np.delete(units, gone)
+    if units.dtype == np.uint16 and units.size and units.max() < 0x80:
+        units = units.astype(np.uint8)  # its only wide chars were stripped
+    return TextBatch.from_units(
+        units, batch.surrogates, batch.offs - np.searchsorted(gone, batch.offs),
+        texts.index)
 
 
 # --- configurable handler registry (reference setHandlers, U1/U4) ---------
@@ -123,7 +112,7 @@ def _collapse_ws(texts: pd.Series) -> pd.Series:
 #   "break"  emit a newline at the closing tag (block-level default),
 #   "drop"   remove the element INCLUDING its content (script/style-like),
 #   "strip"  remove the tags, keep the content (inline default).
-# extract_text IS extract_text_with_rules under DEFAULT_TAG_RULES.
+# extract_text IS extract_batch under DEFAULT_TAG_RULES, as strings.
 
 DEFAULT_TAG_RULES: dict[str, str] = dict(
     {t: "break" for t in ("p", "div", "li", "ul", "ol", "tr", "table",
@@ -155,11 +144,12 @@ def compile_rules(rules: dict[str, str]):
 _DEFAULT_RULES_RE = compile_rules(DEFAULT_TAG_RULES)
 
 
-def extract_text_with_rules(htmls: pd.Series,
-                            rules: dict[str, str] | None = None) -> pd.Series:
-    """pd.Series[bytes|str html] -> pd.Series[str text] under a tag-rule
-    registry; rules=None (or DEFAULT_TAG_RULES, compiled once at import)
-    is :func:`extract_text`.
+def extract_batch(htmls: pd.Series,
+                  rules: dict[str, str] | None = None) -> TextBatch:
+    """pd.Series[bytes|str html] -> the TextBatch of the extracted text
+    under a tag-rule registry (rules=None: DEFAULT_TAG_RULES, compiled
+    once at import). Its buffer is the one the fused pipeline's kernels
+    share: the batch's only encode is of the pre-collapse text.
 
     Pass structure is deliberate: fusing the literal entity replaces or the
     whitespace passes into single regexes with callable replacements was
@@ -181,6 +171,13 @@ def extract_text_with_rules(htmls: pd.Series,
     for ent, ch in _ENTITIES:
         s = s.str.replace(ent, ch, regex=False)
     return _collapse_ws(s)
+
+
+def extract_text_with_rules(htmls: pd.Series,
+                            rules: dict[str, str] | None = None) -> pd.Series:
+    """pd.Series[bytes|str html] -> pd.Series[str text] under a tag-rule
+    registry (see :func:`extract_batch`)."""
+    return extract_batch(htmls, rules).texts
 
 
 def extract_text(htmls: pd.Series) -> pd.Series:

@@ -1,31 +1,36 @@
 """Shared vectorized views over a batch of documents.
 
 Everything the fused kernel chain needs per document derives from ONE
-precompute per Arrow batch, :class:`TextBatch`: the batch's text encoded
-once into a flat code-unit buffer with doc offsets. From it, lazily and at
-most once each:
+code-unit buffer per Arrow batch, :class:`TextBatch`: the batch's text as
+a flat buffer with doc offsets. On the html path it is extract's own
+buffer (functions/text.py encodes the pre-collapse text once, collapses
+and strips it in the buffer and hands the result over with
+:meth:`TextBatch.from_units`); on the text path, the input encoded once.
+From it, lazily and at most once each:
 
-- :class:`CharStats` — per-document counts of regex character classes
-  (\\s, CJK, [0-9]) as segment sums of masks over the buffer. \\s
-  membership comes from a LUT built once per process by Python's `re`
-  itself (exact regex semantics, so parity with `str.count(r"\\s")` and
-  the SQL twins holds by construction); CJK/digits are range predicates.
+- the class code of every unit (:attr:`TextBatch.cls`), ONE gather of a
+  LUT over all codepoints: \\s (decided by Python's `re` itself, so parity
+  with `str.count(r"\\s")` and the SQL twins holds by construction), the
+  blanks extract collapses, newline, [0-9], CJK and the scrub anchors; and
+  the sorted buffer positions of a class, counted per doc by ONE
+  searchsorted of the doc offsets.
+
+- :class:`CharStats` — per-document counts of \\s, CJK and [0-9].
 
 - :class:`WordStream` — the factorized token stream: every word of every
   document from ONE `" ".join(batch).split()`, `pd.factorize`d once (one
-  hash pass). Tokens per doc come from the \\s LUT over the buffer (token
-  starts = non-space after space or doc start); `str.split()` and `re`'s
-  \\s agree on every codepoint (pinned in tests), so the two counts add up.
-  Per-token work then collapses to C-level gathers over the ~10x-smaller
-  unique-word table, and per-document reductions become cumsum/bincount
-  boundary arithmetic.
+  hash pass). Tokens per doc come from the runs of \\s positions (a doc's
+  runs of non-\\s); `str.split()` and `re`'s \\s agree on every codepoint
+  (pinned in tests), so the two counts add up. Per-token work then
+  collapses to C-level gathers over the ~10x-smaller unique-word table,
+  and per-document reductions become cumsum/bincount boundary arithmetic.
 
 - :class:`LineStats` — n_lines / n_dup_lines / max_line_len from the
   newline count plus ONE `"\\n".join(...).split("\\n")` + factorize over
   the docs that have a newline at all.
 
-- the digit-run / '.' / '-' / '@' / 'w'-position arrays the scrub
-  kernel's gates look around (functions/scrub.py).
+- the digit-run and anchor positions the scrub kernel's gates look around
+  (functions/scrub.py), and the units perplexity scores.
 
 TextBatch is the only place a batch of text becomes a code-unit buffer:
 the narrowest dtype that holds its codepoints (uint8 ascii, uint16 BMP,
@@ -35,6 +40,7 @@ the buffer decodes back to the same text; :meth:`TextBatch.decode`).
 
 from __future__ import annotations
 
+import functools
 import itertools
 import re
 from dataclasses import dataclass
@@ -42,6 +48,8 @@ from functools import cached_property
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
 
 @dataclass
@@ -75,8 +83,7 @@ class WordStream:
 
     @cached_property
     def uniq_lens(self) -> np.ndarray:
-        return (self.uniq_series.str.len().to_numpy(dtype=np.int64)
-                if len(self.uniq) else np.zeros(0, np.int64))
+        return np.fromiter(map(len, self.uniq), np.int64, len(self.uniq))
 
     def seg_sum(self, per_token: np.ndarray) -> np.ndarray:
         """Exact per-doc sums of a per-token array (cumsum boundary diff —
@@ -149,29 +156,60 @@ def build(words: pd.Series) -> WordStream:
 
 DIGITS = "0123456789"
 _WS_RE = re.compile(r"\s")
-_WS_LUT: np.ndarray | None = None
+
+# The class code of a code unit, one uint8 from ONE gather per batch
+# (TextBatch.cls): bit 0 is \s; bit 1 marks the blanks that extract
+# collapses (space, \t, \n, \v, \f; all \s); the bits above name the
+# one class below that the unit belongs to, if any.
+WS, BLANK = 0x01, 0x02
+LF = WS | BLANK | 1 << 2
+DIGIT = 2 << 2                     # [0-9]
+CJK = 3 << 2                       # U+4E00-U+9FFF
+# the chars the scrub gates anchor on (functions/scrub.py), a code each
+ANCHORS = {"@": 4 << 2, ".": 5 << 2, "-": 6 << 2, "wW": 7 << 2}
 
 
-def _ws_lut() -> np.ndarray:
-    """Lazily-built \\s membership LUT for the BMP (codepoints < 0x10000),
-    decided by Python's `re` itself so semantics are exact by construction.
-    No whitespace codepoint exists above the BMP (highest is U+3000), so
-    supplementary codepoints clamp to a non-ws slot. One-time ~50 ms per
-    process, then membership is a single gather per batch."""
-    global _WS_LUT
-    if _WS_LUT is None:
-        lut = np.zeros(0x10000, dtype=bool)
-        for c in range(0x10000):
-            if _WS_RE.match(chr(c)):
-                lut[c] = True
-        assert not lut[0xFFFF]  # the clamp slot must be non-whitespace
-        _WS_LUT = lut
-    return _WS_LUT
+@functools.cache
+def _every_char() -> str:
+    """Every codepoint, U+0000 to U+10FFFF, as one string (lone
+    surrogates included): LUTs over codepoints are built from it by
+    Python's own str methods and `re`, whole-string."""
+    return np.arange(0x110000, dtype=np.uint32).tobytes().decode(
+        "utf-32-le", "surrogatepass")
+
+
+def _codepoints(s: str) -> np.ndarray:
+    """The codepoints of ``s`` as uint32 (for building LUTs)."""
+    return np.frombuffer(s.encode("utf-32-le", "surrogatepass"), np.uint32)
+
+
+@functools.cache
+def _class_lut() -> pa.Array:
+    """Codepoint -> class code, built once per process (~30 ms). \\s is
+    decided by `re` itself over every codepoint, so it is exact by
+    construction (tests/test_batch_buffer.py checks every class over all
+    codepoints)."""
+    lut = np.zeros(0x110000, np.uint8)
+    spaces = "".join(_WS_RE.findall(_every_char()))
+    lut[_codepoints(spaces)] = WS
+    lut[np.frombuffer(b" \t\n\v\f", np.uint8)] |= BLANK
+    lut[10] = LF
+    lut[0x30:0x3A] = DIGIT
+    lut[0x4E00:0xA000] = CJK
+    for chars, code in ANCHORS.items():
+        lut[np.frombuffer(chars.encode("ascii"), np.uint8)] = code
+    return pa.array(lut)
+
+
+def gather(lut: pa.Array, units: np.ndarray) -> np.ndarray:
+    """``lut[units]`` as a read-only array. Arrow's take is ~3x numpy's
+    fancy indexing with uint16 indexes (no widening copy of the index)."""
+    return pc.take(lut, pa.array(units)).to_numpy()
 
 
 @dataclass
 class CharStats:
-    """Per-document character-class counts, all from ONE buffer pass.
+    """Per-document character-class counts from the batch's class codes.
     ``batch`` is the TextBatch they came from, so a kernel handed only
     ``chars`` still shares every other view of the same buffer."""
     n_chars: np.ndarray
@@ -220,16 +258,48 @@ class TextBatch:
     `buf[offs[i]:offs[i+1]]` are document i's codepoints, in the narrowest
     dtype that holds them (see :func:`_encode`). Every derived view is a
     cached property, computed on first use and then shared by all kernels.
+    ``TextBatch(texts)`` encodes a Series; :meth:`from_units` takes a
+    buffer made from another batch's (extract's collapse), whose strings
+    ``vals`` are then decoded from it on first use.
     """
 
     def __init__(self, texts: pd.Series):
-        self.vals = texts.fillna("").to_numpy(dtype=object)
-        self.n_docs = n = len(self.vals)
-        self.lens = np.fromiter(map(len, self.vals), np.int64, n)
-        self.offs = np.zeros(n + 1, np.int64)
-        np.cumsum(self.lens, out=self.offs[1:])
-        self.buf, self.surrogates = _encode("".join(self.vals))
+        vals = texts.fillna("").to_numpy(dtype=object)
+        offs = np.zeros(len(vals) + 1, np.int64)
+        np.cumsum(np.fromiter(map(len, vals), np.int64, len(vals)),
+                  out=offs[1:])
+        self._init(*_encode("".join(vals)), offs, texts.index)
+        self.vals = vals
+
+    @classmethod
+    def from_units(cls, buf: np.ndarray, surrogates: bool, offs: np.ndarray,
+                   index: pd.Index) -> TextBatch:
+        """The batch over ``buf`` (in its narrowest tier; ``surrogates``:
+        whether it holds a lone surrogate) cut at ``offs``."""
+        batch = cls.__new__(cls)
+        batch._init(buf, surrogates, offs, index)
+        return batch
+
+    def _init(self, buf: np.ndarray, surrogates: bool, offs: np.ndarray,
+              index: pd.Index) -> None:
+        self.buf, self.surrogates, self.offs = buf, surrogates, offs
+        self.index = index
+        self.n_docs = len(offs) - 1
+        self.lens = np.diff(offs)
         self._nonempty = self.lens > 0
+        self._where: dict[int, np.ndarray] = {}
+
+    @cached_property
+    def vals(self) -> np.ndarray:
+        """The documents as str (object array): one decode of the buffer,
+        then one slice per doc."""
+        flat, o = self.decode(self.buf), self.offs.tolist()
+        return np.fromiter((flat[a:b] for a, b in zip(o, o[1:])),  # row-loop-ok: one slice per doc
+                           object, self.n_docs)
+
+    @property
+    def texts(self) -> pd.Series:
+        return pd.Series(self.vals, index=self.index, dtype=object)
 
     @cached_property
     def hash_unsafe(self) -> bool:
@@ -243,61 +313,83 @@ class TextBatch:
         return units.tobytes().decode(_CODECS[units.dtype.itemsize],
                                       "surrogatepass")
 
-    def seg_sum(self, mask: np.ndarray) -> np.ndarray:
-        """Per-doc sums of a per-code-unit mask: reduceat over NON-EMPTY doc
-        starts with an int64 accumulator — empty docs occupy no buffer, so
-        each slice is exactly one doc's code units."""
-        out = np.zeros(self.n_docs, np.int64)
-        if self.buf.size:
-            out[self._nonempty] = np.add.reduceat(
-                mask, self.offs[:-1][self._nonempty], dtype=np.int64)
-        return out
+    def count(self, at: np.ndarray) -> np.ndarray:
+        """Per-doc number of the sorted buffer positions ``at``."""
+        return np.diff(np.searchsorted(at, self.offs))
 
     @cached_property
-    def is_ws(self) -> np.ndarray:
-        b = self.buf
-        return _ws_lut()[np.minimum(b, 0xFFFF) if b.dtype == np.uint32 else b]
+    def cls(self) -> np.ndarray:
+        """The class code of every code unit (read-only)."""
+        return gather(_class_lut(), self.buf)
+
+    def where(self, code: int) -> np.ndarray:
+        """Sorted buffer positions of the units whose class code is
+        ``code`` (cached per code)."""
+        if code not in self._where:
+            self._where[code] = np.flatnonzero(self.cls == code)
+        return self._where[code]
 
     @cached_property
-    def is_digit(self) -> np.ndarray:
-        return _is_any(self.buf, DIGITS)  # ASCII [0-9], regex-identical
+    def ws_at(self) -> np.ndarray:
+        """Sorted buffer positions of the \\s units (~1/5 of the buffer in
+        prose): whitespace, token and line work runs over these."""
+        return np.flatnonzero((self.cls & WS).view(bool))
+
+    def ws_index(self, pos: np.ndarray) -> np.ndarray:
+        """Indexes into :attr:`ws_at` of the positions in ``pos`` that hold
+        a \\s unit."""
+        at = self.ws_at
+        i = np.searchsorted(at, pos)
+        ok = i < at.size
+        i = i[ok]
+        return i[at[i] == pos[ok]]
+
+    @cached_property
+    def ws_cont(self) -> np.ndarray:
+        """Per \\s position: whether it continues a run of \\s, i.e. the
+        unit before it is \\s of the same doc."""
+        at = self.ws_at
+        cont = np.zeros(at.size, bool)
+        cont[1:] = at[1:] == at[:-1] + 1
+        cont[self.ws_index(self.offs[:-1][self._nonempty])] = False
+        return cont
 
     @cached_property
     def digit_run_at(self) -> np.ndarray:
         """Buffer positions where a maximal run of digits starts."""
-        at = np.flatnonzero(self.is_digit)
+        at = self.where(DIGIT)
         first = np.ones(at.size, bool)
         first[1:] = at[1:] != at[:-1] + 1
         return at[first]
 
     @cached_property
     def chars(self) -> CharStats:
-        b = self.buf
-        cjk = (b >= 0x4E00) & (b <= 0x9FFF) if b.dtype != np.uint8 else None
         return CharStats(
             n_chars=self.lens,
-            nonspace=self.lens - self.seg_sum(self.is_ws),
-            cjk=(self.seg_sum(cjk) if cjk is not None
+            nonspace=self.lens - self.count(self.ws_at),
+            cjk=(self.count(self.where(CJK)) if self.buf.dtype != np.uint8
                  else np.zeros(self.n_docs, np.int64)),
-            digits=self.seg_sum(self.is_digit),
+            digits=self.count(self.where(DIGIT)),
             batch=self)
 
     @cached_property
     def stream(self) -> WordStream:
-        # a token starts at a non-space unit after a space or a doc start
-        ws = self.is_ws
-        start = ~ws
-        start[1:] &= ws[:-1]
-        first = self.offs[:-1][self._nonempty]
-        start[first] = ~ws[first]
-        lens = self.seg_sum(start)
+        # a doc's tokens are its runs of non-\s: one more than its runs of
+        # \s, less one per edge that is \s
+        ne = self._nonempty
+        cls = self.cls
+        lens = np.zeros(self.n_docs, np.int64)
+        lens[ne] = (self.count(self.ws_at[~self.ws_cont])[ne] + 1
+                    - (cls[self.offs[:-1][ne]] & WS)
+                    - (cls[self.offs[1:][ne] - 1] & WS))
         tokens = " ".join(self.vals).split()
         assert len(tokens) == int(lens.sum())
         return WordStream.from_tokens(tokens, lens, self.hash_unsafe)
 
     @cached_property
     def lines(self) -> LineStats:
-        n_nl = self.seg_sum(self.buf == 10)
+        at = self.ws_at
+        n_nl = self.count(at[self.cls[at] == LF])
         n_lines = n_nl + 1
         n_dup = np.zeros(self.n_docs, np.int64)
         max_len = self.lens.copy()  # a doc without '\n' is one line
@@ -305,8 +397,8 @@ class TextBatch:
         if multi.size:
             lines = "\n".join(self.vals[multi]).split("\n")
             codes, uniq = _factorize(lines, self.hash_unsafe)
-            line_lens = pd.Series(uniq, dtype=object).str.len() \
-                .to_numpy(np.int64)[codes]
+            line_lens = np.fromiter(map(len, uniq), np.int64,
+                                    len(uniq))[codes]
             per_doc = n_lines[multi]
             starts = np.zeros(multi.size, np.int64)
             np.cumsum(per_doc[:-1], out=starts[1:])
@@ -315,10 +407,6 @@ class TextBatch:
                 pos, codes, len(uniq), multi.size)
             max_len[multi] = np.maximum.reduceat(line_lens, starts)
         return LineStats(n_lines, n_dup, max_len)
-
-    def ascii_at(self, chars: str) -> np.ndarray:
-        """Buffer positions holding any of the given ASCII chars."""
-        return np.flatnonzero(_is_any(self.buf, chars))
 
     def docs_with(self, anchors: np.ndarray, at: int,
                   shape: tuple[str, ...]) -> np.ndarray:
@@ -337,7 +425,8 @@ class TextBatch:
 
 
 def _is_any(units: np.ndarray, chars: str) -> np.ndarray:
-    """Mask of the code units equal to any of the given ASCII chars."""
+    """Mask of the code units equal to any of the given ASCII chars (for
+    the few units around gate anchors)."""
     if chars == DIGITS:
         return (units >= 0x30) & (units <= 0x39)
     return np.isin(units, np.frombuffer(chars.encode("ascii"), np.uint8))
@@ -356,4 +445,3 @@ def char_stats(texts: pd.Series) -> CharStats:
     """Per-document \\s / CJK / [0-9] counts with exact `re` semantics,
     from one TextBatch (which the result carries as ``.batch``)."""
     return TextBatch(texts).chars
-

@@ -53,7 +53,7 @@ from ..functions import quality as Q
 from ..functions import scrub as S
 from ..functions import wordstream as W
 from ..functions.perplexity import perplexity_series
-from ..functions.text import extract_text
+from ..functions.text import extract_batch
 
 
 @dataclass(frozen=True)
@@ -93,10 +93,13 @@ TEXT_RESULT_SCHEMA = (
 )
 
 # A task's lineage row, int64: docs, kept, docs hit per built-in rule,
-# per-scrub-rule sums, then kernel ns; summed over the task's batches.
+# per-scrub-rule sums, kernel ns, then the ns of each kernel stage; summed
+# over the task's batches.
+STAGES = ("extract", "stats_rules", "langid", "scrub", "perplexity")
 _HITS = slice(2, 2 + len(Q.RULE_NAMES))
 _SCRUBS = slice(_HITS.stop, _HITS.stop + len(S.SCRUB_RULE_NAMES))
 _KERNEL_NS = _SCRUBS.stop
+_ROW = _KERNEL_NS + 1 + len(STAGES)
 
 
 def _columns(schema: str) -> list[str]:
@@ -113,12 +116,18 @@ def _process_batch(pdf: pd.DataFrame, hooks: PipelineHooks | None = None,
     kernels as the golden oracle (oracle/golden.py), which is how
     byte-identity and F1=1.0 are achieved by construction and verified by
     test. Returns the output and the batch's lineage counters (a lineage
-    row with 0 kernel ns)."""
-    text = (extract_text(pdf["html"]) if "html" in pdf.columns
-            else pdf["text"].fillna(""))
-    # ONE code-unit buffer per batch; tokens, char classes, line stats and
-    # the scrub gates all derive from it
-    batch = W.TextBatch(text)
+    row with 0 kernel ns and the ns of each of :data:`STAGES`)."""
+    ns = [time.perf_counter_ns()]
+    # ONE code-unit buffer per batch, extract's own on the html path;
+    # tokens, char classes, line stats, the scrub gates and perplexity all
+    # derive from it
+    if "html" in pdf.columns:
+        batch = extract_batch(pdf["html"])
+        ns.append(time.perf_counter_ns())
+    else:
+        ns.append(ns[0])
+        batch = W.TextBatch(pdf["text"])
+    text = batch.texts
     stream, chars = batch.stream, batch.chars
     extra = hooks.extra_rules if hooks is not None else {}
     stats = Q.word_stats(text, None, stream, chars)
@@ -127,15 +136,20 @@ def _process_batch(pdf: pd.DataFrame, hooks: PipelineHooks | None = None,
                                for fn in extra.values())])  # row-loop-ok: plugged rules
     names = Q.RULE_NAMES + list(extra)
     keep, rules_hit = Q.labels(flags, names)
+    ns.append(time.perf_counter_ns())
     lang = L.detect(text, None, stream, chars)
+    ns.append(time.perf_counter_ns())
     scrubbed = S.scrub_series(text, batch)
+    ns.append(time.perf_counter_ns())
+    perplexity = perplexity_series(text, batch)
+    ns.append(time.perf_counter_ns())
     kernel = {
         "text": scrubbed["text"],
         "keep": keep,
         "rules_hit": rules_hit,
         "lang_detected": lang["lang_detected"],
         "lang_score": (lang["lang_hits"] / lang["n_words"].clip(lower=1)).astype("float64"),
-        "perplexity": perplexity_series(text),
+        "perplexity": perplexity,
         **{f"scrub_{n}": scrubbed[f"scrub_{n}"] for n in S.SCRUB_RULE_NAMES},
     }
     out = pd.DataFrame({c: kernel[c] if c in kernel else pdf[c]
@@ -148,7 +162,8 @@ def _process_batch(pdf: pd.DataFrame, hooks: PipelineHooks | None = None,
     counts = np.array(
         [len(keep), keep.sum(),
          *(flags[:, named == r].any(axis=1).sum() for r in Q.RULE_NAMES),
-         *(scrubbed[f"scrub_{n}"].sum() for n in S.SCRUB_RULE_NAMES), 0],
+         *(scrubbed[f"scrub_{n}"].sum() for n in S.SCRUB_RULE_NAMES), 0,
+         *np.diff(ns)],
         np.int64)
     return out, counts
 
@@ -176,7 +191,7 @@ def _map_batches(df: DataFrame, schema: str,
     lineage = df.sparkSession.sparkContext.accumulator({}, _Lineage())
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        row = np.zeros(_KERNEL_NS + 1, np.int64)
+        row = np.zeros(_ROW, np.int64)
         for pdf in batches:  # row-loop-ok: one step per Arrow batch
             if len(pdf):
                 t0 = time.perf_counter_ns()
@@ -305,6 +320,8 @@ def _run_record(rows: np.ndarray, snapshot_id: int) -> dict:
             "rule_hits": dict(zip(Q.RULE_NAMES, total[_HITS].tolist())),
             "scrub": dict(zip(S.SCRUB_RULE_NAMES, total[_SCRUBS].tolist())),
         },
+        "kernel_ns": dict(zip(("total",) + STAGES,
+                              total[_KERNEL_NS:_ROW].tolist())),
         "partitions": len(rows),
         "skew": {
             "rows_max_over_median": _max_over_median(rows[:, 0]),
@@ -338,7 +355,7 @@ def write_outputs(result: DataFrame, out_dir: str, snapshot_id: int = 0) -> dict
     by_pid = lineage.value
     pids = sorted(by_pid)
     rows = np.array([by_pid[p] for p in pids],  # row-loop-ok: one per task
-                    np.int64).reshape(len(pids), _KERNEL_NS + 1)
+                    np.int64).reshape(len(pids), _ROW)
     _write_metrics(pids, rows, snapshot_id, f"{out_dir}/metrics")
     record = _run_record(rows, snapshot_id)
     with open(os.path.join(out_dir, "_run.json"), "w") as f:

@@ -23,6 +23,7 @@ from ksana_corpus_builder_spark.functions import langid as L
 from ksana_corpus_builder_spark.functions import perplexity as P
 from ksana_corpus_builder_spark.functions import quality as Q
 from ksana_corpus_builder_spark.functions import scrub as S
+from ksana_corpus_builder_spark.functions import text as T
 from ksana_corpus_builder_spark.functions import wordstream as W
 
 STAT_COLUMNS = ["n_chars", "n_words", "sum_word_len", "n_distinct_words",
@@ -160,12 +161,55 @@ def test_batch_edge_cases():
 
 
 def test_whitespace_lut_agrees_with_str_split_on_every_codepoint():
-    """Token counts come from the \\s LUT over the buffer, tokens from
+    """Token counts come from the \\s bit of the class codes, tokens from
     str.split(): the two must agree on every codepoint."""
-    lut = W._ws_lut()
+    lut = W._class_lut().to_numpy()
     for c in range(sys.maxunicode + 1):
         splits = ("x" + chr(c) + "x").split() != ["x" + chr(c) + "x"]
-        assert splits == bool(lut[min(c, 0xFFFF)]), hex(c)
+        assert splits == bool(lut[c] & W.WS), hex(c)
+
+
+def _every_codepoint_where(pattern: str) -> np.ndarray:
+    """The codepoints a one-char regex matches, each tested alone."""
+    return np.array([c for c in range(sys.maxunicode + 1)
+                     if re.fullmatch(pattern, chr(c))], np.int64)
+
+
+def test_class_lut_agrees_with_re_on_every_codepoint():
+    """Each class of the class-code LUT holds exactly the codepoints its
+    regex matches: \\s, the blanks extract collapses, [0-9], U+4E00-U+9FFF,
+    '\\n' and each scrub-gate anchor."""
+    lut = W._class_lut().to_numpy()
+    assert lut.size == sys.maxunicode + 1
+    np.testing.assert_array_equal(np.flatnonzero(lut & W.WS),
+                                  _every_codepoint_where(r"\s"))
+    np.testing.assert_array_equal(np.flatnonzero(lut & W.BLANK),
+                                  _every_codepoint_where(r"[ \t\n\v\f]"))
+    classes = {W.LF: r"\n", W.DIGIT: r"[0-9]", W.CJK: r"[\u4e00-\u9fff]",
+               **{code: "[" + re.escape(chars) + "]"
+                  for chars, code in W.ANCHORS.items()}}
+    assert len(set(classes)) == len(classes)
+    for code, pattern in classes.items():
+        np.testing.assert_array_equal(np.flatnonzero(lut == code),
+                                      _every_codepoint_where(pattern),
+                                      err_msg=pattern)
+
+
+def test_fold_lut_agrees_with_lower_on_every_codepoint():
+    """The perplexity fold LUT is the alphabet index of each codepoint's
+    lowercase wherever that lowercase is one char (the Kelvin sign folds
+    to 'k'); U+0130 is the only codepoint whose lowercase is longer."""
+    fold = P._fold_lut().to_numpy()
+    assert fold.size == sys.maxunicode + 1
+    longer = []
+    for c in range(sys.maxunicode + 1):
+        low = chr(c).lower()
+        if len(low) == 1:
+            assert fold[c] == P._LUT[ord(low)], hex(c)
+        else:
+            longer.append(c)
+    assert longer == [0x130]
+    assert fold[0x212A] == P._CODE["k"]
 
 
 def test_rule_hit_lists_are_not_shared():
@@ -227,6 +271,88 @@ def test_lone_surrogates_run_through_golden_oracle():
     assert out["rules_hit"].tolist() == hits
     assert out["perplexity"].tolist() == [
         P._perplexity_one(t) for t in out["extracted_text"]]
+
+
+# --- the buffer extract hands over -----------------------------------------
+
+# dotted capital I (lowercases to two chars), final sigma, astral chars,
+# lone surrogates, NUL, NBSP / U+3000 and every blank extract collapses,
+# amid tags and entities
+_HOSTILE = ["<p>", "</p>", "<br>", "<script>x</script>", "&amp;", "&lt;",
+            " ", "  ", "\t", "\n", "\n\n\n", "\r\n", "\x0b", "\x0c",
+            "\xa0", "\u3000", "\x85", "\u2028", "İ", "Σ", "ΑΣ", "ς",
+            "\U0001f389", "\ud800", "\udfff", "\x00", "a", "ab", "the",
+            "K", "\u212a", "9", "x@y.com", "word"]
+_html = hst.one_of(
+    hst.lists(hst.sampled_from(_HOSTILE), max_size=20).map("".join),
+    # docs of 0, 1 and 2 chars, docs that collapse to nothing, and
+    # non-ASCII whitespace at the edges
+    hst.sampled_from(["", "a", "İ", "ab", "aİ", "\x00", "\ud800",
+                      "\U0001f389", " \n\t ", "<p> </p>", "\xa0",
+                      "\xa0x\u3000", "\u3000 x \xa0", "\xa0 \n"]))
+
+
+def _check_extract_batch(html: list) -> None:
+    h = pd.Series(html, dtype=object, index=pd.RangeIndex(5, 5 + len(html)))
+    got = T.extract_batch(h)
+    text = T.extract_text(h)
+    want = W.TextBatch(text)
+    assert got.buf.dtype == want.buf.dtype
+    np.testing.assert_array_equal(got.buf, want.buf)
+    np.testing.assert_array_equal(got.offs, want.offs)
+    np.testing.assert_array_equal(got.lens, want.lens)
+    assert list(got.vals) == list(want.vals) == list(text)
+    assert got.texts.index.equals(h.index)
+    assert got.surrogates == want.surrogates
+    assert got.hash_unsafe == want.hash_unsafe
+    # shared-buffer kernels equal the per-doc references
+    assert P.perplexity_series(text, got).tolist() == [
+        P._perplexity_one(t) for t in text]
+    assert list(got.stream.lens) == [len(t.split()) for t in text]
+    assert list(got.lines.n_lines) == [t.count("\n") + 1 for t in text]
+    _check_batch(text)
+
+
+@settings(max_examples=300, deadline=None)
+@given(hst.lists(_html, max_size=8))
+def test_extract_hands_over_the_batch_of_its_text(html):
+    """extract's batch (its collapsed, stripped buffer) is the batch of
+    the text it returns: same dtype tier, offsets, lengths and strings."""
+    _check_extract_batch(html)
+
+
+def test_extract_batch_edge_cases():
+    for html in ([], [""], [None, "", " "], ["İ", "ΑΣ Σ", "ς"],
+                 ["\xa0x\u3000", "\u3000\xa0", "a\xa0"],  # tier narrows
+                 ["\ud800", "\udfff a", "\U0001f389\n\n\n\ud83c"],
+                 ["\x00", "a\x00 b", "<p>\x00</p>"],
+                 [b"<p>bytes \xed\xa0\x80</p>", b"\xef\xbb\xbf<p>x</p>\r\n"]):
+        _check_extract_batch(html)
+
+
+def test_one_encode_per_batch(monkeypatch):
+    """_process_batch encodes its text once: on the html path that is
+    extract's encode of the pre-collapse text, which every kernel then
+    shares through the collapsed buffer derived from it."""
+    from ksana_corpus_builder_spark.plans import quality_pipeline as qp
+    encoded = []
+    encode = W._encode
+
+    def counting(joined):
+        encoded.append(joined)
+        return encode(joined)
+
+    monkeypatch.setattr(W, "_encode", counting)
+    html = ["<p>the  cat\n\n\n sat İ</p>", "<p>call 555 555 0142</p>", ""]
+    pages = pd.DataFrame({"url": ["u0", "u1", "u2"], "html": html})
+    out, _ = qp._process_batch(pages, None, ["url", "text", "perplexity"])
+    assert len(encoded) == 1
+    assert "the  cat\n\n\n sat" in encoded[0]  # not yet collapsed
+    assert out["text"].tolist() == ["the cat\n\nsat İ", "call <PHONE>", ""]
+    encoded.clear()
+    docs = pd.DataFrame({"doc_id": [0, 1], "text": ["the cat", None]})
+    qp._process_batch(docs, None, ["doc_id", "keep", "perplexity"])
+    assert len(encoded) == 1
 
 
 # --- scrub gates ------------------------------------------------------------

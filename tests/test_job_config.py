@@ -57,3 +57,34 @@ def test_job_config_cli_override(spark, tmp_path, monkeypatch):
         "--output", str(out)])  # flags beat config
     job.main()
     assert spark.read.parquet(str(out / "labels")).count() == 10
+
+
+def test_job_reads_pages_without_an_inference_job(spark, tmp_path):
+    """The job reads pages with their known schema: building the read
+    runs no Spark job, where inferring the schema from the parquet
+    footers runs one."""
+    from ksana_corpus_builder_spark.sources.pages import PAGES_SCHEMA
+    inp = tmp_path / "in"
+    inp.mkdir()
+    pq.write_table(pa.Table.from_pandas(make_pages_pdf(10)),
+                   inp / "b0.parquet",
+                   coerce_timestamps="us", allow_truncated_timestamps=True)
+    sys.path.insert(0, "/root/repo/jobs")
+    import quality_filter_job as job
+
+    sc = spark.sparkContext
+
+    def jobs(group: str, build) -> int:
+        """Spark jobs run while ``build()`` builds a read."""
+        sc.setJobGroup(group, group)
+        try:
+            build()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    assert jobs("read-pages", lambda: job.read_pages(spark, str(inp))) == 0
+    assert jobs("read-inferred", lambda: spark.read.parquet(str(inp))) >= 1
+    pages = job.read_pages(spark, str(inp))
+    assert pages.schema == spark.createDataFrame([], PAGES_SCHEMA).schema
+    assert pages.count() == 10

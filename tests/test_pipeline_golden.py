@@ -13,6 +13,7 @@ import json
 import re
 from contextlib import redirect_stdout
 
+import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -153,6 +154,37 @@ def test_metrics_table_is_per_task_lineage(spark, pages_pdf, tmp_path):
     rows = got["n_docs"]
     assert record["skew"]["rows_max_over_median"] == rows.max() / rows.median()
     assert record["skew"]["kernel_ns_max_over_median"] >= 1.0
+
+
+def _check_stage_ns(kernel_ns: dict, extract: bool) -> None:
+    """Every kernel stage ran (extract only on the html path) and the
+    stages add up to at most the kernel ns they are part of."""
+    stages = {k: v for k, v in kernel_ns.items() if k != "total"}
+    assert list(stages) == list(qp.STAGES)
+    assert sum(stages.values()) <= kernel_ns["total"]
+    assert (stages["extract"] > 0) == extract
+    assert all(v > 0 for k, v in stages.items() if k != "extract")
+
+
+def test_run_record_times_each_kernel_stage(spark, pages_pdf, tmp_path):
+    """The run record carries the kernel ns of each stage, summed from
+    the per-batch timings in the tasks' lineage rows."""
+    result = qp.process(spark.createDataFrame(pages_pdf), buckets=4)
+    _check_stage_ns(qp.write_outputs(result, str(tmp_path))["kernel_ns"],
+                    extract=True)
+
+
+def test_text_table_runs_no_extract_stage(spark):
+    docs = spark.createDataFrame(
+        pd.DataFrame({"doc_id": range(50),
+                      "text": ["the cat sat on the mat"] * 50}))
+    result = qp.process_text_table(docs.repartition(3))
+    assert result.count() == 50
+    rows = np.array(list(result._lineage.value.values()))
+    assert len(rows) == 3
+    for row in rows:
+        _check_stage_ns(qp._run_record(row[None, :], 0)["kernel_ns"],
+                        extract=False)
 
 
 def test_write_outputs_needs_a_process_result(spark, pages_pdf, tmp_path):

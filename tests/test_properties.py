@@ -144,7 +144,7 @@ def test_collapse_ws_matches_regex_path(rows):
 
     from ksana_corpus_builder_spark.functions import text as T
     s = pd.Series(rows, dtype=object)
-    got = T._collapse_ws(s)
+    got = T._collapse_ws(s).texts
     want = _collapse_ws_regex(s)
     assert got.tolist() == want.tolist()
 
