@@ -5,6 +5,7 @@ flags. Runs main() in-process against the shared test session."""
 from __future__ import annotations
 
 import json
+import pathlib
 import sys
 
 import pyarrow as pa
@@ -69,7 +70,7 @@ def test_job_reads_pages_without_an_inference_job(spark, tmp_path):
     pq.write_table(pa.Table.from_pandas(make_pages_pdf(10)),
                    inp / "b0.parquet",
                    coerce_timestamps="us", allow_truncated_timestamps=True)
-    sys.path.insert(0, "/root/repo/jobs")
+    sys.path.insert(0, str(pathlib.Path(__file__).resolve().parents[1] / "jobs"))
     import quality_filter_job as job
 
     sc = spark.sparkContext
