@@ -43,13 +43,12 @@ _DRIVER_WINDOW = [
     "contrastive_pairs", "pq_topk", "jsonl_ingest",
     "lang_confusion", "stupid_backoff", "host_reputation",
     "char_entropy",
-    "posting_stats", "book_tpos_map",
-    "dedup_components",
+    "keep_drop", "langid", "scrub", "ccnet_buckets",
     "scrub_rule_counts",
-    "line_dedup",
-    "pagerank", "boilerplate_blocks",
+    "scrub_phone_fixture",
+    "quality_score", "quality_report",
     "corpus_manifest",
-    "pack_sequences", "bpe_pair_counts",
+    "corpus_datacard",
     "minhash_pairs", "simhash", "ccnet_buckets_approx",
 ]
 
@@ -61,12 +60,10 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
 
 
 def entry(spark: SparkSession) -> DataFrame:
-    """Flagship: keep/drop labels + langid over sf0.001 documents via the
-    production vectorized-kernel path (plans/quality_pipeline kernels)."""
+    """Flagship: keep/drop labels + langid over sf0.001 documents from one
+    pass of the production kernels (plans/quality_pipeline)."""
     sf = "/root/testdata/sf0.001"
-    labels = QUERIES["keep_drop"](spark, sf)
-    lang = QUERIES["langid"](spark, sf)
-    return labels.join(lang, "doc_id")
+    return queries_core._labels_and_lang(spark, sf)
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

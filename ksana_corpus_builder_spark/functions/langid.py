@@ -31,17 +31,6 @@ PROFILES: dict[str, tuple[str, ...]] = {
 }
 LANGS = sorted(PROFILES)  # deterministic tie-break order
 
-_CJK_RE = r"[一-鿿]"
-_NONSPACE_RE = r"\S"
-
-
-# word -> tuple of language indexes (profiles overlap: 'de'/'la'/... appear
-# in several languages), built once so scoring is ONE pass per document
-_W2L: dict[str, tuple[int, ...]] = {}
-for _li, _lang in enumerate(LANGS):
-    for _w in PROFILES[_lang]:
-        _W2L[_w] = _W2L.get(_w, ()) + (_li,)
-
 
 def detect(texts: pd.Series, words: pd.Series | None = None,
            stream=None, chars=None) -> pd.DataFrame:

@@ -173,14 +173,7 @@ def extract_batch(htmls: pd.Series,
     return _collapse_ws(s)
 
 
-def extract_text_with_rules(htmls: pd.Series,
-                            rules: dict[str, str] | None = None) -> pd.Series:
-    """pd.Series[bytes|str html] -> pd.Series[str text] under a tag-rule
-    registry (see :func:`extract_batch`)."""
-    return extract_batch(htmls, rules).texts
-
-
 def extract_text(htmls: pd.Series) -> pd.Series:
     """The byte-identity extraction kernel: contract steps 1-6 above under
     DEFAULT_TAG_RULES."""
-    return extract_text_with_rules(htmls)
+    return extract_batch(htmls).texts

@@ -88,7 +88,7 @@ RESULT_SCHEMA = (
 )
 TEXT_RESULT_SCHEMA = (
     "doc_id long, text string, keep boolean, rules_hit array<string>, "
-    "lang_detected string, perplexity double, "
+    "lang_detected string, lang_hits long, n_words long, perplexity double, "
     + ", ".join(f"scrub_{n} long" for n in S.SCRUB_RULE_NAMES)
 )
 
@@ -148,6 +148,8 @@ def _process_batch(pdf: pd.DataFrame, hooks: PipelineHooks | None = None,
         "keep": keep,
         "rules_hit": rules_hit,
         "lang_detected": lang["lang_detected"],
+        "lang_hits": lang["lang_hits"],
+        "n_words": lang["n_words"],
         "lang_score": (lang["lang_hits"] / lang["n_words"].clip(lower=1)).astype("float64"),
         "perplexity": perplexity,
         **{f"scrub_{n}": scrubbed[f"scrub_{n}"] for n in S.SCRUB_RULE_NAMES},
@@ -224,16 +226,14 @@ def process(pages: DataFrame, buckets: int | None = None,
     return _map_batches(df, RESULT_SCHEMA, hooks)
 
 
-def process_text_table(docs: DataFrame, id_col: str = "doc_id",
-                       text_col: str = "text",
+def process_text_table(docs: DataFrame,
                        hooks: PipelineHooks | None = None) -> DataFrame:
     """Same fused single-pass kernel stage for a table whose text is already
-    extracted (the `documents` testdata shape). One Python boundary.
-    ``hooks`` behaves exactly as in :func:`process`."""
-    return _map_batches(
-        docs.select(F.col(id_col).alias("doc_id"),
-                    F.col(text_col).alias("text")),
-        TEXT_RESULT_SCHEMA, hooks)
+    extracted (the `documents` testdata shape: ``doc_id``, ``text``). One
+    Python boundary; the kernel queries over documents are projections of
+    it. ``hooks`` behaves exactly as in :func:`process`."""
+    return _map_batches(docs.select("doc_id", "text"), TEXT_RESULT_SCHEMA,
+                        hooks)
 
 
 def labels(result: DataFrame) -> DataFrame:

@@ -16,9 +16,6 @@ same Python constants the Spark kernels use, so they cannot drift.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -26,6 +23,7 @@ from .functions import langid as LG
 from .functions import quality as Q
 from .functions import scrub as SC
 from .operators import ann, bigram, dedup, postings, rangejoin, tokens, tpos
+from .plans import quality_pipeline as qp
 from .sources.pages import STAGE_PATH as _PAGES_STAGE
 from .sources.pages import stage_pages
 from .sources.tables import load
@@ -38,6 +36,22 @@ _TOKS_SQL = "list_filter(string_split({col}, ' '), x -> x <> '')"
 
 def _doc_tokens(spark: SparkSession, sf: str) -> DataFrame:
     return tokens.word_tokens(load(spark, sf, "documents"))
+
+
+def _kernel_pass(spark: SparkSession, sf: str) -> DataFrame:
+    """The documents through the fused kernel pass
+    (plans/quality_pipeline.process_text_table): rules, langid, scrub and
+    perplexity in one Python boundary. Every query of the kernels over
+    documents is a projection of it."""
+    return qp.process_text_table(load(spark, sf, "documents"))
+
+
+def _labels_and_lang(spark: SparkSession, sf: str) -> DataFrame:
+    """keep/drop labels and langid of every document from one kernel pass
+    (the flagship entry rows)."""
+    return _kernel_pass(spark, sf).select(
+        "doc_id", "keep", F.concat_ws(",", "rules_hit").alias("rules_hit_str"),
+        "lang_detected", "lang_hits", "n_words")
 
 
 def _dec(col, scale: int = 4):
@@ -75,25 +89,12 @@ SELECT doc_id,
 FROM t
 """
 
-# -- q03: keep/drop labels via the PRODUCTION pandas kernel (north rule),
-#    oracle recomputes every rule in pure SQL integer arithmetic.
-
-_LABEL_SCHEMA = "doc_id long, keep boolean, rules_hit_str string"
-
+# -- q03: keep/drop labels projected from the fused kernel pass (north
+#    rule), oracle recomputes every rule in pure SQL integer arithmetic.
 
 def q_keep_drop(spark: SparkSession, sf: str) -> DataFrame:
-    d = load(spark, sf, "documents").select("doc_id", "text")
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            lab = Q.rules_hit_and_keep(pdf["text"])
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "keep": lab["keep"],
-                "rules_hit_str": lab["rules_hit"].map(",".join),
-            })
-
-    return d.mapInPandas(run, schema=_LABEL_SCHEMA)
+    return _labels_and_lang(spark, sf).select("doc_id", "keep",
+                                              "rules_hit_str")
 
 
 def _keep_drop_sql(tbl: str = "documents", id_col: str = "doc_id",
@@ -154,26 +155,13 @@ FROM r
 
 _SQL_KEEP_DROP = _keep_drop_sql()
 
-# -- q19: language ID via the production kernel; oracle = same integer
-#    scoring in SQL (argmax, ties -> ascending lang code, zero -> 'und').
-
-_LANGID_SCHEMA = "doc_id long, lang_detected string, lang_hits long, n_words long"
-
+# -- q19: language ID projected from the fused kernel pass; oracle = same
+#    integer scoring in SQL (argmax, ties -> ascending lang code, zero ->
+#    'und').
 
 def q_langid(spark: SparkSession, sf: str) -> DataFrame:
-    d = load(spark, sf, "documents").select("doc_id", "text")
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            det = LG.detect(pdf["text"])
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "lang_detected": det["lang_detected"],
-                "lang_hits": det["lang_hits"],
-                "n_words": det["n_words"],
-            })
-
-    return d.mapInPandas(run, schema=_LANGID_SCHEMA)
+    return _labels_and_lang(spark, sf).select("doc_id", "lang_detected",
+                                              "lang_hits", "n_words")
 
 
 def _langid_sql(tbl: str = "documents", id_col: str = "doc_id",
@@ -219,27 +207,15 @@ FROM p
 """
 
 
-# -- q20: scrub via production kernel; oracle mirrors the RE2-compatible
-#    rules (the lookbehind phone rule cannot fire on this vocabulary-only
-#    corpus — asserted in tests, not assumed).
-
-_SCRUB_SCHEMA = ("doc_id long, scrubbed_len long, n_hits long")
-
+# -- q20: scrub projected from the fused kernel pass; oracle mirrors the
+#    RE2-compatible rules (the lookbehind phone rule cannot fire on this
+#    vocabulary-only corpus — asserted in tests, not assumed).
 
 def q_scrub(spark: SparkSession, sf: str) -> DataFrame:
-    d = load(spark, sf, "documents").select("doc_id", "text")
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            sc = SC.scrub_series(pdf["text"])
-            hits = sum(sc[f"scrub_{n}"] for n in SC.SCRUB_RULE_NAMES)
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "scrubbed_len": sc["text"].str.len().astype("int64"),
-                "n_hits": hits.astype("int64"),
-            })
-
-    return d.mapInPandas(run, schema=_SCRUB_SCHEMA)
+    n_hits = sum(F.col(f"scrub_{n}") for n in SC.SCRUB_RULE_NAMES)
+    return _kernel_pass(spark, sf).select(
+        "doc_id", F.length("text").cast("long").alias("scrubbed_len"),
+        n_hits.alias("n_hits"))
 
 
 # RE2 versions of the scrub rule patterns, applied in the same order as
@@ -273,23 +249,12 @@ FROM documents
 
 
 def q_scrub_rule_counts(spark: SparkSession, sf: str) -> DataFrame:
-    """Per-RULE scrub hit counts per document through the production
-    kernel — lineage-grade provenance (which rule fired where), value-
-    oracled rule-by-rule instead of as the summed total q_scrub checks."""
-    d = load(spark, sf, "documents").select("doc_id", "text")
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            sc = SC.scrub_series(pdf["text"])
-            out = {"doc_id": pdf["doc_id"],
-                   "scrubbed_len": sc["text"].str.len().astype("int64")}
-            for n in SC.SCRUB_RULE_NAMES:
-                out[f"scrub_{n}"] = sc[f"scrub_{n}"].astype("int64")
-            yield pd.DataFrame(out)
-
-    schema = ("doc_id long, scrubbed_len long, "
-              + ", ".join(f"scrub_{n} long" for n in SC.SCRUB_RULE_NAMES))
-    return d.mapInPandas(run, schema=schema)
+    """Per-RULE scrub hit counts per document from the fused kernel pass —
+    lineage-grade provenance (which rule fired where), value-oracled
+    rule-by-rule instead of as the summed total q_scrub checks."""
+    return _kernel_pass(spark, sf).select(
+        "doc_id", F.length("text").cast("long").alias("scrubbed_len"),
+        *(f"scrub_{n}" for n in SC.SCRUB_RULE_NAMES))
 
 
 def _scrub_rule_counts_sql() -> str:
@@ -823,24 +788,10 @@ SELECT vec_id, cos_sim FROM s ORDER BY cos_sim DESC, vec_id LIMIT 10
 # -------------------------------------------- CCNet-style shard manifest
 
 def _ccnet_labels(spark: SparkSession, sf: str) -> DataFrame:
-    """(doc_id, lang_detected, n_words, perplexity) via the production
-    kernels — shared by the exact and approx bucket assigners."""
-    from .functions import perplexity as PPX
-    d = load(spark, sf, "documents").select("doc_id", "text")
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            det = LG.detect(pdf["text"])
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "lang_detected": det["lang_detected"],
-                "n_words": det["n_words"],
-                "perplexity": PPX.perplexity_series(pdf["text"].fillna("")),
-            })
-
-    return d.mapInPandas(
-        run, schema=("doc_id long, lang_detected string, n_words long, "
-                     "perplexity double"))
+    """(doc_id, lang_detected, n_words, perplexity) from the fused kernel
+    pass — shared by the exact and approx bucket assigners."""
+    return _kernel_pass(spark, sf).select("doc_id", "lang_detected",
+                                          "n_words", "perplexity")
 
 
 def ccnet_buckets_approx(spark: SparkSession, sf: str,
@@ -869,7 +820,7 @@ def ccnet_buckets_approx(spark: SparkSession, sf: str,
 def q_ccnet_buckets(spark: SparkSession, sf: str) -> DataFrame:
     """CCNet-style corpus sharding (the public CCNet pipeline's layout):
     every document lands in a (language, perplexity-decile) bucket —
-    langid from the production kernel, deciles = ntile(10) PER LANGUAGE
+    langid from the fused kernel pass, deciles = ntile(10) PER LANGUAGE
     over the 6dp-rounded perplexity with a doc_id tie-break (a
     deterministic total order, so both engines assign identical tiles).
     Output is the shard manifest: per-bucket doc + token counts.
@@ -950,23 +901,26 @@ def q_rule_ablation(spark: SparkSession, sf: str) -> DataFrame:
     _SQL_KEEP_DROP in as a CTE (the quality_report discipline) and the
     per-rule arithmetic is exact in both engines.
 
-    100 TB shape: the kernel pass is the fused mapInPandas map; the
-    explode is bounded (<= 9 rules/doc), the per-rule agg map-side
-    combines to <= 9 rows, and the corpus-wide totals reach each rule
-    row as a broadcast 1-row scalar — no corpus-sized shuffle beyond
-    the one bounded (rule) agg."""
-    kd = q_keep_drop(spark, sf)
+    100 TB shape: the kernel pass is the fused mapInPandas map, grouped
+    once by (rules_hit_str, keep) — a map-side combine to <= 2^9 x 2
+    rows; the per-rule counts (explode bounded by <= 9 rules/doc) and the
+    corpus-wide totals (a broadcast 1-row scalar) both read that one
+    aggregate, so its exchange is reused and the kernels run once."""
+    g = (q_keep_drop(spark, sf).groupBy("rules_hit_str", "keep")
+         .agg(F.count("*").alias("n")))
     rules = F.split("rules_hit_str", ",")
-    hits = (kd.where(F.col("rules_hit_str") != "")
-            .select(F.explode(rules).alias("rule"),
-                    F.size(rules).alias("n_rules")))
-    tot = kd.agg(
-        F.count("*").alias("n_docs"),
-        F.sum(F.when(F.col("keep"), 1).otherwise(0)).alias("n_keep"))
+    # the empty-list filter goes after the explode: on the grouping column
+    # it would be pushed below the aggregate and the exchange not reused
+    hits = (g.select(F.explode(rules).alias("rule"),
+                     F.size(rules).alias("n_rules"), "n")
+            .where(F.col("rule") != ""))
+    tot = g.agg(F.sum("n").alias("n_docs"),
+                F.sum(F.when(F.col("keep"), F.col("n")).otherwise(0))
+                .alias("n_keep"))
     return (hits.crossJoin(F.broadcast(tot))
             .groupBy("rule", "n_docs", "n_keep")
-            .agg(F.count("*").alias("n_hit"),
-                 F.sum(F.when(F.col("n_rules") == 1, 1).otherwise(0))
+            .agg(F.sum("n").alias("n_hit"),
+                 F.sum(F.when(F.col("n_rules") == 1, F.col("n")).otherwise(0))
                  .alias("n_sole_reason"))
             .select("rule", F.col("n_hit").cast("long").alias("n_hit"),
                     F.col("n_sole_reason").cast("long")

@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 from . import codec
 from .operators import ann, tokens, tpos
 from .operators.dedup import shingles
-from .queries import _SQL_KEEP_DROP, _langid_sql, q_keep_drop, q_langid
+from .queries import _SQL_KEEP_DROP, _kernel_pass, _langid_sql, q_keep_drop
 from .sources.tables import load
 
 _TOKS_SQL = "list_filter(string_split({col}, ' '), x -> x <> '')"
@@ -515,13 +515,12 @@ FROM ({_SQL_KEEP_DROP}) kd
 
 def q_quality_report(spark: SparkSession, sf: str) -> DataFrame:
     """The corpus-quality dashboard table: keep-rate per (source,
-    detected language) — label kernel + langid kernel + dim join in one
-    metrics rollup (integer counts only; rate = n_kept/n_docs is left to
-    the consumer so the row stays hash-exact)."""
-    kd = q_keep_drop(spark, sf).select("doc_id", "keep")
-    lg = q_langid(spark, sf).select("doc_id", "lang_detected")
+    detected language) — labels and langid from one fused kernel pass +
+    dim join in one metrics rollup (integer counts only; rate =
+    n_kept/n_docs is left to the consumer so the row stays hash-exact)."""
+    kd = _kernel_pass(spark, sf).select("doc_id", "keep", "lang_detected")
     src = load(spark, sf, "documents").select("doc_id", "source")
-    return (kd.join(lg, "doc_id").join(src, "doc_id")
+    return (kd.join(src, "doc_id")
             .groupBy("source", "lang_detected")
             .agg(F.count("*").alias("n_docs"),
                  F.sum(F.col("keep").cast("long")).alias("n_kept")))

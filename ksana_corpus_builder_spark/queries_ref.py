@@ -1236,32 +1236,23 @@ def q_scrub_phone_fixture(spark: SparkSession, sf: str) -> DataFrame:
     """VERDICT r3 next-round #5: the phone rule proven NON-trivially. A
     deterministic phone-bearing corpus is synthesized from doc_id (the
     repeat piece occurs doc_id % 3 times, the four tail pieces once) and
-    scrubbed by the REAL ordered kernel (scrub_series — all six rules in
-    order). The oracle reconstructs the scrubbed text and counts in CLOSED
-    FORM — it knows exactly where phones occur, including the
-    lookbehind-suppressed cases no RE2 twin could decide — so hash parity
-    proves count AND byte-identical scrubbed text per doc."""
+    scrubbed by the fused kernel pass (process_text_table, whose scrub
+    runs all six rules in order). The oracle reconstructs the scrubbed
+    text and counts in CLOSED FORM — it knows exactly where phones occur,
+    including the lookbehind-suppressed cases no RE2 twin could decide —
+    so hash parity proves count AND byte-identical scrubbed text per
+    doc."""
     from .functions import scrub as SC
-    d = load(spark, sf, "documents").select("doc_id")
-
-    def run(batches):
-        import pandas as pd
-        for pdf in batches:
-            k = (pdf["doc_id"] % 3).astype("int64")
-            text = (pd.Series([_PHONE_REPEAT] * len(pdf))
-                    .str.repeat(k).fillna("") + _PHONE_TAIL)
-            sc = SC.scrub_series(text)
-            other = sum(sc[f"scrub_{n}"] for n in SC.SCRUB_RULE_NAMES
-                        if n != "phone")
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "scrubbed": sc["text"],
-                "n_phone": sc["scrub_phone"].astype("int64"),
-                "n_other": other.astype("int64"),
-            })
-
-    return d.mapInPandas(
-        run, schema="doc_id long, scrubbed string, n_phone long, n_other long")
+    from .plans import quality_pipeline as qp
+    d = load(spark, sf, "documents").select(
+        "doc_id", F.concat(F.repeat(F.lit(_PHONE_REPEAT),
+                                    (F.col("doc_id") % 3).cast("int")),
+                           F.lit(_PHONE_TAIL)).alias("text"))
+    n_other = sum(F.col(f"scrub_{n}") for n in SC.SCRUB_RULE_NAMES
+                  if n != "phone")
+    return qp.process_text_table(d).select(
+        "doc_id", F.col("text").alias("scrubbed"),
+        F.col("scrub_phone").alias("n_phone"), n_other.alias("n_other"))
 
 
 _SQL_SCRUB_PHONE_FIXTURE = f"""

@@ -190,11 +190,6 @@ def token_type_census(texts: pd.Series) -> pd.DataFrame:
     })
 
 
-def simple_word_tokens(texts: pd.Series) -> pd.Series:
-    """Whitespace word split for quality stats (C4-style), vectorized."""
-    return texts.fillna("").str.split()
-
-
 # BPE-ish subword count: words + digit runs + punctuation marks, the cheap
 # proxy for "how many tokens would a BPE tokenizer emit".
 _BPE_RE = re.compile(r"[A-Za-z]+|[0-9]|[^A-Za-z0-9\s]")

@@ -112,7 +112,7 @@ def test_extract_with_default_rules_is_identical():
     from ksana_corpus_builder_spark.sources.pages import make_pages_pdf
     pages = make_pages_pdf(300, seed=7)
     a = T.extract_text(pages["html"])
-    b = T.extract_text_with_rules(pages["html"])
+    b = T.extract_batch(pages["html"], dict(T.DEFAULT_TAG_RULES)).texts
     assert (a == b).all()
 
 
@@ -121,9 +121,9 @@ def test_extract_custom_rules_change_behavior():
 
     from ksana_corpus_builder_spark.functions import text as T
     html = pd.Series(["<html><body><p>keep</p><aside>noise</aside></body></html>"])
-    default = T.extract_text_with_rules(html)
-    custom = T.extract_text_with_rules(
-        html, dict(T.DEFAULT_TAG_RULES, aside="drop"))
+    default = T.extract_batch(html).texts
+    custom = T.extract_batch(
+        html, dict(T.DEFAULT_TAG_RULES, aside="drop")).texts
     assert "noise" in default.iloc[0]
     assert "noise" not in custom.iloc[0]
     assert "keep" in custom.iloc[0]

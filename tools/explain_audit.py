@@ -236,9 +236,9 @@ EXPECT: dict[str, list[str]] = {
     # ONE map-side-combined hash agg; scan prunes to (url, warc_ts)
     "zorder_layout": ["partial_count", "partial_min", "partial_max",
                       "ReadSchema: struct<url:string,warc_ts:timestamp"],
-    # round 5 (final): ablation — the bounded (<= 9 rules) explode feeds a
-    # map-side-combined per-rule agg; totals reach rule rows as a 1-row
-    # broadcast; the kernel pass stays the fused Arrow map
+    # round 5 (final): ablation — the fused Arrow map grouped once by
+    # (rules_hit_str, keep) map-side; the bounded (<= 9 rules) explode and
+    # the 1-row totals broadcast both read that one aggregate
     "rule_ablation": ["Generate", "partial_count",
                       "BroadcastNestedLoopJoin", "MapInPandas"],
     # round 5 (final): snapshot diff — both snapshots corpus-sized, so the
