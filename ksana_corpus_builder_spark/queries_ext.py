@@ -1070,9 +1070,7 @@ def q_lineage_metrics(spark: SparkSession, sf: str) -> DataFrame:
     from the keep_drop rule SQL. The real pipeline's per-task variant is
     the metrics table plans/quality_pipeline.write_outputs writes."""
     from .functions.quality import RULE_NAMES
-    from .plans import quality_pipeline as qp
-    docs = load(spark, sf, "documents")
-    result = qp.process_text_table(docs)
+    result = _kernel_pass(spark, sf)
     rule_counts = F.map_from_arrays(
         F.array(*[F.lit(r) for r in RULE_NAMES]),
         F.array(*[F.sum(F.when(F.array_contains("rules_hit", r), 1)
