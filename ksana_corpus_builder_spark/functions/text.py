@@ -98,7 +98,7 @@ def _collapse_ws(texts: pd.Series) -> TextBatch:
     units[at[two]] = 10
     gone = at[drop]
     units = np.delete(units, gone)
-    if units.dtype == np.uint16 and units.size and units.max() < 0x80:
+    if units.dtype == np.uint16 and units.max(initial=0) < 0x80:
         units = units.astype(np.uint8)  # its only wide chars were stripped
     return TextBatch.from_units(
         units, batch.surrogates, batch.offs - np.searchsorted(gone, batch.offs),

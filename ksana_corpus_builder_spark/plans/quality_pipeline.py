@@ -18,10 +18,13 @@ declarative DataFrame plan:
 Design-for-scale notes:
 - the per-document stage is a SINGLE Python pass (one Arrow round-trip, not
   five chained UDFs) — at 10^12 docs the Python boundary is the unit cost,
-  so we cross it once;
-- no driver-side collect anywhere; each task of the kernel pass counts its
-  own lineage row while it runs (reference buildMeta, ``index.js:293-318``,
-  becomes rows), so metrics need no second pass over the data;
+  so we cross it once; when the outputs are written, the data does not
+  cross back at all: each task of the kernel pass writes its own result,
+  labels and scrubbed files, and the driver commits them;
+- the driver collects one row per task and nothing else; each task of the
+  kernel pass counts its own lineage row while it runs (reference
+  buildMeta, ``index.js:293-318``, becomes rows), so metrics need no
+  second pass over the data;
 - partitioning is explicit: ``repartition(spark_partition_id-free hash of
   url)`` — on Iceberg this is a bucket(url, N) write spec; skewed hosts are
   salted because the hash key is the full url, not the host;
@@ -31,22 +34,26 @@ Design-for-scale notes:
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import shutil
 import time
+import uuid
 from collections.abc import Callable, Iterator
-from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 import numpy as np
 import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
-from pyspark import AccumulatorParam, TaskContext
+from pyspark import TaskContext
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.util import inheritable_thread_target
+from pyspark.sql.pandas.types import (
+    _check_series_convert_timestamps_internal,
+    to_arrow_schema,
+)
 
 from ..functions import langid as L
 from ..functions import quality as Q
@@ -170,42 +177,31 @@ def _process_batch(pdf: pd.DataFrame, hooks: PipelineHooks | None = None,
     return out, counts
 
 
-class _Lineage(AccumulatorParam):
-    """Task partition id -> lineage row. A task that runs again (a retry,
-    or another action over the same plan) replaces its row."""
-
-    def zero(self, value: dict) -> dict:
-        return {}
-
-    def addInPlace(self, rows: dict, more: dict) -> dict:
-        rows.update(more)
-        return rows
+def _kernel_batches(batches: Iterator[pd.DataFrame], hooks: PipelineHooks | None,
+                    columns: list[str], row: np.ndarray) -> Iterator[pd.DataFrame]:
+    """The ONE batch loop of a kernel-pass task: every non-empty Arrow
+    batch through :func:`_process_batch`, yielding its output. Sums the
+    batches' lineage counters and the ns spent in ``_process_batch`` into
+    the task's lineage ``row``."""
+    for pdf in batches:  # row-loop-ok: one step per Arrow batch
+        if len(pdf):
+            t0 = time.perf_counter_ns()
+            out, counts = _process_batch(pdf, hooks, columns)
+            row += counts
+            row[_KERNEL_NS] += time.perf_counter_ns() - t0
+            yield out
 
 
 def _map_batches(df: DataFrame, schema: str,
                  hooks: PipelineHooks | None) -> DataFrame:
-    """The ONE Python boundary: every non-empty Arrow batch of ``df``
-    through :func:`_process_batch`, emitting ``schema``. Each task sums its
-    batches' lineage counters and the ns spent in ``_process_batch``, and
-    when its batches end adds ``{partition id: row}`` to an accumulator
-    made here and kept on the returned DataFrame as ``_lineage``."""
+    """The ONE Python boundary: every task of ``df`` through
+    :func:`_kernel_batches`, emitting ``schema``."""
     columns = _columns(schema)
-    lineage = df.sparkSession.sparkContext.accumulator({}, _Lineage())
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        row = np.zeros(_ROW, np.int64)
-        for pdf in batches:  # row-loop-ok: one step per Arrow batch
-            if len(pdf):
-                t0 = time.perf_counter_ns()
-                out, counts = _process_batch(pdf, hooks, columns)
-                row += counts
-                row[_KERNEL_NS] += time.perf_counter_ns() - t0
-                yield out
-        lineage.add({TaskContext.get().partitionId(): row})
+        return _kernel_batches(batches, hooks, columns, np.zeros(_ROW, np.int64))
 
-    out = df.mapInPandas(run, schema=schema)
-    out._lineage = lineage
-    return out
+    return df.mapInPandas(run, schema=schema)
 
 
 def process(pages: DataFrame, buckets: int | None = None,
@@ -223,7 +219,10 @@ def process(pages: DataFrame, buckets: int | None = None,
     if buckets:
         # url-hash bucketing: even distribution regardless of host skew
         df = df.repartition(buckets, F.xxhash64("url"))
-    return _map_batches(df, RESULT_SCHEMA, hooks)
+    result = _map_batches(df, RESULT_SCHEMA, hooks)
+    # write_outputs runs the same pass over the same input, writing files
+    result._kernel_input = (df, hooks)
+    return result
 
 
 def process_text_table(docs: DataFrame,
@@ -236,13 +235,22 @@ def process_text_table(docs: DataFrame,
                         hooks)
 
 
+# the tables write_outputs writes from the kernel pass -> their columns
+# (None: every column of the result)
+OUTPUTS = {
+    "result": None,
+    "labels": ["url", "keep", "rules_hit", "lang_detected", "lang_score",
+               "perplexity"],
+    "scrubbed": ["url", "text"],
+}
+
+
 def labels(result: DataFrame) -> DataFrame:
-    return result.select("url", "keep", "rules_hit", "lang_detected",
-                         "lang_score", "perplexity")
+    return result.select(*OUTPUTS["labels"])
 
 
 def scrubbed(result: DataFrame) -> DataFrame:
-    return result.select("url", "text")
+    return result.select(*OUTPUTS["scrubbed"])
 
 
 def metrics(result: DataFrame, input_snapshot_id: int = 0) -> DataFrame:
@@ -280,7 +288,7 @@ def _by_name(names: list[str], counts: np.ndarray) -> pa.MapArray:
     n, k = counts.shape
     return pa.MapArray.from_arrays(
         pa.array(np.arange(0, n * k + 1, k), pa.int32()),
-        pa.array(names * n), pa.array(counts.ravel()))
+        pa.array(names * n, pa.string()), pa.array(counts.ravel(), pa.int64()))
 
 
 def _write_metrics(pids: list[int], rows: np.ndarray, snapshot_id: int,
@@ -330,34 +338,87 @@ def _run_record(rows: np.ndarray, snapshot_id: int) -> dict:
     }
 
 
+def _write_task(batches: Iterator[pd.DataFrame], hooks: PipelineHooks | None,
+                tmp: str, schemas: dict[str, pa.Schema],
+                tz: str) -> Iterator[pd.DataFrame]:
+    """One task of the write job: its batches through the kernel pass,
+    each output batch streamed into one parquet file per table of
+    ``schemas`` under ``tmp`` (named by partition id and attempt, so a
+    retried task never writes over another attempt's file); then one row:
+    the partition id, the file name and the task's lineage row."""
+    ctx = TaskContext.get()
+    pid = ctx.partitionId()
+    name = f"part-{pid:05d}-{ctx.attemptNumber()}.snappy.parquet"
+    schema = schemas["result"]
+    row = np.zeros(_ROW, np.int64)
+    with contextlib.ExitStack() as files:
+        writers = [files.enter_context(pq.ParquetWriter(
+            os.path.join(tmp, table, name), s, compression="snappy"))
+            for table, s in schemas.items()]  # row-loop-ok: three tables
+        outs = _kernel_batches(batches, hooks, schema.names, row)
+        for out in outs:  # row-loop-ok: one step per Arrow batch
+            # Spark hands timestamps over as naive wall clock of the
+            # session time zone; convert them back as Spark itself would
+            out["warc_ts"] = _check_series_convert_timestamps_internal(
+                out["warc_ts"], tz)
+            batch = pa.Table.from_pandas(out, schema, preserve_index=False)
+            for writer in writers:  # row-loop-ok: three tables
+                writer.write_table(batch.select(writer.schema.names))
+    yield pd.DataFrame({"partition_id": [pid], "file": [name], "lineage": [row]})
+
+
 def write_outputs(result: DataFrame, out_dir: str, snapshot_id: int = 0) -> dict:
     """Persist result, labels, scrubbed and metrics (parquet locally;
     Iceberg writeTo on a cluster) and the run record ``<out_dir>/_run.json``,
     which is returned. ``result`` is a DataFrame :func:`process` returned.
 
-    Three Spark jobs, none with a shuffle: the kernel pass writes
-    ``result``; ``labels`` and ``scrubbed`` are projections of it, re-read
-    with its known schema (no inference job) and written concurrently.
-    ``metrics`` holds the lineage rows the kernel pass's tasks counted, one
-    per task, written from the driver with no job over the data."""
-    lineage = getattr(result, "_lineage", None)
-    if lineage is None:
+    One Spark job, with no shuffle of its own: the kernel pass runs over
+    the input :func:`process` kept, and each task writes its result,
+    labels and scrubbed files under ``<out_dir>/_temporary/<job>/`` and
+    returns one row (partition id, file name, lineage row); no output
+    batch crosses back to the JVM. Once every task has succeeded, the
+    driver replaces each table's directory with the files the tasks
+    returned plus ``_SUCCESS``: a failed job leaves the previous output
+    as it was, and a failed attempt's file is never committed. ``metrics``
+    holds the lineage rows, one per task, written from the driver."""
+    kernel_input = getattr(result, "_kernel_input", None)
+    if kernel_input is None:
         raise ValueError("write_outputs needs the DataFrame process() returned")
-    result.write.mode("overwrite").parquet(f"{out_dir}/result")
-    spark = result.sparkSession
-    full = spark.read.schema(result.schema).parquet(f"{out_dir}/result")
-    with ThreadPoolExecutor(1) as pool:
-        labels_written = pool.submit(
-            inheritable_thread_target(spark)(labels(full).write.mode("overwrite").parquet),
-            f"{out_dir}/labels")
-        scrubbed(full).write.mode("overwrite").parquet(f"{out_dir}/scrubbed")
-        labels_written.result()
-    by_pid = lineage.value
-    pids = sorted(by_pid)
-    rows = np.array([by_pid[p] for p in pids],  # row-loop-ok: one per task
-                    np.int64).reshape(len(pids), _ROW)
-    _write_metrics(pids, rows, snapshot_id, f"{out_dir}/metrics")
-    record = _run_record(rows, snapshot_id)
+    df, hooks = kernel_input
+    schema = to_arrow_schema(result.schema)
+    schemas = {table: schema if cols is None else pa.schema(map(schema.field, cols))
+               for table, cols in OUTPUTS.items()}
+    tz = result.sparkSession.conf.get("spark.sql.session.timeZone")
+    temporary = os.path.join(out_dir, "_temporary")
+    tmp = os.path.join(temporary, uuid.uuid4().hex)
+    try:
+        for table in OUTPUTS:
+            os.makedirs(os.path.join(tmp, table))
+
+        def write(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            return _write_task(batches, hooks, tmp, schemas, tz)
+
+        rows = df.mapInPandas(
+            write, "partition_id int, file string, lineage array<long>")
+        tasks = sorted(rows.collect())  # collect-ok: one row per task
+        for table in OUTPUTS:
+            path = os.path.join(out_dir, table)
+            shutil.rmtree(path, ignore_errors=True)
+            os.makedirs(path)
+            for task in tasks:  # row-loop-ok: one file per task
+                os.replace(os.path.join(tmp, table, task.file),
+                           os.path.join(path, task.file))
+            if not tasks:  # an input of no partitions: the schema alone
+                pq.write_table(schemas[table].empty_table(),
+                               os.path.join(path, "part-00000-0.snappy.parquet"))
+            open(os.path.join(path, "_SUCCESS"), "w").close()
+    finally:
+        shutil.rmtree(temporary, ignore_errors=True)
+    pids = [task.partition_id for task in tasks]  # row-loop-ok: one per task
+    lineage = np.array([task.lineage for task in tasks],  # row-loop-ok: one per task
+                       np.int64).reshape(len(tasks), _ROW)
+    _write_metrics(pids, lineage, snapshot_id, f"{out_dir}/metrics")
+    record = _run_record(lineage, snapshot_id)
     with open(os.path.join(out_dir, "_run.json"), "w") as f:
         json.dump(record, f, indent=1)
     return record

@@ -1,10 +1,12 @@
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+# the checkout these tests belong to, ahead of any other copy of the package
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from ksana_corpus_builder_spark.session import get_spark  # noqa: E402
 

@@ -324,6 +324,7 @@ def test_extract_hands_over_the_batch_of_its_text(html):
 def test_extract_batch_edge_cases():
     for html in ([], [""], [None, "", " "], ["İ", "ΑΣ Σ", "ς"],
                  ["\xa0x\u3000", "\u3000\xa0", "a\xa0"],  # tier narrows
+                 ["<p>\xa0<p>"], ["<p>\u3000</p>", None],  # ... to an empty buffer
                  ["\ud800", "\udfff a", "\U0001f389\n\n\n\ud83c"],
                  ["\x00", "a\x00 b", "<p>\x00</p>"],
                  [b"<p>bytes \xed\xa0\x80</p>", b"\xef\xbb\xbf<p>x</p>\r\n"]):

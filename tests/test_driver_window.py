@@ -16,12 +16,14 @@ from __future__ import annotations
 
 import glob
 import json
+from pathlib import Path
 
 import __spark_entry__ as entrymod
 
 QS = entrymod.queries()
 OS = entrymod.oracle_sql()
 WINDOW = list(QS)[:50]
+ROOT = Path(__file__).resolve().parent.parent
 
 
 def _past_driver_rows() -> set[str]:
@@ -30,7 +32,7 @@ def _past_driver_rows() -> set[str]:
     FAILED in a past round does not count as covered and cannot rotate out
     of the window (ADVICE r4 #1)."""
     seen: set[str] = set()
-    for path in glob.glob("/root/repo/CORRECTNESS_r*.json"):
+    for path in glob.glob(str(ROOT / "CORRECTNESS_r*.json")):
         with open(path) as f:
             for name, row in json.load(f).items():
                 if (row.get("rows_match") is True

@@ -13,6 +13,8 @@ import pyarrow.parquet as pq
 
 from ksana_corpus_builder_spark.sources.pages import make_pages_pdf
 
+JOBS = pathlib.Path(__file__).resolve().parent.parent / "jobs"
+
 
 def test_job_runs_from_config(spark, tmp_path, monkeypatch):
     inp = tmp_path / "in"
@@ -27,7 +29,7 @@ def test_job_runs_from_config(spark, tmp_path, monkeypatch):
         "snapshot_id": 7,
     }))
 
-    sys.path.insert(0, "/root/repo/jobs")
+    sys.path.insert(0, str(JOBS))
     import quality_filter_job as job
 
     monkeypatch.setattr(sys, "argv", ["job", "--config", str(cfg)])
@@ -49,7 +51,7 @@ def test_job_config_cli_override(spark, tmp_path, monkeypatch):
     cfg.write_text(json.dumps({"input": str(tmp_path / "WRONG"),
                                "output": str(tmp_path / "o1")}))
 
-    sys.path.insert(0, "/root/repo/jobs")
+    sys.path.insert(0, str(JOBS))
     import quality_filter_job as job
 
     out = tmp_path / "o2"

@@ -4,16 +4,18 @@
 - scrubbed text BYTE-IDENTICAL per url
 - extraction byte-identical (pages.text column == extract_text(html))
 - metrics table accounts for every document, one lineage row per task
+- write_outputs is one job whose task-written tables read back as the
+  projections of process(); a failed job or attempt commits nothing
 """
 
 from __future__ import annotations
 
 import io
 import json
+import os
 import re
 from contextlib import redirect_stdout
 
-import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -22,7 +24,7 @@ from ksana_corpus_builder_spark.functions import quality as Q
 from ksana_corpus_builder_spark.functions import scrub as S
 from ksana_corpus_builder_spark.oracle import golden
 from ksana_corpus_builder_spark.plans import quality_pipeline as qp
-from ksana_corpus_builder_spark.sources.pages import make_pages_pdf, pages_df
+from ksana_corpus_builder_spark.sources.pages import PAGES_SCHEMA, make_pages_pdf, pages_df
 
 N = 200
 
@@ -93,10 +95,10 @@ def test_metrics_account_for_all_docs(spark, pages_pdf):
     assert got_hits == total_hits
 
 
-def test_write_outputs_runs_three_jobs_without_shuffle(spark, pages_pdf, tmp_path):
-    """The kernel pass writes result; labels and scrubbed are its re-read
-    projections; metrics and the run record come from the pass's own
-    lineage rows: three jobs, each one stage (no shuffle)."""
+def test_write_outputs_runs_one_job_without_shuffle(spark, pages_pdf, tmp_path):
+    """The kernel pass's tasks write result, labels and scrubbed; metrics
+    and the run record come from the rows the tasks return: one job of one
+    stage (no shuffle, no re-read)."""
     result = qp.process(spark.createDataFrame(pages_pdf))
     sc = spark.sparkContext
     sc.setJobGroup("write-outputs", "write_outputs")
@@ -106,8 +108,8 @@ def test_write_outputs_runs_three_jobs_without_shuffle(spark, pages_pdf, tmp_pat
         sc.setLocalProperty("spark.jobGroup.id", None)
     tracker = sc.statusTracker()
     jobs = tracker.getJobIdsForGroup("write-outputs")
-    assert len(jobs) == 3, jobs
-    assert [len(tracker.getJobInfo(j).stageIds) for j in jobs] == [1, 1, 1]
+    assert len(jobs) == 1, jobs
+    assert len(tracker.getJobInfo(jobs[0]).stageIds) == 1
 
 
 def test_metrics_table_is_per_task_lineage(spark, pages_pdf, tmp_path):
@@ -174,17 +176,29 @@ def test_run_record_times_each_kernel_stage(spark, pages_pdf, tmp_path):
                     extract=True)
 
 
-def test_text_table_runs_no_extract_stage(spark):
-    docs = spark.createDataFrame(
-        pd.DataFrame({"doc_id": range(50),
-                      "text": ["the cat sat on the mat"] * 50}))
-    result = qp.process_text_table(docs.repartition(3))
-    assert result.count() == 50
-    rows = np.array(list(result._lineage.value.values()))
-    assert len(rows) == 3
-    for row in rows:
-        _check_stage_ns(qp._run_record(row[None, :], 0)["kernel_ns"],
-                        extract=False)
+def test_text_table_runs_no_extract_stage():
+    """A text batch's lineage counters: every doc counted, no extract ns,
+    every other stage timed."""
+    docs = pd.DataFrame({"doc_id": range(50),
+                         "text": ["the cat sat on the mat"] * 50})
+    out, row = qp._process_batch(docs, None, qp._columns(qp.TEXT_RESULT_SCHEMA))
+    assert len(out) == row[0] == 50
+    assert row[qp._KERNEL_NS] == 0  # the task loop adds the batch's total
+    row[qp._KERNEL_NS] = row[qp._KERNEL_NS + 1:].sum()
+    _check_stage_ns(qp._run_record(row[None, :], 0)["kernel_ns"], extract=False)
+
+
+def test_plan_builds_register_no_accumulator(spark, pages_pdf):
+    """Building a kernel-pass plan leaves nothing behind in the driver:
+    no accumulator is registered per plan."""
+    from pyspark import accumulators
+    pages = spark.createDataFrame(pages_pdf)
+    docs = spark.createDataFrame(pd.DataFrame({"doc_id": [1], "text": ["a b"]}))
+    before = len(accumulators._accumulatorRegistry)
+    for _ in range(50):
+        qp.process(pages, buckets=2)
+        qp.process_text_table(docs)
+    assert len(accumulators._accumulatorRegistry) == before
 
 
 def test_write_outputs_needs_a_process_result(spark, pages_pdf, tmp_path):
@@ -328,3 +342,130 @@ def test_hostile_html_matches_golden(spark):
     assert list(map(list, got["rules_hit"])) == list(map(list, exp["rules_hit"]))
     a, b = got["perplexity"].to_numpy(), exp["perplexity"].to_numpy()
     assert ((a == b) | (pd.isna(a) & pd.isna(b))).all()
+
+
+def _parity_pages() -> pd.DataFrame:
+    """Generated pages and the first hostile rows (invalid UTF-8, null,
+    empty and whitespace html, a page past MAX_WORDS), with warc_ts
+    instants 7 minutes apart across a US daylight-saving switch."""
+    pages = pd.concat([make_pages_pdf(N, seed=42), _hostile_pages().iloc[:12]],
+                      ignore_index=True)
+    pages["warc_ts"] = pd.date_range("2024-03-09 20:00", periods=len(pages),
+                                     freq="7min", tz="UTC")
+    return pages
+
+
+@pytest.mark.parametrize("tz", ["UTC", "America/Los_Angeles"])
+def test_written_tables_match_process(spark, tmp_path, tz):
+    """The tables the kernel pass's tasks write read back in Spark with
+    the schema and the rows of the matching projection of process(), in
+    any session time zone; warc_ts holds the input's instants."""
+    old = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", tz)
+    try:
+        pages = spark.createDataFrame(_parity_pages(), PAGES_SCHEMA)
+        result = qp.process(pages, buckets=4)
+        qp.write_outputs(result, str(tmp_path))
+        expected = {"result": result, "labels": qp.labels(result),
+                    "scrubbed": qp.scrubbed(result)}
+        for table, exp in expected.items():
+            got = spark.read.parquet(str(tmp_path / table))
+            assert got.schema == exp.schema, table
+            assert got.exceptAll(exp).isEmpty(), table
+            assert exp.exceptAll(got).isEmpty(), table
+        stamps = spark.read.parquet(str(tmp_path / "result")).select("url", "warc_ts")
+        assert stamps.exceptAll(pages.select("url", "warc_ts")).isEmpty()
+        assert stamps.count() == len(_parity_pages())
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", old)
+
+
+def test_failed_write_keeps_the_previous_output(spark, pages_pdf, tmp_path):
+    """A task that fails fails write_outputs, and nothing of the failed
+    job is committed: the previous output in the same directory reads back
+    unchanged, and no temporary files remain."""
+    out = str(tmp_path)
+    pages = spark.createDataFrame(pages_pdf)
+    record = qp.write_outputs(qp.process(pages), out)
+    tables = ("result", "labels", "scrubbed", "metrics")
+    before = {t: spark.read.parquet(f"{out}/{t}").toPandas() for t in tables}
+    files = {t: sorted(os.listdir(f"{out}/{t}")) for t in tables}
+
+    def raise_in_task_0(out):  # nested: the workers unpickle it by value
+        from pyspark import TaskContext
+        if TaskContext.get().partitionId() == 0:
+            raise RuntimeError("injected failure in task 0")
+
+    failing = qp.process(pages, hooks=qp.PipelineHooks(on_batch=raise_in_task_0))
+    with pytest.raises(Exception, match="injected failure in task 0"):
+        qp.write_outputs(failing, out)
+
+    assert not os.path.exists(f"{out}/_temporary")
+    for t in tables:
+        assert sorted(os.listdir(f"{out}/{t}")) == files[t], t
+        got = spark.read.parquet(f"{out}/{t}").toPandas()
+        pd.testing.assert_frame_equal(got, before[t])
+    with open(f"{out}/_run.json") as f:
+        assert json.load(f) == record
+
+
+# A driver on local[2,2] (each task may run twice) whose on_batch hook
+# fails the first attempt of task 0 while write_outputs runs.
+_RETRY_CHILD = r"""
+import sys
+from pyspark import TaskContext
+from ksana_corpus_builder_spark.plans import quality_pipeline as qp
+from ksana_corpus_builder_spark.session import get_spark
+from ksana_corpus_builder_spark.sources.pages import make_pages_pdf
+
+
+def fail_first_attempt_of_task_0(out):
+    ctx = TaskContext.get()
+    if ctx.partitionId() == 0 and ctx.attemptNumber() == 0:
+        raise RuntimeError("injected failure of attempt 0")
+
+
+spark = get_spark(cpus=2, extra_conf={"spark.master": "local[2,2]"})
+pages = spark.createDataFrame(make_pages_pdf(int(sys.argv[2]), seed=3))
+hooks = qp.PipelineHooks(on_batch=fail_first_attempt_of_task_0)
+qp.write_outputs(qp.process(pages, hooks=hooks), sys.argv[1])
+"""
+
+
+def test_retried_task_commits_only_its_last_attempt(spark, tmp_path):
+    """Task 0 fails once and is retried: the write succeeds, every url is
+    written once, and task 0's committed file is its second attempt's."""
+    import subprocess
+    import sys
+    out, n = str(tmp_path / "out"), 40
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {**os.environ, "PYTHONPATH": repo, "SPARK_DRIVER_MEM": "1g",
+           "SPARK_LOCAL_DIRS": str(tmp_path / "local")}
+    child = subprocess.run([sys.executable, "-c", _RETRY_CHILD, out, str(n)],
+                           env=env, capture_output=True, text=True, timeout=300)
+    assert child.returncode == 0, child.stderr[-4000:]
+    assert "injected failure of attempt 0" in child.stderr
+    for table in ("result", "labels", "scrubbed"):
+        parts = sorted(os.listdir(f"{out}/{table}"))
+        assert parts == ["_SUCCESS", "part-00000-1.snappy.parquet",
+                         "part-00001-0.snappy.parquet"], (table, parts)
+        urls = spark.read.parquet(f"{out}/{table}").select("url")
+        assert urls.count() == urls.distinct().count() == n, table
+    assert not os.path.exists(f"{out}/_temporary")
+    with open(f"{out}/_run.json") as f:
+        assert json.load(f)["totals"]["docs"] == n
+
+
+def test_write_outputs_of_an_empty_input(spark, pages_pdf, tmp_path):
+    """No pages: every table is written and reads back empty, in its
+    schema; the run record counts no docs."""
+    out = str(tmp_path)
+    result = qp.process(spark.createDataFrame(pages_pdf).limit(0))
+    record = qp.write_outputs(result, out)
+    assert record["totals"]["docs"] == 0
+    for table, exp in {"result": result, "labels": qp.labels(result),
+                       "scrubbed": qp.scrubbed(result)}.items():
+        got = spark.read.parquet(f"{out}/{table}")
+        assert got.schema == exp.schema, table
+        assert got.isEmpty(), table
+    assert spark.read.parquet(f"{out}/metrics").agg(F.sum("n_docs")).first()[0] in (0, None)

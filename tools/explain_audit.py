@@ -12,10 +12,12 @@ Writes PLANS.md at the repo root. Usage: python tools/explain_audit.py
 from __future__ import annotations
 
 import io
+import os
 import sys
 from contextlib import redirect_stdout
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from __spark_entry__ import queries  # noqa: E402
 from ksana_corpus_builder_spark.session import get_spark  # noqa: E402
@@ -349,7 +351,7 @@ def main() -> int:
                 "```", plan.strip(), "```", ""]
     finally:
         spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
         f.write("\n".join(sections))
     if failures:
         print("PLAN AUDIT FAILURES:")
