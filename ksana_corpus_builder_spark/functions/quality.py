@@ -66,19 +66,19 @@ def word_stats(texts: pd.Series, words: pd.Series | None = None,
     lines = chars.batch.lines
     # word-level stats over the shared factorized token stream: per-token
     # work is a C-level gather of the unique-word table, per-doc reductions
-    # are boundary cumsum/bincount — no per-document Python loop. Line stats
-    # come from the same buffer (newline counts + one factorize of lines).
-    tok_lens = stream.uniq_lens[stream.codes] if stream.pos.size \
-        else np.zeros(0, np.int64)
+    # are boundary cumsum/bincount — no per-document Python loop. Tokens
+    # are the maximal runs of non-\s, so their lengths sum to the doc's
+    # non-\s count. Line stats come from the same buffer (newline counts +
+    # one factorize of lines).
     sw_mask = (stream.uniq_series.isin(STOPWORDS).to_numpy()
                if len(stream.uniq) else np.zeros(0, bool))
     return pd.DataFrame({
         "n_chars": chars.n_chars,
         "n_words": stream.lens,
-        "sum_word_len": stream.seg_sum(tok_lens),
+        "sum_word_len": chars.nonspace,
         "n_distinct_words": stream.distinct_per_doc(),
         "stopword_hits": stream.count_where_unique(sw_mask),
-        "max_word_len": stream.seg_max(tok_lens),
+        "max_word_len": stream.seg_max(stream.tok_lens),
         "n_lines": lines.n_lines,
         "n_dup_lines": lines.n_dup_lines,
         "max_line_len": lines.max_line_len,

@@ -37,17 +37,19 @@ SCRUB_RULE_NAMES = [name for name, _, _ in SCRUB_RULES]
 # shape that every match of its rule must contain:
 #   email        "@"
 #   ipv4         digit "." digit          (octets may be 1 digit)
-#   ssn          ddd "-"                  ([0-9]{3}-[0-9]{2}-[0-9]{4})
-#   credit_card  dddd [ -] dddd           (two of its four groups)
+#   ssn          ddd-dd-dddd              (the whole pattern)
+#   credit_card  dddd[ -]dddd[ -]dddd[ -]dddd  (the whole pattern)
 #   phone        [ .-] ddd [ .-] dddd     (the pattern's mandatory tail)
 #   toxicity     w o r d, either case     (every lexicon word ends so)
 # A doc without its rule's shape cannot match, so the full-pattern subn
-# runs only on gated docs. Each shape is searched with numpy only around
-# anchors (TextBatch.docs_with): positions of one of its rare chars (a
-# class code each, wordstream.ANCHORS, so one compare finds them), or,
-# for a digit that follows a non-digit in the shape, the starts of digit
-# runs (every occurrence of the shape starts a run there) — never with a
-# per-doc regex. Soundness across the ORDERED rewrite, i.e. gating on the
+# runs only on gated docs; where the shape is the rule's whole fixed
+# shape (ssn, credit_card), only a \b can still fail. Each shape is
+# searched with numpy only around anchors (TextBatch.docs_with):
+# positions of one of its rare chars (a class code each,
+# wordstream.ANCHORS, so one compare finds them), or, for a digit that
+# follows a non-digit in the shape, the starts of digit runs (every
+# occurrence of the shape starts a run there) — never with a per-doc
+# regex. Soundness across the ORDERED rewrite, i.e. gating on the
 # original text although later rules see earlier replacements: every shape
 # char is a digit, one of " .-@", or a letter of "word"; the replacement
 # tokens (<EMAIL> <IP> <SSN> <CC> <PHONE> <TOX>) hold none of the former
@@ -61,8 +63,9 @@ _D = wordstream.DIGITS
 _GATES: dict[str, tuple[int, tuple[str, ...]]] = {
     "email": (0, ("@",)),
     "ipv4": (1, (_D, ".", _D)),
-    "ssn": (3, (_D, _D, _D, "-")),
-    "credit_card": (5, (_D, _D, _D, _D, " -", _D, _D, _D, _D)),
+    "ssn": (3, (_D, _D, _D, "-", _D, _D, "-", _D, _D, _D, _D)),
+    "credit_card": (5, (_D, _D, _D, _D, " -", _D, _D, _D, _D, " -",
+                        _D, _D, _D, _D, " -", _D, _D, _D, _D)),
     "phone": (1, (" .-", _D, _D, _D, " .-", _D, _D, _D, _D)),
     "toxicity": (0, ("wW", "oO", "rR", "dD")),
 }

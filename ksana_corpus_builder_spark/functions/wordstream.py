@@ -17,11 +17,17 @@ From it, lazily and at most once each:
 
 - :class:`CharStats` — per-document counts of \\s, CJK and [0-9].
 
-- :class:`WordStream` — the factorized token stream: every word of every
-  document from ONE `" ".join(batch).split()`, `pd.factorize`d once (one
-  hash pass). Tokens per doc come from the runs of \\s positions (a doc's
-  runs of non-\\s); `str.split()` and `re`'s \\s agree on every codepoint
-  (pinned in tests), so the two counts add up. Per-token work then
+- :class:`WordStream` — the factorized token stream, hashed from the
+  buffer itself with no Python string per token: the \\s units are deleted,
+  token lengths are the nonzero gaps between the \\s and doc cut points in
+  that compacted buffer, and ONE Arrow `dictionary_encode` of it (as a
+  large-binary array, one token per value) gives each token's code and the
+  unique words, decoded once with a space between them and split on it.
+  In every tier a code unit is one codepoint, so equal units mean equal
+  strings: NUL and lone surrogates hash exactly by construction. Tokens
+  per doc come from the runs of \\s positions (a doc's runs of non-\\s);
+  `str.split()` and `re`'s \\s agree on every codepoint (pinned in tests),
+  so the tokens are exactly `" ".join(batch).split()`. Per-token work then
   collapses to C-level gathers over the ~10x-smaller unique-word table,
   and per-document reductions become cumsum/bincount boundary arithmetic.
 
@@ -41,7 +47,6 @@ the buffer decodes back to the same text; :meth:`TextBatch.decode`).
 from __future__ import annotations
 
 import functools
-import itertools
 import re
 from dataclasses import dataclass
 from functools import cached_property
@@ -58,39 +63,14 @@ class WordStream:
     lens: np.ndarray        # tokens per doc (int64, len n_docs)
     pos: np.ndarray         # doc index per token (len n_tokens)
     codes: np.ndarray       # unique-word code per token
-    uniq: np.ndarray        # unique words (object)
+    uniq: np.ndarray        # unique words (object), in first-seen order
+    uniq_lens: np.ndarray   # chars per unique word
+    tok_lens: np.ndarray    # chars per token
     starts: np.ndarray      # token-stream start offset per doc
-
-    @classmethod
-    def from_tokens(cls, tokens: list[str], lens: np.ndarray,
-                    hash_unsafe: bool) -> WordStream:
-        """Flat token sequence + tokens per doc -> WordStream.
-        ``hash_unsafe``: whether any token may hold a lone surrogate or NUL
-        (see :func:`_factorize`)."""
-        n = len(lens)
-        codes, uniq = _factorize(tokens, hash_unsafe)
-        starts = np.zeros(n, np.int64)
-        if n:
-            np.cumsum(lens[:-1], out=starts[1:])
-        return cls(n_docs=n, lens=lens,
-                   pos=np.repeat(np.arange(n, dtype=np.int64), lens),
-                   codes=np.asarray(codes), uniq=np.asarray(uniq),
-                   starts=starts)
 
     @cached_property
     def uniq_series(self) -> pd.Series:
         return pd.Series(self.uniq, dtype=object)
-
-    @cached_property
-    def uniq_lens(self) -> np.ndarray:
-        return np.fromiter(map(len, self.uniq), np.int64, len(self.uniq))
-
-    def seg_sum(self, per_token: np.ndarray) -> np.ndarray:
-        """Exact per-doc sums of a per-token array (cumsum boundary diff —
-        zero-length-doc safe, unlike reduceat)."""
-        cs = np.concatenate(([0], np.cumsum(per_token, dtype=np.int64)))
-        ends = self.starts + self.lens
-        return cs[ends] - cs[self.starts]
 
     def seg_max(self, per_token: np.ndarray, empty: int = 0) -> np.ndarray:
         """Per-doc max of a per-token array; `empty` for zero-token docs."""
@@ -118,9 +98,10 @@ class WordStream:
 
 def _factorize(values: list[str],
                hash_unsafe: bool) -> tuple[np.ndarray, np.ndarray]:
-    """pd.factorize of a list of str -> (codes, uniques). pandas' string
-    hash table can conflate strings that hold lone surrogates, and reads
-    strings as NUL-terminated (so "\\x00" and "\\x00the" collide); when
+    """pd.factorize of the lines of a batch (:attr:`TextBatch.lines`; the
+    token stream hashes code units instead) -> (codes, uniques). pandas'
+    string hash table can conflate strings that hold lone surrogates, and
+    reads strings as NUL-terminated (so "\\x00" and "\\x00a" collide); when
     ``hash_unsafe`` is set their surrogatepass UTF-8 bytes are factorized
     instead (a rare per-value path)."""
     flat = np.array(values, dtype=object)
@@ -146,12 +127,10 @@ def _distinct_per_doc(pos: np.ndarray, codes: np.ndarray, n_uniq: int,
 
 
 def build(words: pd.Series) -> WordStream:
-    """words: Series[list[str]] (one entry per doc) -> WordStream."""
-    lens = words.str.len().fillna(0).astype(np.int64).to_numpy()
-    tokens = list(itertools.chain.from_iterable(words.dropna()))
-    # the tokens' own buffer tells whether factorize must hash bytes
-    batch = TextBatch(pd.Series(["".join(tokens)], dtype=object))
-    return WordStream.from_tokens(tokens, lens, batch.hash_unsafe)
+    """words: Series[list[str]] (one entry per doc, each a list of
+    whitespace-free, non-empty tokens such as `str.split()` gives) ->
+    WordStream: the stream of the batch of the docs they spell."""
+    return TextBatch(words.map(" ".join, na_action="ignore")).stream
 
 
 DIGITS = "0123456789"
@@ -303,8 +282,9 @@ class TextBatch:
 
     @cached_property
     def hash_unsafe(self) -> bool:
-        """Whether any token or line may hold a lone surrogate or NUL (see
-        :func:`_factorize`); only batches that factorize pay the NUL scan."""
+        """Whether any line may hold a lone surrogate or NUL (see
+        :func:`_factorize`); only batches with a multi-line doc pay the NUL
+        scan."""
         return self.surrogates or bool((self.buf == 0).any())
 
     def decode(self, units: np.ndarray) -> str:
@@ -377,14 +357,48 @@ class TextBatch:
         # a doc's tokens are its runs of non-\s: one more than its runs of
         # \s, less one per edge that is \s
         ne = self._nonempty
-        cls = self.cls
+        cls, at, offs = self.cls, self.ws_at, self.offs
         lens = np.zeros(self.n_docs, np.int64)
-        lens[ne] = (self.count(self.ws_at[~self.ws_cont])[ne] + 1
-                    - (cls[self.offs[:-1][ne]] & WS)
-                    - (cls[self.offs[1:][ne] - 1] & WS))
-        tokens = " ".join(self.vals).split()
-        assert len(tokens) == int(lens.sum())
-        return WordStream.from_tokens(tokens, lens, self.hash_unsafe)
+        lens[ne] = (self.count(at[~self.ws_cont])[ne] + 1
+                    - (cls[offs[:-1][ne]] & WS) - (cls[offs[1:][ne] - 1] & WS))
+        # the tokens, back to back: the buffer less its \s units. Each \s
+        # unit and each doc edge cuts it, at its position less the \s units
+        # before it; a token is a nonzero gap between sorted cut points
+        units = np.delete(self.buf, at)
+        cuts = np.concatenate((at - np.arange(at.size),
+                               offs - np.searchsorted(at, offs)))
+        gaps = np.diff(np.sort(cuts, kind="stable"))
+        tok_lens = gaps[gaps > 0]
+        n_docs, n_tok = self.n_docs, tok_lens.size
+        assert n_tok == int(lens.sum())
+        starts = np.zeros(n_docs, np.int64)
+        if n_docs:
+            np.cumsum(lens[:-1], out=starts[1:])
+        pos = np.repeat(np.arange(n_docs, dtype=np.int64), lens)
+        if not n_tok:
+            return WordStream(n_docs, lens, pos, np.zeros(0, np.int64),
+                              np.zeros(0, object), np.zeros(0, np.int64),
+                              tok_lens, starts)
+        # ONE hash pass over the tokens' code units, each token one value
+        size = units.dtype.itemsize
+        tok_offs = np.zeros(n_tok + 1, np.int64)
+        np.cumsum(tok_lens * size, out=tok_offs[1:])
+        enc = pc.dictionary_encode(pa.LargeBinaryArray.from_buffers(
+            pa.large_binary(), n_tok,
+            [None, pa.py_buffer(tok_offs), pa.py_buffer(units)]))
+        # the unique words' units, back to back: decoded once with a space
+        # (never inside a token) between words, then split on it
+        words = enc.dictionary
+        n_uniq = len(words)
+        o = np.frombuffer(words.buffers()[1], np.int64, n_uniq + 1,
+                          words.offset * 8) // size
+        data = np.frombuffer(words.buffers()[2], units.dtype, o[-1] - o[0],
+                             o[0] * size)
+        uniq = np.array(self.decode(np.insert(data, o[1:-1] - o[0], 0x20))
+                        .split(" "), object)
+        return WordStream(n_docs, lens, pos,
+                          enc.indices.to_numpy().astype(np.int64), uniq,
+                          np.diff(o), tok_lens, starts)
 
     @cached_property
     def lines(self) -> LineStats:

@@ -132,6 +132,13 @@ def _check_batch(texts: pd.Series) -> None:
         lang = L.detect(texts, None, stream, chars)
         assert list(zip(lang["lang_detected"], lang["lang_hits"],
                         lang["n_words"])) == ref_detect(texts), path
+    # the token stream hashed from the buffer is str.split()'s
+    stream = batch.stream
+    tokens = " ".join(t).split()
+    assert list(stream.uniq[stream.codes]) == tokens
+    assert len(set(stream.uniq)) == len(stream.uniq)
+    assert list(stream.uniq_lens) == list(map(len, stream.uniq))
+    assert list(stream.tok_lens) == list(map(len, tokens))
     cs = batch.chars
     assert list(cs.nonspace) == [len(re.findall(r"\S", d)) for d in t]
     assert list(cs.cjk) == [len(re.findall(r"[一-鿿]", d)) for d in t]
@@ -150,6 +157,13 @@ def test_batch_stats_match_per_doc_reference(docs):
 
 def test_batch_edge_cases():
     for docs in ([], [None], ["", None, ""], ["\n", "\n\n\n", ""],
+                 # whitespace-only docs, in each buffer tier
+                 ["  ", "\t\n ", ""], ["\xa0", "\u3000 \u2028"],
+                 ["\u3000", "\U0001f389", " \x85 "],
+                 # one tier each: uint8, uint16, uint32
+                 ["the cat  sat", "cat\tthe", "a b a"],
+                 ["é naïve é", "\u5929 \u5730 \u5929", "naïve"],
+                 ["\U0001f389 x \U0001f389", "x\U00020000 x"],
                  ["a\nb\na\n", "x x x", "  lead", "trail  "],
                  ["".join(_ODD) + " the cat"] * 3,
                  ["line\n" * 3 + "w" * 70, "\U0001f389 " * 30],
@@ -158,6 +172,21 @@ def test_batch_edge_cases():
                  # ...and reads strings only up to a NUL
                  ["\x00", "\x00the", "a\x00b a\x00c", "x\n\x00\n\x00y"]):
         _check_batch(_series(docs))
+
+
+def test_token_stream_hashes_code_units(monkeypatch):
+    """The token stream is hashed from the buffer's code units, not from
+    Python strings: TextBatch.stream never calls _factorize, the string
+    hasher that only the line stats still use."""
+    calls = []
+    factorize = W._factorize
+    monkeypatch.setattr(W, "_factorize",
+                        lambda *args: calls.append(args) or factorize(*args))
+    batch = W.TextBatch(pd.Series(["the cat\nthe cat", "a\x00b \ud800"]))
+    assert list(batch.stream.uniq) == ["the", "cat", "a\x00b", "\ud800"]
+    assert calls == []
+    assert list(batch.lines.n_dup_lines) == [1, 0]
+    assert len(calls) == 1
 
 
 def test_whitespace_lut_agrees_with_str_split_on_every_codepoint():
@@ -404,13 +433,16 @@ def test_scrub_gates_are_sound(docs):
 
 def test_scrub_gates_tightened_shapes():
     """Digits alone no longer open the phone / credit-card / ssn gates:
-    each needs the shape its pattern must contain."""
+    each needs the shape its pattern must contain, which for credit-card
+    and ssn is the pattern's whole fixed shape, so a near-miss is not
+    gated."""
     texts = pd.Series(["year 2024 and 555 items", "a-b 12-3 x",
                        "call 555 555 0142", "card 4111 1111 x",
+                       "card 4111-1111 1111-1111", "ssn 123-45 x",
                        "ssn 123-45-6789", "ipv4 1.2", "mail a@b"])
     g = S.gated_docs(W.TextBatch(texts))
     assert g["phone"].tolist() == [2]
-    assert g["credit_card"].tolist() == [3]
-    assert g["ssn"].tolist() == [4]
-    assert g["ipv4"].tolist() == [5]
-    assert g["email"].tolist() == [6]
+    assert g["credit_card"].tolist() == [4]
+    assert g["ssn"].tolist() == [6]
+    assert g["ipv4"].tolist() == [7]
+    assert g["email"].tolist() == [8]

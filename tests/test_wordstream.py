@@ -49,11 +49,12 @@ def test_word_stream_stats_match_per_doc_reference():
         lens = [len(w) for w in ws]
         ref.append((len(ws), sum(lens), len(set(ws)), max(lens, default=0)))
     ref = np.array(ref)
-    tok_lens = st.uniq_lens[st.codes] if st.pos.size else np.zeros(0, np.int64)
+    assert (st.uniq_lens[st.codes] == st.tok_lens).all()
     assert (st.lens == ref[:, 0]).all()
-    assert (st.seg_sum(tok_lens) == ref[:, 1]).all()
+    assert [st.tok_lens[a:a + n].sum() for a, n in zip(st.starts, st.lens)] \
+        == list(ref[:, 1])
     assert (st.distinct_per_doc() == ref[:, 2]).all()
-    assert (st.seg_max(tok_lens) == ref[:, 3]).all()
+    assert (st.seg_max(st.tok_lens) == ref[:, 3]).all()
 
 
 def test_count_where_unique_matches_membership():
@@ -90,13 +91,12 @@ try:
         stream == the naive per-document fold, for arbitrary token lists."""
         words = pd.Series(wordlists, dtype=object)
         st = W.build(words)
-        tok_lens = (st.uniq_lens[st.codes] if st.pos.size
-                    else np.zeros(0, np.int64))
+        assert (st.uniq_lens[st.codes] == st.tok_lens).all()
         for i, ws in enumerate(wordlists):
             lens = [len(w) for w in ws]
             assert st.lens[i] == len(ws)
-            assert st.seg_sum(tok_lens)[i] == sum(lens)
+            assert list(st.tok_lens[st.starts[i]:][:len(ws)]) == lens
             assert st.distinct_per_doc()[i] == len(set(ws))
-            assert st.seg_max(tok_lens)[i] == max(lens, default=0)
+            assert st.seg_max(st.tok_lens)[i] == max(lens, default=0)
 except ImportError:  # pragma: no cover - hypothesis ships in the container
     pass
