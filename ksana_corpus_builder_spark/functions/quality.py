@@ -69,7 +69,7 @@ def word_stats(texts: pd.Series, words: pd.Series | None = None,
     # are boundary cumsum/bincount — no per-document Python loop. Tokens
     # are the maximal runs of non-\s, so their lengths sum to the doc's
     # non-\s count. Line stats come from the same buffer (newline counts +
-    # one factorize of lines).
+    # one Arrow hash of the runs between newlines, as for the tokens).
     sw_mask = (stream.uniq_series.isin(STOPWORDS).to_numpy()
                if len(stream.uniq) else np.zeros(0, bool))
     return pd.DataFrame({

@@ -101,8 +101,7 @@ def _collapse_ws(texts: pd.Series) -> TextBatch:
     if units.dtype == np.uint16 and units.max(initial=0) < 0x80:
         units = units.astype(np.uint8)  # its only wide chars were stripped
     return TextBatch.from_units(
-        units, batch.surrogates, batch.offs - np.searchsorted(gone, batch.offs),
-        texts.index)
+        units, batch.offs - np.searchsorted(gone, batch.offs), texts.index)
 
 
 # --- configurable handler registry (reference setHandlers, U1/U4) ---------

@@ -32,8 +32,10 @@ From it, lazily and at most once each:
   and per-document reductions become cumsum/bincount boundary arithmetic.
 
 - :class:`LineStats` — n_lines / n_dup_lines / max_line_len from the
-  newline count plus ONE `"\\n".join(...).split("\\n")` + factorize over
-  the docs that have a newline at all.
+  runs between LF units (empty runs included, so the lines are exactly
+  `str.split("\\n")`'s), hashed the way the tokens are: the LF units are
+  deleted and ONE Arrow `dictionary_encode` of the runs gives each line's
+  code. A batch with no LF skips it.
 
 - the digit-run and anchor positions the scrub kernel's gates look around
   (functions/scrub.py), and the units perplexity scores.
@@ -42,6 +44,8 @@ TextBatch is the only place a batch of text becomes a code-unit buffer:
 the narrowest dtype that holds its codepoints (uint8 ascii, uint16 BMP,
 else uint32 with `surrogatepass`, so a lone surrogate is one code unit and
 the buffer decodes back to the same text; :meth:`TextBatch.decode`).
+Tokens and lines are hashed from its units by one helper,
+:func:`_dictionary`; no Python string is made per token or per line.
 """
 
 from __future__ import annotations
@@ -94,26 +98,6 @@ class WordStream:
         """Per-doc count of distinct words."""
         return _distinct_per_doc(self.pos, self.codes, len(self.uniq),
                                  self.n_docs)
-
-
-def _factorize(values: list[str],
-               hash_unsafe: bool) -> tuple[np.ndarray, np.ndarray]:
-    """pd.factorize of the lines of a batch (:attr:`TextBatch.lines`; the
-    token stream hashes code units instead) -> (codes, uniques). pandas'
-    string hash table can conflate strings that hold lone surrogates, and
-    reads strings as NUL-terminated (so "\\x00" and "\\x00a" collide); when
-    ``hash_unsafe`` is set their surrogatepass UTF-8 bytes are factorized
-    instead (a rare per-value path)."""
-    flat = np.array(values, dtype=object)
-    if not flat.size:
-        return np.zeros(0, np.int64), np.zeros(0, object)
-    if not hash_unsafe:
-        codes, uniq = pd.factorize(flat)
-        return codes, np.asarray(uniq)
-    codes, _ = pd.factorize(np.array(
-        [v.encode("utf-8", "surrogatepass") for v in values],  # row-loop-ok: lone surrogates only
-        dtype=object))
-    return codes, flat[np.unique(codes, return_index=True)[1]]
 
 
 def _distinct_per_doc(pos: np.ndarray, codes: np.ndarray, n_uniq: int,
@@ -206,26 +190,53 @@ class LineStats:
     max_line_len: np.ndarray
 
 
-def _encode(joined: str) -> tuple[np.ndarray, bool]:
-    """str -> (narrowest code-unit buffer, whether it holds a lone
-    surrogate). ascii -> uint8; BMP text that encodes strictly -> uint16
-    (astral chars show as a surrogate-pair byte-length mismatch); anything
-    else -> uint32 with surrogatepass. In every tier code units EQUAL
-    codepoints, so masks and LUT gathers are dtype-agnostic while narrower
+def _encode(joined: str) -> np.ndarray:
+    """str -> its narrowest code-unit buffer. ascii -> uint8; BMP text that
+    encodes strictly -> uint16 (astral chars show as a surrogate-pair
+    byte-length mismatch); anything else, a lone surrogate included ->
+    uint32 with surrogatepass. In every tier code units EQUAL codepoints, so
+    masks, LUT gathers and hashes of units are dtype-agnostic while narrower
     buffers cut memory-bus traffic 4x/2x. Lone surrogates must not stay in
     uint16: an adjacent high+low pair would decode back as ONE astral char."""
     if joined.isascii():
-        return np.frombuffer(joined.encode("ascii"), np.uint8), False
+        return np.frombuffer(joined.encode("ascii"), np.uint8)
     try:
         b = joined.encode("utf-16-le")
     except UnicodeEncodeError:  # a lone surrogate
-        surrogates = True
+        pass
     else:
         if len(b) == 2 * len(joined):
-            return np.frombuffer(b, np.uint16), False
-        surrogates = False
-    return (np.frombuffer(joined.encode("utf-32-le", "surrogatepass"),
-                          np.uint32), surrogates)
+            return np.frombuffer(b, np.uint16)
+    return np.frombuffer(joined.encode("utf-32-le", "surrogatepass"),
+                         np.uint32)
+
+
+def _runs(buf: np.ndarray, cut_at: np.ndarray,
+          offs: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """-> (``buf`` less the units at the sorted positions ``cut_at``, the
+    length of every run between those units and the doc edges ``offs``, in
+    order, empty runs included: one more per doc than its cut units). Each
+    cut unit and each doc edge cuts the compacted buffer at its position
+    less the cut units before it; a run is the gap between sorted cut
+    points (ties give the same gaps whichever side they sort on)."""
+    cuts = np.concatenate((cut_at - np.arange(cut_at.size),
+                           offs - np.searchsorted(cut_at, offs)))
+    return np.delete(buf, cut_at), np.diff(np.sort(cuts, kind="stable"))
+
+
+def _dictionary(units: np.ndarray,
+                lens: np.ndarray) -> tuple[np.ndarray, pa.Array]:
+    """ONE Arrow hash pass over the runs of ``units`` of lengths ``lens``
+    (back to back), each run one large-binary value -> (code per run, the
+    distinct runs in first-seen order). Equal units are equal strings in
+    every tier, so NUL and lone surrogates hash exactly."""
+    size = units.dtype.itemsize
+    offs = np.zeros(lens.size + 1, np.int64)
+    np.cumsum(lens * size, out=offs[1:])
+    enc = pc.dictionary_encode(pa.LargeBinaryArray.from_buffers(
+        pa.large_binary(), lens.size,
+        [None, pa.py_buffer(offs), pa.py_buffer(units)]))
+    return enc.indices.to_numpy().astype(np.int64), enc.dictionary
 
 
 _CODECS = {1: "ascii", 2: "utf-16-le", 4: "utf-32-le"}  # by unit itemsize
@@ -247,21 +258,21 @@ class TextBatch:
         offs = np.zeros(len(vals) + 1, np.int64)
         np.cumsum(np.fromiter(map(len, vals), np.int64, len(vals)),
                   out=offs[1:])
-        self._init(*_encode("".join(vals)), offs, texts.index)
+        self._init(_encode("".join(vals)), offs, texts.index)
         self.vals = vals
 
     @classmethod
-    def from_units(cls, buf: np.ndarray, surrogates: bool, offs: np.ndarray,
+    def from_units(cls, buf: np.ndarray, offs: np.ndarray,
                    index: pd.Index) -> TextBatch:
-        """The batch over ``buf`` (in its narrowest tier; ``surrogates``:
-        whether it holds a lone surrogate) cut at ``offs``."""
+        """The batch over ``buf`` (in the narrowest tier that holds its
+        units, see :func:`_encode`) cut at ``offs``."""
         batch = cls.__new__(cls)
-        batch._init(buf, surrogates, offs, index)
+        batch._init(buf, offs, index)
         return batch
 
-    def _init(self, buf: np.ndarray, surrogates: bool, offs: np.ndarray,
+    def _init(self, buf: np.ndarray, offs: np.ndarray,
               index: pd.Index) -> None:
-        self.buf, self.surrogates, self.offs = buf, surrogates, offs
+        self.buf, self.offs = buf, offs
         self.index = index
         self.n_docs = len(offs) - 1
         self.lens = np.diff(offs)
@@ -279,13 +290,6 @@ class TextBatch:
     @property
     def texts(self) -> pd.Series:
         return pd.Series(self.vals, index=self.index, dtype=object)
-
-    @cached_property
-    def hash_unsafe(self) -> bool:
-        """Whether any line may hold a lone surrogate or NUL (see
-        :func:`_factorize`); only batches with a multi-line doc pay the NUL
-        scan."""
-        return self.surrogates or bool((self.buf == 0).any())
 
     def decode(self, units: np.ndarray) -> str:
         """Code units of this batch's dtype (e.g. a masked copy of ``buf``)
@@ -361,14 +365,9 @@ class TextBatch:
         lens = np.zeros(self.n_docs, np.int64)
         lens[ne] = (self.count(at[~self.ws_cont])[ne] + 1
                     - (cls[offs[:-1][ne]] & WS) - (cls[offs[1:][ne] - 1] & WS))
-        # the tokens, back to back: the buffer less its \s units. Each \s
-        # unit and each doc edge cuts it, at its position less the \s units
-        # before it; a token is a nonzero gap between sorted cut points
-        units = np.delete(self.buf, at)
-        cuts = np.concatenate((at - np.arange(at.size),
-                               offs - np.searchsorted(at, offs)))
-        gaps = np.diff(np.sort(cuts, kind="stable"))
-        tok_lens = gaps[gaps > 0]
+        # the tokens, back to back: the non-empty runs between \s units
+        units, runs = _runs(self.buf, at, offs)
+        tok_lens = runs[runs > 0]
         n_docs, n_tok = self.n_docs, tok_lens.size
         assert n_tok == int(lens.sum())
         starts = np.zeros(n_docs, np.int64)
@@ -379,16 +378,10 @@ class TextBatch:
             return WordStream(n_docs, lens, pos, np.zeros(0, np.int64),
                               np.zeros(0, object), np.zeros(0, np.int64),
                               tok_lens, starts)
-        # ONE hash pass over the tokens' code units, each token one value
-        size = units.dtype.itemsize
-        tok_offs = np.zeros(n_tok + 1, np.int64)
-        np.cumsum(tok_lens * size, out=tok_offs[1:])
-        enc = pc.dictionary_encode(pa.LargeBinaryArray.from_buffers(
-            pa.large_binary(), n_tok,
-            [None, pa.py_buffer(tok_offs), pa.py_buffer(units)]))
+        codes, words = _dictionary(units, tok_lens)
         # the unique words' units, back to back: decoded once with a space
         # (never inside a token) between words, then split on it
-        words = enc.dictionary
+        size = units.dtype.itemsize
         n_uniq = len(words)
         o = np.frombuffer(words.buffers()[1], np.int64, n_uniq + 1,
                           words.offset * 8) // size
@@ -396,31 +389,27 @@ class TextBatch:
                              o[0] * size)
         uniq = np.array(self.decode(np.insert(data, o[1:-1] - o[0], 0x20))
                         .split(" "), object)
-        return WordStream(n_docs, lens, pos,
-                          enc.indices.to_numpy().astype(np.int64), uniq,
-                          np.diff(o), tok_lens, starts)
+        return WordStream(n_docs, lens, pos, codes, uniq, np.diff(o),
+                          tok_lens, starts)
 
     @cached_property
     def lines(self) -> LineStats:
         at = self.ws_at
-        n_nl = self.count(at[self.cls[at] == LF])
-        n_lines = n_nl + 1
-        n_dup = np.zeros(self.n_docs, np.int64)
-        max_len = self.lens.copy()  # a doc without '\n' is one line
-        multi = np.flatnonzero(n_nl)
-        if multi.size:
-            lines = "\n".join(self.vals[multi]).split("\n")
-            codes, uniq = _factorize(lines, self.hash_unsafe)
-            line_lens = np.fromiter(map(len, uniq), np.int64,
-                                    len(uniq))[codes]
-            per_doc = n_lines[multi]
-            starts = np.zeros(multi.size, np.int64)
-            np.cumsum(per_doc[:-1], out=starts[1:])
-            pos = np.repeat(np.arange(multi.size, dtype=np.int64), per_doc)
-            n_dup[multi] = per_doc - _distinct_per_doc(
-                pos, codes, len(uniq), multi.size)
-            max_len[multi] = np.maximum.reduceat(line_lens, starts)
-        return LineStats(n_lines, n_dup, max_len)
+        lf_at = at[self.cls[at] == LF]
+        n_lines = self.count(lf_at) + 1
+        if not lf_at.size:  # every doc is one line
+            return LineStats(n_lines, np.zeros(self.n_docs, np.int64),
+                             self.lens.copy())
+        # a doc's lines are its runs between LF units, empty ones included
+        # (str.split("\n")'s lines), hashed like the tokens
+        units, line_lens = _runs(self.buf, lf_at, self.offs)
+        codes, uniq = _dictionary(units, line_lens)
+        starts = np.zeros(self.n_docs, np.int64)
+        np.cumsum(n_lines[:-1], out=starts[1:])
+        pos = np.repeat(np.arange(self.n_docs, dtype=np.int64), n_lines)
+        return LineStats(n_lines, n_lines - _distinct_per_doc(
+            pos, codes, len(uniq), self.n_docs),
+            np.maximum.reduceat(line_lens, starts))
 
     def docs_with(self, anchors: np.ndarray, at: int,
                   shape: tuple[str, ...]) -> np.ndarray:

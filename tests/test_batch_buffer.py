@@ -170,23 +170,35 @@ def test_batch_edge_cases():
                  # pandas' string hash table conflates some of these
                  ["\U0001f389\ud800", "00\x80", "x", "\ud800", "\udfff"],
                  # ...and reads strings only up to a NUL
-                 ["\x00", "\x00the", "a\x00b a\x00c", "x\n\x00\n\x00y"]):
+                 ["\x00", "\x00the", "a\x00b a\x00c", "x\n\x00\n\x00y"],
+                 ["a\x00\na", "a\na\x00\na"],
+                 # an LF cut at a doc's last / first unit ties with the
+                 # doc-edge cut after / before it
+                 ["a\n", "b"], ["a", "\nb"], ["\n", "\n"],
+                 # newline-only docs between empty docs and None
+                 ["", "\n", None, "\n\n", "", "\n"],
+                 # one multi-line doc among single-line ones
+                 ["one", "two", "x\ny\nx\n\nz", "three", "one"],
+                 # lone-surrogate and astral lines, in the uint32 tier
+                 ["\ud800\n\ud800\n\udfff", "\U0001f389\n\U0001f389 x\n",
+                  "\ud800\udfff\n\ud800", "\n\U00020000"]):
         _check_batch(_series(docs))
 
 
-def test_token_stream_hashes_code_units(monkeypatch):
-    """The token stream is hashed from the buffer's code units, not from
-    Python strings: TextBatch.stream never calls _factorize, the string
-    hasher that only the line stats still use."""
-    calls = []
-    factorize = W._factorize
-    monkeypatch.setattr(W, "_factorize",
-                        lambda *args: calls.append(args) or factorize(*args))
-    batch = W.TextBatch(pd.Series(["the cat\nthe cat", "a\x00b \ud800"]))
-    assert list(batch.stream.uniq) == ["the", "cat", "a\x00b", "\ud800"]
-    assert calls == []
+def test_tokens_and_lines_hash_code_units(monkeypatch):
+    """Tokens and lines are hashed from the buffer's code units, not from
+    Python strings: neither reads the batch's strings, and lines equal up
+    to a NUL or a lone surrogate stay distinct."""
+    monkeypatch.setattr(W.TextBatch, "vals", property(
+        lambda self: pytest.fail("TextBatch.vals was read")))
+    docs = ["the cat\nthe cat", "a\x00b \ud800\na\x00b\na"]
+    offs = np.cumsum([0] + [len(d) for d in docs])
+    batch = W.TextBatch.from_units(W._encode("".join(docs)), offs,
+                                   pd.RangeIndex(len(docs)))
+    assert list(batch.stream.uniq) == ["the", "cat", "a\x00b", "\ud800", "a"]
+    assert list(batch.lines.n_lines) == [2, 3]
     assert list(batch.lines.n_dup_lines) == [1, 0]
-    assert len(calls) == 1
+    assert list(batch.lines.max_line_len) == [7, 5]
 
 
 def test_whitespace_lut_agrees_with_str_split_on_every_codepoint():
@@ -332,8 +344,6 @@ def _check_extract_batch(html: list) -> None:
     np.testing.assert_array_equal(got.lens, want.lens)
     assert list(got.vals) == list(want.vals) == list(text)
     assert got.texts.index.equals(h.index)
-    assert got.surrogates == want.surrogates
-    assert got.hash_unsafe == want.hash_unsafe
     # shared-buffer kernels equal the per-doc references
     assert P.perplexity_series(text, got).tolist() == [
         P._perplexity_one(t) for t in text]
